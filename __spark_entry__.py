@@ -305,13 +305,13 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs + exact 3-gram-shingle Jaccard verify.
     Oracle computes exact Jaccard over shingle-sharing pairs; LSH with
     128 hashes / 32 bands has ~1-5e-8 miss rate at j>=0.8."""
-    from docetl_spark import widen_for_udf
+    from docetl_spark import widen_scan
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # a small single-row-group parquet scan is ONE partition; widen so
     # the shingle + minhash pandas UDFs use every core (no-op when the
     # scan already has >= defaultParallelism splits)
-    shingled = widen_for_udf(docs).withColumn("_sh", text.shingles(F.col("text"), 3)).cache()
+    shingled = widen_scan(docs).withColumn("_sh", text.shingles(F.col("text"), 3)).cache()
     with_sig = shingled.withColumn("_minhash", dedup.minhash_from_shingles(F.col("_sh"), 128))
     cand = dedup.lsh_candidate_pairs(with_sig, "doc_id", "_minhash", num_hashes=128, bands=32)
     verified = dedup.jaccard_verify(
@@ -1361,7 +1361,7 @@ def rag_retrieve_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.select(F.col("lang").alias("ctext")).distinct()
     out = retrieve_context_join(
         docs, corpus, FakeBackend(),
-        text_keys=["ctext"], query_keys=["lang"], k=1, id_col="doc_id",
+        text_keys=["ctext"], query_keys=["lang"], k=1,
     )
     return out.select("doc_id", "lang", "_retrieved_context")
 
@@ -1392,7 +1392,7 @@ def rag_retrieve_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="ctext string")
     out = retrieve_context_join(
         docs, corpus, FakeBackend(),
-        text_keys=["ctext"], query_keys=["lang"], k=2, id_col="doc_id",
+        text_keys=["ctext"], query_keys=["lang"], k=2,
         method="hybrid", hybrid_vector_method="brute",
         hybrid_k_vector=1, hybrid_k_fts=3,
     )
@@ -1961,13 +1961,13 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     every (supplier nation, customer nation) pair where the nations
     differ. Two broadcast dims (supplier, nation x2) around the
     lineitem->orders->customer join chain; exact decimal revenue."""
-    from docetl_spark.session import widen_scan_for_agg
+    from docetl_spark.session import widen_scan
 
     # r12 (guide §2.2): the single-row-group local scan is one task, so
     # the whole broadcast-probe chain ran serially (16.7 s at sf1);
     # keyed widening runs the probes at session width. No-op at scale
     # (a many-split scan skips the branch).
-    li = widen_scan_for_agg(
+    li = widen_scan(
         _t(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
         ),
@@ -2001,10 +2001,10 @@ def q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10-shaped: top-20 customers by revenue lost to returned
     items (l_returnflag = 'R') with nation attribution — filter pushed
     to the lineitem scan, broadcast dims, TakeOrderedAndProject."""
-    from docetl_spark.session import widen_scan_for_agg
+    from docetl_spark.session import widen_scan
 
     # r12 (guide §2.2): same serial-probe fix as q7 — see the note there
-    li = widen_scan_for_agg(
+    li = widen_scan(
         _t(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_extendedprice", "l_discount", "l_returnflag"
         ).filter(F.col("l_returnflag") == "R"),
@@ -2191,13 +2191,13 @@ def q11_part_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     and compares in exact cross-multiplied decimal/int form
     (rev_part * n_parts * 2 > rev_total * 3), so no double fraction
     sits on the boundary."""
-    from docetl_spark.session import widen_scan_for_agg
+    from docetl_spark.session import widen_scan
 
     # r12 (guide §2.2): the single-row-group scan ran the decimal
     # partial aggregation on one core — and broadcast_scalar_join
     # references the per_part subtree twice, so twice over. Keyed
     # widening runs both at session width; no-op on many-split scans.
-    li = widen_scan_for_agg(
+    li = widen_scan(
         _t(spark, sf_dir, "lineitem").select(
             "l_partkey", "l_extendedprice", "l_discount"),
         "l_partkey",
@@ -2995,9 +2995,9 @@ def docs_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # line 314 already widened; this inline site had not — it was the
     # 7.7x sf1 ratio the r11 verdict flagged). Round-robin widening is
     # row-local and result-invariant; no-op on a many-split scan.
-    from docetl_spark.session import widen_for_udf
+    from docetl_spark.session import widen_scan
 
-    shingled = widen_for_udf(docs).select(
+    shingled = widen_scan(docs).select(
         "doc_id", shingles(F.col("text"), 3).alias("_sh")).persist()
     a = shingled.select(F.col("doc_id").alias("id_a"), F.col("_sh").alias("_sa"))
     b = shingled.select(F.col("doc_id").alias("id_b"), F.col("_sh").alias("_sb"))
@@ -4533,7 +4533,7 @@ def _order_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform never re-derives its input (the CollapseProject hazard
     doesn't apply to a post-agg column). Same pair multiset: each
     order contributes each unordered pair at most once."""
-    from docetl_spark.session import widen_scan_for_agg
+    from docetl_spark.session import widen_scan
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey") \
         .filter(F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull())
@@ -4541,7 +4541,7 @@ def _order_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serialized the partial collect_set AND the pair explosion; keyed
     # widening runs them at session width behind the same one exchange
     # the groupBy plans anyway (no-op on a many-split 100 TB scan)
-    li = widen_scan_for_agg(li, "l_orderkey")
+    li = widen_scan(li, "l_orderkey")
     sets = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("_ps"))
     return sets.select(

@@ -45,7 +45,7 @@ from .frame import SemanticFrame
 from .plans import run_pipeline, run_yaml
 from .resilience import BackendMetrics, ResilientBackend, clear_backend_state
 from .retrievers import BroadcastRetriever, RetrievalResult
-from .session import get_spark, load_tables, widen_for_udf
+from .session import get_spark, load_tables, widen_scan
 
 __all__ = [
     "Agent",
@@ -86,7 +86,7 @@ __all__ = [
     "RetrievalResult",
     "SemanticFrame",
     "get_spark",
-    "widen_for_udf",
+    "widen_scan",
     "load_tables",
     "run_pipeline",
     "run_yaml",

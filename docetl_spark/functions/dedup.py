@@ -143,11 +143,6 @@ def minhash_from_hashes(hash_col, num_hashes: int = 128, seed: int = 42) -> F.Co
     return sig(hash_col)
 
 
-def minhash_signature(col, num_hashes: int = 128, shingle_size: int = 3) -> F.Column:
-    """Convenience wrapper: shingle + hash in one pass."""
-    return minhash_from_shingles(shingles(col, shingle_size), num_hashes)
-
-
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -449,9 +444,9 @@ def minhash_dedup(
     computed with windows over the same hash partitioning as the keep
     decision, so stats cost no extra shuffle.
     """
-    from ..session import widen_for_udf
+    from ..session import widen_scan
 
-    shingled = widen_for_udf(df).withColumn("_sh", shingles(F.col(text_col), shingle_size)).cache()
+    shingled = widen_scan(df).withColumn("_sh", shingles(F.col(text_col), shingle_size)).cache()
     with_sig = shingled.withColumn("_minhash", minhash_from_shingles(F.col("_sh"), num_hashes))
     cand = lsh_candidate_pairs(with_sig, id_col, "_minhash", num_hashes=num_hashes, bands=bands)
     verified = jaccard_verify(

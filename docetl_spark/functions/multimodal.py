@@ -32,6 +32,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..session import widen_scan
+
 IMAGE_META = T.StructType(
     [
         T.StructField("width", T.IntegerType(), True),
@@ -49,14 +51,6 @@ def read_binary_dir(spark, path: str, *, glob: str | None = None) -> DataFrame:
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     return reader.load(path)
-
-
-def _widen(df: DataFrame) -> DataFrame:
-    """Media kernels are Python-bound; widen narrow scan-shaped inputs
-    (see operators.semantic.widen_for_model_stage)."""
-    from ..operators.semantic import widen_for_model_stage
-
-    return widen_for_model_stage(df)
 
 
 def _fake_decode(content: bytes) -> dict:
@@ -160,7 +154,7 @@ def decode_image_meta(df: DataFrame, content_col: str = "content", *, fake: bool
             pdf["image_meta"] = [decode(c) for c in pdf[content_col]]
             yield pdf
 
-    return _widen(df).mapInPandas(run, schema=out_schema)
+    return widen_scan(df).mapInPandas(run, schema=out_schema)
 
 
 def image_features(df: DataFrame, content_col: str = "content", *, dim: int = 16, fake: bool = True) -> DataFrame:
@@ -190,7 +184,7 @@ def image_features(df: DataFrame, content_col: str = "content", *, dim: int = 16
             pdf["features"] = feats
             yield pdf
 
-    return _widen(df).mapInPandas(run, schema=out_schema)
+    return widen_scan(df).mapInPandas(run, schema=out_schema)
 
 
 def _ahash_features(Image, content: bytes, dim: int) -> list | None:
@@ -247,7 +241,7 @@ def frame_sample(df: DataFrame, content_col: str = "content", *, every_n: int = 
                     rows.append({**rec, "frame_index": idx, "frame": frame})
             yield pd.DataFrame(rows, columns=out_schema.fieldNames())
 
-    return _widen(df).mapInPandas(run, schema=out_schema)
+    return widen_scan(df).mapInPandas(run, schema=out_schema)
 
 
 def _ffmpeg_sample_frames(ffmpeg: str, content: bytes, every_n: int) -> list[tuple[int, bytes]]:

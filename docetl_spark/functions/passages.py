@@ -83,10 +83,10 @@ def passage_chunks(df: DataFrame, text_col: str, *, id_col: str, chunk_tokens: i
     def ch(s: pd.Series) -> pd.Series:
         return s.map(lambda t: passage_chunks_py(t, chunk_tokens))
 
-    from ..session import widen_for_udf
+    from ..session import widen_scan
 
     return (
-        widen_for_udf(df)
+        widen_scan(df)
         .select(id_col, F.posexplode(ch(F.col(text_col))).alias("pos", "chunk"))
         .withColumn("pos", F.col("pos").cast("long"))
     )
@@ -161,7 +161,7 @@ def substring_windows(
     k = int(min_tokens)
     if k < 1:
         raise ValueError(f"min_tokens must be >= 1, got {min_tokens}")
-    from ..session import widen_for_udf
+    from ..session import widen_scan
 
     # alias the text column to a fixed internal name BEFORE the SQL
     # interpolation: a column name needing backticks (space, hyphen,
@@ -177,9 +177,9 @@ def substring_windows(
     # widen: the O(tokens*k) hash work otherwise runs on however few
     # partitions the scan yields (ONE for a small parquet — measured
     # 0.74s single-core vs ~0.1s wide at sf0.1); a real multi-split
-    # scan skips the repartition (widen_for_udf contract)
+    # scan skips the repartition (widen_scan contract)
     return (
-        widen_for_udf(df.select(id_col, F.col(text_col).alias("_txt")))
+        widen_scan(df.select(id_col, F.col(text_col).alias("_txt")))
         .select(id_col, tk.alias("_tk"))
         .select(id_col, F.posexplode(win).alias("pos", "wh"))
     )
@@ -241,12 +241,12 @@ def substring_dedup(
         .groupBy(id_col)
         .agg(F.collect_set("cpos").alias("_cov"))
     )
-    from ..session import widen_for_udf
+    from ..session import widen_scan
 
     # same fixed-alias guard as substring_windows: never interpolate a
     # user column name into the tokenize SQL
     tk = F.expr(_TOKENIZE_SQL.format(c="_txt"))
-    base = widen_for_udf(df.select(id_col, F.col(text_col).alias("_txt"))).select(
+    base = widen_scan(df.select(id_col, F.col(text_col).alias("_txt"))).select(
         id_col, tk.alias("_tk")
     )
     n_tokens = F.size("_tk").cast("long")
@@ -307,9 +307,9 @@ def sampled_gram_fps(
     def fps(s: pd.Series) -> pd.Series:
         return s.map(lambda t: sampled_gram_fps_py(t, k, prefixes))
 
-    from ..session import widen_for_udf
+    from ..session import widen_scan
 
-    return widen_for_udf(df).select(id_col, F.explode(fps(F.col(text_col))).alias("fp"))
+    return widen_scan(df).select(id_col, F.explode(fps(F.col(text_col))).alias("fp"))
 
 
 def _fp_pairs(

@@ -1085,7 +1085,7 @@ def basket_pairs(
                 "support_bp", "conf_ab_bp", "conf_ba_bp", "lift_micro", "_bp_nb"}
     if item_col in reserved or basket_col in reserved:
         raise ValueError(f"basket_pairs reserves column names {sorted(reserved)}")
-    from ..session import widen_scan_for_agg
+    from ..session import widen_scan
 
     base = df.filter(
         F.col(basket_col).isNotNull() & F.col(item_col).isNotNull()
@@ -1095,7 +1095,7 @@ def basket_pairs(
     # serialized the partial collect_set; keyed widening runs it at
     # session width behind the same exchange the groupBy plans anyway
     # (no-op on a many-split scan at scale) — the graph edge-build fix
-    base = widen_scan_for_agg(base, "_bk")
+    base = widen_scan(base, "_bk")
     sets = (
         base.groupBy("_bk")
         .agg(F.sort_array(F.collect_set("_it")).alias("_is"))

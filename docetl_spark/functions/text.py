@@ -454,7 +454,7 @@ def ngram_stats(df, text_col: str, *, id_col: str, n: int = 2, top_n: int | None
     term_stats. ``top_n`` bounds output via TakeOrderedAndProject."""
     if n < 1:
         raise ValueError("n must be >= 1")
-    from ..session import widen_for_udf
+    from ..session import widen_scan
 
     tk = tokens(F.trim(F.lower(F.col(text_col))))
     grams = F.expr(
@@ -464,7 +464,7 @@ def ngram_stats(df, text_col: str, *, id_col: str, n: int = 2, top_n: int | None
         f"ELSE array() END"
     )
     per_doc = (
-        widen_for_udf(df.select(F.col(id_col), F.col(text_col)))
+        widen_scan(df.select(F.col(id_col), F.col(text_col)))
         .select(id_col, tk.alias("_tk"))
         .select(id_col, F.explode(grams).alias("gram"))
         .groupBy(id_col, "gram")
@@ -710,7 +710,7 @@ def ngram_novelty(df, text_col: str, *, id_col: str, n: int = 3):
     """
     if n < 1:
         raise ValueError("n must be >= 1")
-    from ..session import widen_for_udf
+    from ..session import widen_scan
 
     tk = tokens(F.trim(F.lower(F.col(text_col))))
     grams = F.expr(
@@ -728,7 +728,7 @@ def ngram_novelty(df, text_col: str, *, id_col: str, n: int = 3):
     # Evictable storage, release handle attached (the theil_sen idiom);
     # tokenization now runs ONCE per row at any scale.
     base = (
-        widen_for_udf(df.select(F.col(id_col), F.col(text_col)))
+        widen_scan(df.select(F.col(id_col), F.col(text_col)))
         .select(id_col, tk.alias("_tk"))
         .select(id_col, grams.alias("_ga"))
         .persist()

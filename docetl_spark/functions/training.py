@@ -66,10 +66,10 @@ def _gram_keys_udf(n: int, lowercase: bool):
 
 
 def _bench_gram_keys(benchmark: DataFrame, *, bench_text: str, n: int, lowercase: bool) -> DataFrame:
-    from ..operators.semantic import widen_for_model_stage
+    from ..session import widen_scan
 
     return (
-        widen_for_model_stage(benchmark)
+        widen_scan(benchmark)
         .select(F.explode(_gram_keys_udf(n, lowercase)(F.col(bench_text).cast("string"))).alias("_g"))
         .distinct()
     )
@@ -163,10 +163,10 @@ def ngram_overlap(
     Spark and DuckDB, keeping the operation oracle-checkable; xxhash64
     would be cheaper but is Spark-only)."""
 
-    from ..operators.semantic import widen_for_model_stage
+    from ..session import widen_scan
 
     bench_keys = _bench_gram_keys(benchmark, bench_text=bench_text, n=n, lowercase=lowercase)
-    doc_grams = widen_for_model_stage(corpus).select(
+    doc_grams = widen_scan(corpus).select(
         F.col(corpus_id),
         F.explode_outer(_gram_keys_udf(n, lowercase)(F.col(corpus_text).cast("string"))).alias("_g"),
     )

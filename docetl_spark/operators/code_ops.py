@@ -65,9 +65,9 @@ def code_map(
                 out[k] = [r.get(k) for r in results]
             yield out[out_names]
 
-    from .semantic import widen_for_model_stage
+    from ..session import widen_scan
 
-    return widen_for_model_stage(df).mapInPandas(run, schema=out_schema)
+    return widen_scan(df).mapInPandas(run, schema=out_schema)
 
 
 def code_filter(
@@ -90,9 +90,9 @@ def code_filter(
             mask = pdf.apply(lambda r: bool(predicate(r.to_dict())), axis=1) if len(pdf) else []
             yield pdf[mask] if len(pdf) else pdf
 
-    from .semantic import widen_for_model_stage
+    from ..session import widen_scan
 
-    out = widen_for_model_stage(df).mapInPandas(run, schema=schema).select(*names)
+    out = widen_scan(df).mapInPandas(run, schema=schema).select(*names)
     return out.limit(limit) if limit is not None else out
 
 

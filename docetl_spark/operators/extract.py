@@ -97,6 +97,6 @@ def extract(
                     out_rows.append({c: new.get(c) for c in names})
             yield pd.DataFrame(out_rows, columns=names)
 
-    from .semantic import widen_for_model_stage
+    from ..session import widen_scan
 
-    return widen_for_model_stage(df).mapInPandas(run, schema=out_schema)
+    return widen_scan(df).mapInPandas(run, schema=out_schema)

@@ -24,8 +24,9 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..backend import ModelBackend
 from ..functions.similarity import banded_candidate_pairs_two_sided
+from ..session import widen_scan
 from .resolve import embed_column
-from .semantic import render_prompt, widen_for_model_stage
+from .semantic import render_prompt
 
 
 def link_resolve(
@@ -87,7 +88,7 @@ def link_resolve(
 
     # one deterministic replacement per dangling link: smallest matching id
     mapping = (
-        widen_for_model_stage(cand).mapInPandas(run, schema=out_schema)
+        widen_scan(cand).mapInPandas(run, schema=out_schema)
         .filter(F.col("_is_same"))
         .groupBy("_link")
         .agg(F.min("_id").alias("_canonical"))

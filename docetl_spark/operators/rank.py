@@ -22,8 +22,9 @@ from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from ..backend import ModelBackend
 from ..operators.sample import cosine_sim
+from ..session import widen_scan
 from .resolve import embed_column
-from .semantic import render_prompt, widen_for_model_stage
+from .semantic import render_prompt
 
 
 def _likert_scores(
@@ -45,7 +46,7 @@ def _likert_scores(
             pdf[out_col] = scores
             yield pdf[names]
 
-    return widen_for_model_stage(df).mapInPandas(run, schema=out_schema)
+    return widen_scan(df).mapInPandas(run, schema=out_schema)
 
 
 def _global_row_number(df: DataFrame, order: list, rank_col: str) -> DataFrame:

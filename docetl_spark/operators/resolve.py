@@ -47,14 +47,14 @@ def embed_column(
 ) -> DataFrame:
     """Embedding column from the concatenation of ``keys`` (the
     reference's get_embeddings_for_clustering shape)."""
-    from .semantic import widen_for_model_stage
+    from ..session import widen_scan
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def embed(s: pd.Series) -> pd.Series:
         return pd.Series(backend.embed(list(s)))
 
     text = F.concat_ws(" ", *[F.col(k).cast("string") for k in keys])
-    return widen_for_model_stage(df).withColumn(out_col, embed(text))
+    return widen_scan(df).withColumn(out_col, embed(text))
 
 
 def sorted_neighborhood_pairs(

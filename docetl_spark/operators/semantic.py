@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..backend import ModelBackend
+from ..session import widen_scan
 from ..types import schema_of, validate_output_types
 
 _ALL = "_all"
@@ -108,16 +109,6 @@ def _merged_schema(df: DataFrame, output_schema: dict, drop: set[str]) -> T.Stru
         f for f in df.schema.fields if f.name not in declared.fieldNames() and f.name not in drop
     ]
     return T.StructType(fields + [f for f in declared.fields if f.name not in drop])
-
-
-def widen_for_model_stage(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Model-call stages are Python-bound: their parallelism equals the
-    input partition count. Delegates to :func:`session.widen_for_udf`
-    (the canonical scan-width guard — see its docstring for the
-    width-giving-op skip rationale)."""
-    from ..session import widen_for_udf
-
-    return widen_for_udf(df, min_partitions=min_parts)
 
 
 def run_concurrently(backend: ModelBackend, fn, items: list) -> list:
@@ -490,7 +481,7 @@ def semantic_map(
                 out.extend(r for r in run_concurrently(backend, fn, rows) if r is not None)
             yield typed_output_frame(out, out_schema)
 
-    return widen_for_model_stage(df).mapInPandas(run, schema=out_schema)
+    return widen_scan(df).mapInPandas(run, schema=out_schema)
 
 
 def semantic_parallel_map(
@@ -524,7 +515,7 @@ def semantic_parallel_map(
                 ))
             yield typed_output_frame(out, out_schema)
 
-    return widen_for_model_stage(df).mapInPandas(run, schema=out_schema)
+    return widen_scan(df).mapInPandas(run, schema=out_schema)
 
 
 def semantic_filter(
@@ -621,7 +612,7 @@ def semantic_filter(
             keep = run_concurrently(backend, one, pdf.to_dict("records"))
             yield pdf[pd.Series(keep, index=pdf.index)] if len(pdf) else pdf
 
-    out = widen_for_model_stage(df).mapInPandas(run, schema=df.schema).select(*names)
+    out = widen_scan(df).mapInPandas(run, schema=df.schema).select(*names)
     return out.limit(limit) if limit is not None else out
 
 

@@ -15,7 +15,6 @@ trusted-config execution model, same as the reference.
 from __future__ import annotations
 
 import time
-from typing import Any
 
 from pyspark.sql import SparkSession
 
@@ -36,14 +35,6 @@ def _expr_aggs(aggs: dict) -> dict:
             f"{aggs!r}"
         )
     return {name: F.expr(expr) for name, expr in aggs.items()}
-
-
-def _exec_code(source: str, entry: str):
-    ns: dict[str, Any] = {}
-    exec(source, ns)  # noqa: S102 — trusted pipeline config, reference parity
-    if entry not in ns:
-        raise ValueError(f"code op source must define {entry}()")
-    return ns[entry]
 
 
 def apply_op(sf: SemanticFrame, spec: OpSpec, datasets: dict[str, SemanticFrame]) -> SemanticFrame:

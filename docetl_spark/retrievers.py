@@ -212,7 +212,6 @@ def retrieve_context_join(
     n_probes: int = 1,
     seed: int = 42,
     out_col: str = "_retrieved_context",
-    id_col: str | None = None,
     rrf_k: int = 60,
     hybrid_k_vector: int | None = None,
     hybrid_k_fts: int | None = None,
@@ -232,8 +231,6 @@ def retrieve_context_join(
     DISTINCT query text is embedded, bucketed and ranked once no
     matter how many rows carry it; no driver-side index, no per-row
     model calls beyond the one embed pass over distinct texts.
-    ``id_col`` is accepted for backward compatibility and ignored
-    (content keying makes a caller-supplied row key unnecessary).
 
     ``method="hybrid"`` (reference retrievers/lancedb.py hybrid search
     with its default RRF reranker, distributed): the vector top-k list
@@ -254,21 +251,6 @@ def retrieve_context_join(
     from .functions import similarity
     from .operators.resolve import embed_column
 
-    if id_col is not None:
-        # r12 (ADVICE r11): keying switched from per-row ids to query
-        # CONTENT in r11 — equal results on the documented contract
-        # (unique ids), but a caller relying on per-id keying (same id,
-        # different texts sharing one context) gets different behavior.
-        # Surface it instead of ignoring silently.
-        import warnings
-
-        warnings.warn(
-            "retrieve_context_join: id_col is ignored since the r11 "
-            "content-keyed rewrite — retrieval is keyed on the query "
-            "text itself; duplicate ids no longer merge candidate sets",
-            DeprecationWarning,
-            stacklevel=2,
-        )
     if out_col in df.columns:
         df = df.drop(out_col)  # refresh case: re-retrieving over prior output
     # Retrieval is a pure function of the QUERY TEXT: embeddings, LSH
@@ -282,9 +264,7 @@ def retrieve_context_join(
     # dedup shuffle itself costs the same — it replaced the old per-row
     # key dedup, it isn't added). md5 is 128-bit for the same
     # birthday-collision posture as the corpus key below; concat_ws
-    # never returns NULL, so the key is total. ``id_col`` is accepted
-    # for API compatibility but no longer needed: duplicate ids cannot
-    # merge candidate sets when the key is the content itself.
+    # never returns NULL, so the key is total.
     qtext = F.concat_ws(" ", *[F.col(c).cast("string") for c in (query_keys or text_keys)])
     queries = df.withColumn("_rk", F.md5(qtext))
     qd = queries.select("_rk", qtext.alias("_qtext")).dropDuplicates(["_rk"])

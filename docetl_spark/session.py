@@ -5,15 +5,44 @@ re-planning + skew-join handling), Arrow enabled for the Pandas-UDF slow
 path, shuffle partitions sized to the local core count rather than the
 200 default (on a real cluster this should be ~2-3x total executor
 cores; AQE coalesces down as needed).
+
+Unconfigured, the session fits the machine it starts on: ``local[N]``
+with N the CPUs this process may run on (``os.sched_getaffinity``), and
+a driver heap of half of physical memory (``MemTotal`` in
+``/proc/meminfo``). ``$SPARK_GRAFT_CPUS`` and ``$SPARK_GRAFT_DRIVER_MEM``
+(a JVM size such as ``4g``) override either.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _default_cores() -> int:
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+def _default_driver_mem() -> str:
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"  # half, kB -> MiB
+    except OSError:
+        pass
+    return "1g"  # Spark's own default
 
 
 def get_spark(
@@ -23,20 +52,17 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _default_cores()
     builder = (
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -47,87 +73,50 @@ def get_spark(
     return spark
 
 
-def widen_for_udf(df, min_partitions: int | None = None):
-    """Repartition scan-shaped ``df`` up to the session's default
-    parallelism when the plan yields fewer partitions — and leave it
-    alone otherwise. Canonical implementation behind
-    ``operators.semantic.widen_for_model_stage`` (model-call stages) and
-    the CPU-heavy Arrow-UDF stages (shingling, MinHash permutations,
-    embedding math).
+# Plan nodes that already give a relation shuffle width. Anchored at node
+# headers (line start after the tree prefix "+- ", ":  +- ", ...): a bare
+# substring test would match user data, e.g. a literal containing "Join".
+_WIDE_PLAN = re.compile(
+    r"^[\s+:|-]*(?:Join|Aggregate|Sort|Window|Repartition|RepartitionByExpression|Exchange)\b",
+    re.MULTILINE,
+)
 
-    A 100 TB scan arrives in thousands of input splits and never takes
-    the repartition branch; a small or single-row-group parquet file
-    arrives in ONE partition (below maxPartitionBytes Spark doesn't
-    split it), which would serialize every downstream Python batch onto
-    a single core while the rest sit idle. Deliberately skipped when the
-    plan already contains a width-giving op (join/aggregate/sort/window/
-    exchange): those inputs are at least ``spark.sql.shuffle.partitions``
-    wide, the repartition would be a pointless full shuffle at scale,
-    and even inspecting ``rdd.getNumPartitions()`` on such a plan can
-    materialize AQE query stages. Row-local semantics make the
-    round-robin reshuffle result-invariant."""
+
+def widen_scan(df, *keys):
+    """Repartition a scan-shaped ``df`` to the session's default
+    parallelism when it arrives narrower, and leave it alone otherwise:
+    round-robin with no ``keys``, hash on ``keys`` when given.
+
+    Why: a small or single-row-group parquet file scans as ONE partition
+    (below ``maxPartitionBytes`` Spark does not split it). Everything
+    downstream of the scan then runs on one core: the Python batches of
+    a model-call or Arrow-UDF stage (shingling, MinHash, embedding
+    math), and the map-side partial aggregation, projection or explosion
+    before a ``groupBy``. Round-robin is result-invariant for row-local
+    stages. Hashing on the key the next aggregation groups by costs no
+    extra exchange: the ``groupBy`` reuses the partitioning and its
+    map-side work moves behind the exchange at full width. The count is
+    passed explicitly, so AQE does not coalesce the small shuffle back
+    to one task.
+
+    The decision is made from the plan without running it. Plans that
+    already contain a width-giving node (join, aggregate, sort, window,
+    repartition, exchange) are skipped before the partition probe: they
+    are at least ``spark.sql.shuffle.partitions`` wide, a repartition
+    would be a pointless full shuffle at scale, and even
+    ``rdd.getNumPartitions()`` on such a plan can materialize AQE query
+    stages. A large scan arrives in many splits and never takes the
+    branch, so its plan stays unchanged. Streams are returned as they
+    are (``.rdd`` is invalid on them; micro-batch width rules apply)."""
     if df.isStreaming:
-        return df  # .rdd is invalid on streams; micro-batch width rules apply
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism or 8
+        return df
     try:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
     except Exception:
         return df
-    # Node-header-anchored match: plan nodes print at line starts after
-    # the tree prefix ("+- ", ":  +- ", ...). A bare substring test would
-    # false-positive on user data (a column literal containing "Join")
-    # and silently skip the widening.
-    import re
-
-    if re.search(
-        r"^[\s+:|-]*(?:Join|Aggregate|Sort|Window|Repartition|RepartitionByExpression|Exchange)\b",
-        plan,
-        re.MULTILINE,
-    ):
+    if _WIDE_PLAN.search(plan):
         return df
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
-def widen_scan_for_agg(df, *keys):
-    """Hash-repartition a scan-shaped ``df`` on the grouping ``keys`` it
-    is about to be aggregated on, IF the scan arrives narrower than the
-    session's shuffle parallelism — and leave it alone otherwise.
-
-    Why (guide §2.2/§6, r12): a single-row-group parquet file scans as
-    ONE task no matter how files are split, so the map-side partial
-    aggregation (and any pre-exchange projection/explosion) of a
-    downstream groupBy runs serially on one core. Hash-repartitioning on
-    the SAME key the aggregation needs costs no extra exchange — the
-    groupBy reuses the partitioning (EnsureRequirements sees compatible
-    hashpartitioning) — and moves the aggregation work behind the
-    exchange at full width. The partition count is the session's
-    ``spark.sql.shuffle.partitions`` (scales with $SPARK_GRAFT_CPUS /
-    cluster sizing), passed explicitly so AQE does not coalesce the
-    small local shuffle back to one task (measured: collect_set edge
-    build 1.11 s -> 0.59 s at sf0.1).
-
-    A 100 TB scan arrives in thousands of splits and never takes the
-    branch — the plan is then byte-identical to the un-widened one.
-    Same no-width-op plan guard as ``widen_for_udf``: post-join/agg
-    inputs are already exchange-wide."""
-    if df.isStreaming:
-        return df
-    spark = df.sparkSession
-    target = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
-        return df
-    import re
-
-    if re.search(
-        r"^[\s+:|-]*(?:Join|Aggregate|Sort|Window|Repartition|RepartitionByExpression|Exchange)\b",
-        plan,
-        re.MULTILINE,
-    ):
-        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target, *keys)
     return df

@@ -182,7 +182,7 @@ def test_near_dup_simhash_and_retrieve_context_verbs(spark):
     rag = SemanticFrame(docs.df, backend=FakeBackend())
     corpus = spark.createDataFrame([("fox",), ("cat",)], ["ctext"])
     out = rag.retrieve_context(corpus, text_keys=["ctext"],
-                               query_keys=["text"], k=1, id_col="doc_id",
+                               query_keys=["text"], k=1,
                                method="brute")
     got = out.df.collect()
     assert len(got) == 3

@@ -4,7 +4,7 @@ Covers (a) the persist + release-handle convention on the contingency
 / text ops that now cache their multi-referenced intermediate, (b) the
 window-based doc-frequency cap in _fp_pairs (replacing the agg +
 join-back), and (c) content-keyed retrieve_context_join (retrieval is
-a pure function of the query text; id_col accepted but unused).
+a pure function of the query text).
 Result SEMANTICS of each op are pinned elsewhere (unit suites + the
 DuckDB oracle gate) — these tests pin the new mechanics.
 """
@@ -111,8 +111,8 @@ def test_fp_pairs_window_cap_matches_agg_semantics(spark):
 
 
 def test_retrieve_context_join_is_text_keyed(spark):
-    # duplicate query TEXTS retrieve identical contexts regardless of
-    # id_col, and every input row comes back exactly once
+    # duplicate query TEXTS retrieve identical contexts, and every input
+    # row comes back exactly once
     from docetl_spark.retrievers import retrieve_context_join
 
     be = FakeBackend()
@@ -127,7 +127,7 @@ def test_retrieve_context_join_is_text_keyed(spark):
     )
     out = retrieve_context_join(
         df, corpus, be, text_keys=["fact"], query_keys=["q"], k=2,
-        method="brute", id_col="rid",
+        method="brute",
     ).collect()
     assert sorted(r["rid"] for r in out) == [1, 2, 3]
     by_rid = {r["rid"]: r["_retrieved_context"] for r in out}
@@ -135,10 +135,3 @@ def test_retrieve_context_join_is_text_keyed(spark):
     # ids and distinct non-query columns
     assert by_rid[1] == by_rid[2]
     assert by_rid[3] != by_rid[1]
-
-    # id_col omitted: identical result (the key is the content itself)
-    out2 = retrieve_context_join(
-        df, corpus, be, text_keys=["fact"], query_keys=["q"], k=2,
-        method="brute",
-    ).collect()
-    assert {r["rid"]: r["_retrieved_context"] for r in out2} == by_rid

@@ -1,13 +1,11 @@
 """Round-12 optimization pins: frame-level cache-release handles, the
 bench stdout round-comparability scheme, the narrow-scan keyed widening
-helper, the Arrow literal-frame type gate, and the repo-wide persist
-hygiene convention (VERDICT r11 items #1/#10, ADVICE r11)."""
+of ``widen_scan``, the Arrow literal-frame type gate, and the repo-wide
+persist hygiene convention (VERDICT r11 items #1/#10, ADVICE r11)."""
 
 import re
 import sys
 from pathlib import Path
-
-import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
@@ -48,17 +46,15 @@ def test_frame_harvests_list_handles(spark):
     assert fr.release_caches() == 2
 
 
-def test_retrieve_context_join_attaches_handles_and_warns_on_id_col(spark):
+def test_retrieve_context_join_attaches_handles(spark):
     from docetl_spark.backend import FakeBackend
     from docetl_spark.retrievers import retrieve_context_join
 
     df = spark.createDataFrame([(1, "alpha"), (2, "beta")], "id long, lang string")
     corpus = df.select(F.col("lang").alias("t")).distinct()
-    with pytest.warns(DeprecationWarning, match="id_col is ignored"):
-        out = retrieve_context_join(
-            df, corpus, FakeBackend(), text_keys=["t"], query_keys=["lang"],
-            k=1, id_col="id",
-        )
+    out = retrieve_context_join(
+        df, corpus, FakeBackend(), text_keys=["t"], query_keys=["lang"], k=1,
+    )
     handles = out._docetl_cached_input
     assert isinstance(handles, list) and len(handles) >= 1
     out.count()
@@ -97,14 +93,14 @@ def test_bench_stdout_map_no_prev():
 
 # ---------------------------------------------------------------- widening
 def test_widen_scan_for_agg_widens_narrow_scan(spark, sf_dir):
-    from docetl_spark.session import widen_scan_for_agg
+    from docetl_spark.session import widen_scan
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_partkey")
-    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if li.rdd.getNumPartitions() >= target:
-        pytest.skip("scan already wide on this host")
-    w = widen_scan_for_agg(li, "l_orderkey")
+    target = spark.sparkContext.defaultParallelism
+    assert li.rdd.getNumPartitions() < target
+    w = widen_scan(li, "l_orderkey")
+    assert w.rdd.getNumPartitions() == target
     assert "RepartitionByExpression" in w._jdf.queryExecution().optimizedPlan().toString()
     # grouping on the same key must not add a second exchange
     agg = w.groupBy("l_orderkey").count()
@@ -113,11 +109,13 @@ def test_widen_scan_for_agg_widens_narrow_scan(spark, sf_dir):
 
 
 def test_widen_scan_for_agg_noop_on_wide_plans(spark, sf_dir):
-    from docetl_spark.session import widen_scan_for_agg
+    from docetl_spark.session import widen_scan
 
     base = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey").groupBy("l_orderkey").count()
-    assert widen_scan_for_agg(base, "l_orderkey") is base
+    assert widen_scan(base, "l_orderkey") is base
+    joined = base.join(base.select("l_orderkey"), "l_orderkey")
+    assert widen_scan(joined, "l_orderkey") is joined
 
 
 # ---------------------------------------------------------------- arrow gate

@@ -303,7 +303,7 @@ def test_retrieve_context_join_hybrid(spark, corpus):
     ])
     out = retrieve_context_join(
         docs, corpus.selectExpr("fact as ctext"), FakeBackend(),
-        text_keys=["ctext"], query_keys=["q"], k=2, id_col="id",
+        text_keys=["ctext"], query_keys=["q"], k=2,
         method="hybrid", hybrid_vector_method="brute",
     ).collect()
     by_id = {r["id"]: r["_retrieved_context"] for r in out}
@@ -324,7 +324,7 @@ def test_retrieve_context_hybrid_via_frame_and_yaml(spark, corpus):
     sf = SemanticFrame.from_df(docs, backend=FakeBackend())
     out = sf.retrieve_context(
         corpus.selectExpr("fact as ctext"), text_keys=["ctext"],
-        query_keys=["q"], k=1, id_col="id",
+        query_keys=["q"], k=1,
         method="hybrid", hybrid_vector_method="brute",
     ).collect()
     assert out[0]["_retrieved_context"].startswith(
@@ -333,7 +333,7 @@ def test_retrieve_context_hybrid_via_frame_and_yaml(spark, corpus):
 
     spec = OpSpec(type="retrieve_context", config={
         "corpus": "kb", "text_keys": ["ctext"], "query_keys": ["q"],
-        "k": 1, "id_col": "id", "method": "hybrid",
+        "k": 1, "method": "hybrid",
         "hybrid_vector_method": "brute",
     })
     kb = SemanticFrame.from_df(
