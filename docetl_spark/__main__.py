@@ -70,12 +70,7 @@ def cmd_run(args) -> int:
         from .sources.readers import write_output
 
         write_output(out.df, path)  # dispatches on extension (.json/.csv/.parquet)
-        # count the LANDED data — recounting `out` would re-execute the
-        # whole pipeline (every model call) a second time
-        written = (spark.read.json(path) if path.endswith(".json")
-                   else spark.read.option("header", "true").csv(path) if path.endswith(".csv")
-                   else spark.read.parquet(path))
-        print(f"wrote {written.count()} rows to {path}")
+        print(f"wrote {out.df.count()} rows to {path}")  # served from the result's cache
     else:
         for row in out.df.limit(args.limit).collect():
             print(json.dumps(row.asDict(recursive=True), default=str))

@@ -526,7 +526,9 @@ class Pipeline:
     def run(self, spark=None, *, backend=None, checkpointer=None):
         """Execute on Spark; returns the final step's SemanticFrame
         (reference run() returns the runner's result — here the frame IS
-        the result, lazily; ``.collect()`` / write as needed)."""
+        the result). The run is eager: every op's output is computed
+        here, and the result stays persisted until the frame's
+        ``.collect()`` or ``.release_caches()``."""
         from .plans.compiler import run_pipeline
         from .session import get_spark
 

@@ -3,8 +3,9 @@
 Reference lifecycle: /root/reference/docetl/runner.py:187-224 (config ->
 plan -> rewrite -> lower), containers.py:549-604 (physical DAG). Here
 the "physical DAG" is the DataFrame lineage itself: each step compiles
-scan -> ops -> (optional checkpoint materialization), and step outputs
-are registered as temp views for later steps (containers.py:514).
+scan -> ops, each op's output persisted and counted before the next op
+runs (and stored as a checkpoint when one is configured), and step
+outputs are registered as temp views for later steps (containers.py:514).
 
 Code ops in config form carry Python source strings which are exec'd in
 an isolated namespace (the reference execs user parser/code-op source
@@ -14,12 +15,11 @@ trusted-config execution model, same as the reference.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import SparkSession
 
 from ..backend import FakeBackend, ModelBackend
 from ..frame import SemanticFrame
+from ..progress import ProgressTracker, active_tracker, render_line
 from .ir import OpSpec, lift, lower
 from .rewrite import rewrite
 
@@ -564,41 +564,37 @@ def run_pipeline(
 
     Returns the final step's SemanticFrame; writes output if configured.
 
-    ``progress`` (False | True | callable) emits one console line per
-    executed op — ``[step] type name -> rows, wall`` — the reference
-    console/progress surface at ~1% of its size (tui/app.py, 906 LoC).
-    It MATERIALIZES each op once to count rows: every intermediate is
-    persisted (evictable MEMORY_AND_DISK) so the chain executes O(k)
-    not O(k²), and the previous intermediate is released as soon as its
-    successor is counted. Semantic ops replay from the response cache
-    on the recount path, so model spend is unchanged; the honest cost
-    of --progress is one extra action per op. True prints; a callable
-    receives each line (tests inject a list.append).
+    Each op's output is persisted (evictable MEMORY_AND_DISK) and
+    counted once before the next op runs, like the reference, whose ops
+    each return a full list. The eager jobs inside resolve, equijoin and
+    blocking then read that output instead of recomputing the model
+    stages above it, so a model call happens once per row per op. An
+    op's output is released once its successor is counted; each step's
+    output stays pinned for later steps until the run ends. Only the
+    result stays pinned after that, until the returned frame's
+    ``collect()`` / ``release_caches()``. A checkpoint hit takes the
+    same per-op path as a miss.
 
-    ``tracker`` (progress.ProgressTracker | None) records the same
-    lifecycle as structured state — the reference progress/tracker.py
-    surface: ops registered up front in pipeline order, op_start /
-    op_done with out_count and wall, pipeline_done; UIs poll
-    tracker.snapshot() (or .to_dict() for the JSON/websocket shape).
-    A tracker implies the per-op materialization too. If neither is
-    passed but progress.active_tracker() is set, that one is used.
+    ``progress`` and ``tracker`` only report. ``progress`` (False | True
+    | callable) emits ``progress.render_line`` for each op as it
+    finishes; True prints, a callable receives each line. ``tracker``
+    (progress.ProgressTracker | None) records the lifecycle as
+    structured state: ops registered up front in pipeline order,
+    op_start / op_done with out_count and wall, pipeline_done; UIs poll
+    tracker.snapshot() (or .to_dict()). Without one,
+    progress.active_tracker() is used, else a private tracker.
     """
     backend = backend or FakeBackend()
     emit = (print if progress is True else progress) if progress else None
-    if tracker is None:
-        from ..progress import active_tracker
-
-        tracker = active_tracker()
-    count_rows = emit is not None or tracker is not None
+    tracker = tracker or active_tracker() or ProgressTracker()
     ops_by_name = {o["name"]: o for o in config.get("operations", [])}
-    if tracker is not None:
-        tracker.pipeline_start([
-            (step["name"], ops_by_name[n]["name"], ops_by_name[n]["type"],
-             ops_by_name[n].get("model"))
-            for step in config["pipeline"]["steps"]
-            for n in step.get("operations", [])
-            if n in ops_by_name
-        ])
+    tracker.pipeline_start([
+        (step["name"], ops_by_name[n]["name"], ops_by_name[n]["type"],
+         ops_by_name[n].get("model"))
+        for step in config["pipeline"]["steps"]
+        for n in step.get("operations", [])
+        if n in ops_by_name
+    ])
 
     if config.get("validate", True):
         # lint before any Spark job (reference plan/analysis.py:152-160);
@@ -640,6 +636,7 @@ def run_pipeline(
     optimize_cfg = config.get("optimize")
     last: SemanticFrame | None = None
     rewrites_fired: list[str] = []
+    step_outputs = []  # persisted step outputs, kept until the last step is counted
     dataset_configs = config.get("datasets", {})
     for step in config["pipeline"]["steps"]:
         sf = datasets[step["input"]] if "input" in step else last
@@ -782,35 +779,27 @@ def run_pipeline(
                 rewrites_fired += [f"directive:{name}" for name, _ in best.applied]
         specs, fired = rewrite(specs)
         rewrites_fired += fired
-        _prev_counted = None
+        prev = None
         for spec in lower(specs):
             spec = OpSpec(spec["type"], {k: v for k, v in spec.items() if k != "type"})
-            if checkpointer is not None:
-                cached = checkpointer.advance(spec, sf)
-                if cached is not None:
-                    sf = cached
-                    continue
-            _t0 = time.perf_counter() if count_rows else 0.0
-            _op_name = str(spec.config.get("name", ""))
-            if tracker is not None:
-                tracker.op_start(_op_name, spec.type, step=step["name"])
-            sf = apply_op(sf, spec, datasets)
-            if checkpointer is not None:
-                sf = checkpointer.store(sf)
-            if count_rows:
-                sf.df.persist()
-                n_out = sf.df.count()
-                if emit is not None:
-                    emit(
-                        f"[{step['name']}] {spec.type:<13} "
-                        f"{_op_name:<24} -> "
-                        f"{n_out:>9,} rows  {time.perf_counter() - _t0:6.2f}s"
-                    )
-                if tracker is not None:
-                    tracker.op_done(_op_name, out_count=n_out)
-                if _prev_counted is not None:
-                    _prev_counted.unpersist()
-                _prev_counted = sf.df
+            name = str(spec.config.get("name", ""))
+            tracker.op_start(name, spec.type, step=step["name"])
+            cached = checkpointer.advance(spec, sf) if checkpointer is not None else None
+            if cached is not None:
+                sf = cached
+            else:
+                sf = apply_op(sf, spec, datasets)
+                if checkpointer is not None:
+                    sf = checkpointer.store(sf)
+            sf.df.persist()
+            tracker.op_done(name, out_count=sf.df.count())
+            if emit is not None:
+                emit(render_line(tracker.snapshot().get(name)))
+            if prev is not None:
+                prev.unpersist()
+            prev = sf.df
+        if prev is not None:
+            step_outputs.append(prev)
         # step boundary: register output as a named dataset (containers.py:514)
         datasets[step["name"]] = sf
         sf.df.createOrReplaceTempView(step["name"])
@@ -829,8 +818,14 @@ def run_pipeline(
             last.write_parquet(path)
     if last is None:
         raise ValueError("pipeline has no steps")
-    if tracker is not None:
-        tracker.pipeline_done()
+    tracker.pipeline_done()
+    # later steps are done with the earlier step outputs; only the
+    # result stays pinned, until last.collect() / release_caches()
+    for df in step_outputs:
+        if df is not last.df:
+            df.unpersist()
+    pinned = tuple(df for df in step_outputs if df is last.df)
+    object.__setattr__(last, "_caches", last._caches + pinned)
     object.__setattr__(last, "op_log", last.op_log + (("rewrites", {"fired": rewrites_fired}),))
     if validation_notes:
         object.__setattr__(last, "op_log", last.op_log + (("validation", tuple(validation_notes)),))

@@ -13,7 +13,9 @@ stays streamable (``RunState.to_dict``) exactly like the reference's
 websocket path.
 
 Spark note: ops here are DRIVER-side lifecycle events (an op = one
-lowered OpSpec in plans/compiler.run_pipeline). Executor-side
+lowered OpSpec in plans/compiler.run_pipeline). A tracker only reports:
+run_pipeline persists and counts every op's output whether or not one
+is watching, and keeps a private tracker when none is. Executor-side
 call/token accounting flows in through resilience.BackendMetrics — pass
 ``metrics`` to ``op_done`` and the snapshot carries tokens/calls, the
 Spark-native equivalent of the reference's per-call cost hooks

@@ -11,6 +11,7 @@ import pytest
 from docetl_spark import Checkpointer, FakeBackend, run_pipeline, run_yaml
 from docetl_spark.plans.ir import OpSpec, lift, lower
 from docetl_spark.plans.rewrite import rewrite
+from docetl_spark.progress import ProgressTracker
 
 
 # --------------------------------------------------------------- rewrites
@@ -187,9 +188,14 @@ def test_checkpointer_hit_and_invalidation(spark, tmp_path):
     cfg = make_cfg("category = 'review'")
     out1 = run_pipeline(spark, cfg, checkpointer=Checkpointer(spark, root))
     n1 = {r["category"]: r["n"] for r in out1.collect()}
-    # second run: same config -> both ops come from checkpoints
-    out2 = run_pipeline(spark, cfg, checkpointer=Checkpointer(spark, root))
+    # second run: same config -> both ops come from checkpoints, and a
+    # hit runs the same per-op tail as a miss (started, counted, done)
+    tracker = ProgressTracker()
+    out2 = run_pipeline(spark, cfg, checkpointer=Checkpointer(spark, root), tracker=tracker)
     assert {r["category"]: r["n"] for r in out2.collect()} == n1
+    ops = tracker.snapshot().ops
+    assert [(o.name, o.status) for o in ops] == [("f", "done"), ("cnt", "done")]
+    assert ops[1].out_count == len(n1) and ops[0].out_count >= ops[1].out_count
     # changed upstream config -> downstream hash changes too (no stale reuse)
     out3 = run_pipeline(spark, make_cfg("category = 'news'"), checkpointer=Checkpointer(spark, root))
     assert {r["category"]: r["n"] for r in out3.collect()} == {"news": 1}
