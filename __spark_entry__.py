@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from docetl_spark import FakeBackend, ResilientBackend, SemanticFrame
 from docetl_spark.functions import dedup, similarity, text, timeseries, training
 from docetl_spark.operators import gather as gather_op, link_resolve as link_resolve_op, sample as sample_op
+from docetl_spark.sources.readers import normalize_epoch_nanos, read_parquet, set_nanos_conf_if_needed
 
 # ---------------------------------------------------------------- helpers
 
@@ -35,6 +36,7 @@ def _epoch_s(c: str = "ts") -> F.Column:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # events.ts has shipped as parquet TIMESTAMP(NANOS) in some
         # testdata generations (Spark 4 rejects it unless read as raw
@@ -42,13 +44,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # normalize both to epoch-nanos BIGINT for integer epoch math.
         # The nanosAsLong conf is footer-sniffed and only set when the
         # file truly carries nanos — no global mutation otherwise.
-        from docetl_spark.sources.readers import (
-            normalize_epoch_nanos, set_nanos_conf_if_needed,
-        )
-
-        set_nanos_conf_if_needed(spark, f"{sf_dir}/{name}.parquet")
-        return normalize_epoch_nanos(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        set_nanos_conf_if_needed(spark, path)
+        return normalize_epoch_nanos(read_parquet(spark, path))
+    return read_parquet(spark, path)
 
 
 def _sf(spark: SparkSession, sf_dir: str, name: str, backend=None) -> SemanticFrame:
@@ -1036,7 +1034,7 @@ def stream_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = text.fingerprint(F.col("text"))
     stream = stream_ops.read_parquet_stream(spark, f"{sf_dir}/documents.parquet").withColumn("_fp", fp)
     corpus = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % 3 == 0)
         .select(fp.alias("_fp"))
     )
@@ -1459,7 +1457,7 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docetl_spark.streaming import events as stream_ops
 
     bench = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % 10 == 0)
         .select("text")
     )

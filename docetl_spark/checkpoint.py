@@ -21,6 +21,7 @@ import os
 from pyspark.sql import SparkSession
 
 from .frame import SemanticFrame
+from .sources.readers import read_parquet
 
 
 def _stable(o) -> str:
@@ -55,7 +56,7 @@ class Checkpointer:
         path = os.path.join(self.root, self._hash.hexdigest()[:24])
         if os.path.exists(os.path.join(path, "_SUCCESS")):
             self._pending_path = None
-            return SemanticFrame.from_df(self.spark.read.parquet(path), backend=sf.backend)
+            return SemanticFrame.from_df(read_parquet(self.spark, path), backend=sf.backend)
         self._pending_path = path
         return None
 
@@ -66,6 +67,6 @@ class Checkpointer:
         if not self._pending_path:
             return sf
         sf.df.write.mode("overwrite").parquet(self._pending_path)
-        out = SemanticFrame.from_df(self.spark.read.parquet(self._pending_path), backend=sf.backend)
+        out = SemanticFrame.from_df(read_parquet(self.spark, self._pending_path), backend=sf.backend)
         self._pending_path = None
         return out

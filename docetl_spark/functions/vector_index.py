@@ -35,6 +35,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..sources.readers import read_parquet
 from .similarity import ivf_topk as _ivf_topk, pq_encode, pq_topk as _pq_topk
 
 _VERSION = 1
@@ -114,11 +115,11 @@ def load_ivf_index(
     if meta.get("kind") != "ivf":
         raise ValueError(f"{path}: not an IVF index artifact ({meta.get('kind')!r})")
     rows = (
-        spark.read.parquet(os.path.join(path, "centroids.parquet"))
+        read_parquet(spark, os.path.join(path, "centroids.parquet"))
         .orderBy("list_id").collect()
     )
     cents = np.array([r["centroid"] for r in rows], dtype=np.float64)
-    df = spark.read.parquet(os.path.join(path, "assignments"))
+    df = read_parquet(spark, os.path.join(path, "assignments"))
     return df, cents, meta
 
 
@@ -139,7 +140,7 @@ def ivf_append(
         raise ValueError(f"{path}: not an IVF index artifact ({meta.get('kind')!r})")
     vc = vec_col or meta["vec_col"]
     rows = (
-        spark.read.parquet(os.path.join(path, "centroids.parquet"))
+        read_parquet(spark, os.path.join(path, "centroids.parquet"))
         .orderBy("list_id").collect()
     )
     cents = np.array([r["centroid"] for r in rows], dtype=np.float64)
@@ -228,13 +229,13 @@ def load_pq_index(
     if meta.get("kind") != "pq":
         raise ValueError(f"{path}: not a PQ index artifact ({meta.get('kind')!r})")
     rows = (
-        spark.read.parquet(os.path.join(path, "codebooks.parquet"))
+        read_parquet(spark, os.path.join(path, "codebooks.parquet"))
         .orderBy("subspace", "code").collect()
     )
     books = np.array(
         [r["centroid"] for r in rows], dtype=np.float64
     ).reshape(meta["m"], meta["k"], meta["dsub"])
-    df = spark.read.parquet(os.path.join(path, "assignments"))
+    df = read_parquet(spark, os.path.join(path, "assignments"))
     return df, books, meta
 
 

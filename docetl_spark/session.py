@@ -20,6 +20,8 @@ import re
 
 from pyspark.sql import SparkSession
 
+from .sources.readers import read_parquet
+
 
 def _default_cores() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -161,4 +163,4 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
         "documents",
         "embeddings",
     ]
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
+    return {n: read_parquet(spark, f"{sf_dir}/{n}.parquet") for n in names}

@@ -5,12 +5,29 @@ file formats JSON (list of objects), CSV, Parquet, and directory-of-files
 Spark realization: native readers (distributed scan, schema inference or
 explicit schema), ``binaryFile``/``text`` for directories, and
 ``mapInPandas`` for row-expanding parsers.
+
+``read_parquet`` is the engine's one Parquet reader. Spark infers a
+Parquet schema with a job of its own, so for a single local file it
+keeps the schema Spark inferred in a fixed-size LRU memo: a warm read
+passes that schema back and launches no job. An entry is one version of
+one file in one application: the key is the application id, the
+absolute path, ``st_size`` and ``st_mtime_ns``, and each schema in it is
+filed under the session's values of the confs that change Parquet
+inference (``_SCHEMA_CONFS``). The same entry keeps the footer that
+``set_nanos_conf_if_needed`` reads with pyarrow. Directories, globs and
+non-``file`` URIs bypass the memo and infer exactly as Spark does, so a
+partitioned dataset adds no driver-side walk.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
+from collections import OrderedDict
 from pathlib import Path
 from typing import Callable
+from urllib.parse import urlparse
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -31,8 +48,122 @@ def read_csv(spark: SparkSession, path: str, *, schema: dict | None = None) -> D
     return reader.csv(path)
 
 
+# Session confs that change the schema Spark infers from a Parquet footer.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+
+class _FileVersion:
+    """What the memo knows of one version of one local file: its pyarrow
+    footer schema, and the Spark schema per value of ``_SCHEMA_CONFS``."""
+
+    __slots__ = ("footer", "schemas")
+
+    def __init__(self):
+        self.footer = None
+        self.schemas: dict[tuple, T.StructType] = {}
+
+
+class _SchemaMemo:
+    """Fixed-size LRU of ``_FileVersion``s."""
+
+    def __init__(self, size: int):
+        self.size = size
+        self._entries: OrderedDict[tuple, _FileVersion] = OrderedDict()
+        self._lock = threading.Lock()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def entry(self, key: tuple) -> _FileVersion:
+        with self._lock:
+            found = self._entries.get(key)
+            if found is not None:
+                self._entries.move_to_end(key)
+                return found
+            found = self._entries[key] = _FileVersion()
+            if len(self._entries) > self.size:
+                self._entries.popitem(last=False)
+            return found
+
+
+_MEMO = _SchemaMemo(256)
+
+
+def _file_version(spark: SparkSession, path: str) -> _FileVersion | None:
+    """The memo entry for ``path`` when it names one local file (a plain
+    path on a ``file`` default filesystem, or a ``file:`` URI); None for
+    directories, globs, missing files and every other filesystem."""
+    if any(c in path for c in "*?[{\\"):
+        return None
+    url = urlparse(path)
+    if url.scheme == "file":
+        local = url.path
+    elif url.scheme:
+        return None
+    else:
+        default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+        if not (default_fs or "file:").startswith("file:"):
+            return None
+        local = path
+    try:
+        st = os.stat(local)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    key = (spark.sparkContext.applicationId, os.path.abspath(local), st.st_size, st.st_mtime_ns)
+    return _MEMO.entry(key)
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """``spark.read.parquet(path)``; a warm read of a single local file
+    reuses the schema Spark inferred for it and launches no job."""
+    version = _file_version(spark, path)
+    if version is None:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    schema = version.schemas.get(confs)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    version.schemas[confs] = df.schema
+    return df
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``read_parquet`` gives ``path``."""
+    return read_parquet(spark, path).schema
+
+
+def _footer(path: str):
+    """pyarrow schema of ``path``'s footer (of its first ``.parquet``
+    file when ``path`` is a directory); None when there is none or it
+    cannot be read."""
+    import pyarrow.parquet as pq
+
+    p = Path(path)
+    if p.is_dir():
+        # recursive: partitioned layouts (key=.../part-*.parquet) and
+        # nested dirs store their footers below the top level — a
+        # top-level-only glob would silently skip the sniff there
+        files = sorted(p.glob("*.parquet")) or sorted(p.rglob("*.parquet"))
+        if not files:
+            return None
+        p = files[0]
+    try:
+        return pq.read_schema(str(p))
+    except Exception:
+        # the sniff is ADVISORY: a corrupt/truncated footer (pyarrow
+        # ArrowInvalid, a ValueError) must fall through to
+        # spark.read.parquet, whose error names the real problem
+        return None
 
 
 def set_nanos_conf_if_needed(spark: SparkSession, path: str, col: str = "ts") -> None:
@@ -47,26 +178,21 @@ def set_nanos_conf_if_needed(spark: SparkSession, path: str, col: str = "ts") ->
     MICROS-generation data (the common case) this makes the read fully
     self-contained: no session conf is touched at all. Round 6 set it
     unconditionally, which is exactly the mutate-global-conf-at-read
-    pattern that made drained_df environment-sensitive."""
-    import pyarrow.parquet as pq
+    pattern that made drained_df environment-sensitive.
 
-    p = Path(path)
-    if p.is_dir():
-        # recursive: partitioned layouts (key=.../part-*.parquet) and
-        # nested dirs store their footers below the top level — a
-        # top-level-only glob would silently skip the sniff there
-        files = sorted(p.glob("*.parquet")) or sorted(p.rglob("*.parquet"))
-        if not files:
+    A single local file's footer is read once per file version: it is
+    kept in ``read_parquet``'s memo entry for that version."""
+    version = _file_version(spark, path)
+    footer = version.footer if version is not None else None
+    if footer is None:
+        footer = _footer(path)
+        if footer is None:
             return
-        p = files[0]
-    try:
-        field = pq.read_schema(str(p)).field(col)
-    except Exception:
-        # the sniff is ADVISORY: a corrupt/truncated footer (pyarrow
-        # ArrowInvalid, a ValueError) must fall through to
-        # spark.read.parquet, whose error names the real problem
+        if version is not None:
+            version.footer = footer
+    if col not in footer.names:
         return
-    if getattr(field.type, "unit", None) == "ns":
+    if getattr(footer.field(col).type, "unit", None) == "ns":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 

@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.readers import normalize_epoch_nanos, parquet_schema, set_nanos_conf_if_needed
+
 
 def read_events_stream(
     spark: SparkSession,
@@ -38,11 +40,9 @@ def read_events_stream(
     ``event_time`` for watermarks."""
     import os
 
-    from ..sources.readers import normalize_epoch_nanos, set_nanos_conf_if_needed
-
     set_nanos_conf_if_needed(spark, path_dir)
     if schema is None:
-        schema = spark.read.parquet(path_dir).schema
+        schema = parquet_schema(spark, path_dir)
     reader = spark.readStream.schema(schema)
     if os.path.isfile(path_dir):
         # the streaming file source requires a directory: watch the parent,
@@ -273,7 +273,7 @@ def read_parquet_stream(
     import os
 
     if schema is None:
-        schema = spark.read.parquet(path).schema
+        schema = parquet_schema(spark, path)
     reader = spark.readStream.schema(schema)
     if os.path.isfile(path):
         reader = reader.option("pathGlobFilter", os.path.basename(path))
