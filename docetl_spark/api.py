@@ -519,8 +519,11 @@ class Pipeline:
                     )
                 ds["data"] = rows
         if self.default_model:
+            from .plans.ir import OpSpec
+
             for op in cfg["operations"]:
-                op.setdefault("model", self.default_model)
+                if OpSpec(op["type"]).takes_model:
+                    op.setdefault("model", self.default_model)
         return cfg
 
     def run(self, spark=None, *, backend=None, checkpointer=None):

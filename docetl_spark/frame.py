@@ -223,7 +223,8 @@ class SemanticFrame:
                           output={"schema": output_schema}, **kw)
 
     # -------------------------------------------------------- shape ops
-    def split(self, split_key: str, method: str, method_kwargs: dict, **kw) -> "SemanticFrame":
+    def split(self, split_key: str, method: str, method_kwargs: dict | None = None, **kw) -> "SemanticFrame":
+        method_kwargs = method_kwargs or {}
         return self._next(shape.split(self.df, split_key, method, method_kwargs, **kw),
                           "split", split_key=split_key, method=method, method_kwargs=method_kwargs, **kw)
 
@@ -667,20 +668,24 @@ class SemanticFrame:
             "embed", keys=keys, out_col=out_col,
         )
 
-    def asof_join(self, right: "SemanticFrame | DataFrame", **kw) -> "SemanticFrame":
+    def asof_join(self, right: "SemanticFrame | DataFrame", *, on: list[str], left_ts: str,
+                  right_ts: str, right_cols: list[str], **kw) -> "SemanticFrame":
         """Nearest-timestamp join per key (union+window plan, no join
         operator) — see functions/timeseries.asof_join."""
         from .functions import timeseries as tsf
 
         rdf = right.df if isinstance(right, SemanticFrame) else right
+        kw = {"on": on, "left_ts": left_ts, "right_ts": right_ts, "right_cols": right_cols, **kw}
         return self._next(tsf.asof_join(self.df, rdf, **kw), "asof_join", **kw)
 
-    def range_join(self, intervals: "SemanticFrame | DataFrame", **kw) -> "SemanticFrame":
+    def range_join(self, intervals: "SemanticFrame | DataFrame", *, point_ts: str,
+                   start_ts: str, end_ts: str, **kw) -> "SemanticFrame":
         """Interval-containment join via time binning (equi-join plan,
         no theta join) — see functions/timeseries.range_join."""
         from .functions import timeseries as tsf
 
         idf = intervals.df if isinstance(intervals, SemanticFrame) else intervals
+        kw = {"point_ts": point_ts, "start_ts": start_ts, "end_ts": end_ts, **kw}
         return self._next(tsf.range_join(self.df, idf, **kw), "range_join", **kw)
 
     def time_rollup(self, ts_col: str, aggs: dict, **kw) -> "SemanticFrame":
@@ -693,12 +698,14 @@ class SemanticFrame:
             "time_rollup", ts_col=ts_col, _aggs=True, **kw,
         )
 
-    def hopping_rollup(self, aggs: dict, **kw) -> "SemanticFrame":
+    def hopping_rollup(self, aggs: dict, *, ts_col: str, every_ns: int, size_ns: int,
+                       **kw) -> "SemanticFrame":
         """Hopping/sliding window aggregation (exact integer-ns starts)
         — see functions/timeseries.hopping_rollup. ``aggs`` holds Column
         expressions — not YAML-serializable."""
         from .functions import timeseries as tsf
 
+        kw = {"ts_col": ts_col, "every_ns": every_ns, "size_ns": size_ns, **kw}
         return self._next(
             tsf.hopping_rollup(self.df, aggs, **kw),
             "hopping_rollup", _aggs=True, **kw,

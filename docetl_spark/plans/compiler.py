@@ -7,6 +7,11 @@ scan -> ops, each op's output persisted and counted before the next op
 runs (and stored as a checkpoint when one is configured), and step
 outputs are registered as temp views for later steps (containers.py:514).
 
+Each op runs as ``getattr(sf, verb)(**config)``: ``ir.OP_TYPES`` names
+the verb and lists what differs from "each key is the verb's parameter"
+(renamed keys, keys naming a dataset, SQL-expression aggregates, lists
+that become tuples). A key the verb does not take raises TypeError.
+
 Code ops in config form carry Python source strings which are exec'd in
 an isolated namespace (the reference execs user parser/code-op source
 from config too, dataset.py:442-453, code_operations.py) — this is a
@@ -20,7 +25,7 @@ from pyspark.sql import SparkSession
 from ..backend import FakeBackend, ModelBackend
 from ..frame import SemanticFrame
 from ..progress import ProgressTracker, active_tracker, render_line
-from .ir import OpSpec, lift, lower
+from .ir import OP_TYPES, OpSpec, lift, lower
 from .rewrite import rewrite
 
 
@@ -38,478 +43,53 @@ def _expr_aggs(aggs: dict) -> dict:
 
 
 def apply_op(sf: SemanticFrame, spec: OpSpec, datasets: dict[str, SemanticFrame]) -> SemanticFrame:
-    t, c = spec.type, dict(spec.config)
-    c.pop("name", None)
-    # planner-internal markers (directives.py flags like _keep_fraction,
-    # _chained, _shrinks_tokens) never reach the operators
-    for k in [k for k in c if k.startswith("_")]:
-        c.pop(k)
+    """Run one op as ``getattr(sf, verb)(**config)``. One pass over the
+    config, read from ``ir.OP_TYPES``, first turns dataset names into
+    frames, YAML aggregates into Columns and keys into the verb's
+    parameter names; a key the verb does not take raises TypeError."""
+    t = spec.type
+    # planner keys never reach the operators: the per-op `optimize` pin
+    # and internal markers (directives.py flags like _keep_fraction,
+    # _chained, _shrinks_tokens)
+    c = {k: v for k, v in spec.config.items() if k != "optimize" and not k.startswith("_")}
     # sample-at-op shorthand: any op config may carry `sample: N`, which
     # truncates its input (containers.py:454-455)
     n_sample = c.pop("sample", None)
     if n_sample:
         sf = sf.limit(int(n_sample))
-    if t == "limit":
-        return sf.limit(int(c["n"]))
-    # per-op backend overrides (reference per-op configs; also how the
-    # change_model directives take effect at execution time)
-    be_opts = {"model": c.get("model"), "timeout": c.get("timeout"),
-               "litellm_completion_kwargs": c.get("litellm_completion_kwargs")}
-    if t == "map" and c.get("max_retries_per_timeout") is not None:
-        be_opts["max_retries_per_timeout"] = c["max_retries_per_timeout"]
-    if t == "map":
-        return sf.map(
-            c["prompt"], c["output"]["schema"], drop_keys=c.get("drop_keys"),
-            gleaning=c.get("gleaning"), validate=c.get("validate"),
-            num_retries_on_validate_failure=c.get("num_retries_on_validate_failure", 0),
-            batch_prompt=c.get("batch_prompt"),
-            max_batch_size=c.get("max_batch_size", 16),
-            calibrate=c.get("calibrate", False),
-            skip_on_error=c.get("skip_on_error", False),
-            error_col=c.get("error_col"),
-            pdf_url_key=c.get("pdf_url_key"),
-            # precomputed-context RAG (retrieve_context step upstream):
-            # the verb accepted this all along; the YAML front dropped it
-            retrieved_context_col=c.get("retrieved_context_col"),
-            **be_opts,
-        )
-    if t == "parallel_map":
-        return sf.parallel_map(c["prompts"], c["output"]["schema"], drop_keys=c.get("drop_keys"))
-    if t == "filter":
-        return sf.filter(c["prompt"], c["output"]["schema"], cascade=c.get("cascade"), **be_opts)
-    if t == "reduce":
-        return sf.reduce(c["reduce_key"], c["prompt"], c["output"]["schema"],
-                         name=spec.config.get("name", "reduce"),
-                         sort_within_group=c.get("sort_within_group"),
-                         value_sampling=c.get("value_sampling"),
-                         fold_prompt=c.get("fold_prompt"),
-                         fold_batch_size=c.get("fold_batch_size"),
-                         merge_prompt=c.get("merge_prompt"),
-                         merge_batch_size=c.get("merge_batch_size"),
-                         associative=c.get("associative", True),
-                         num_parallel_folds=c.get("num_parallel_folds", 4),
-                         distribute_folds=c.get("distribute_folds", False),
-                         persist_intermediates=c.get("persist_intermediates", False),
-                         pass_through=c.get("pass_through", False),
-                         lineage_keys=c.get("lineage_keys"),
-                         limit=c.get("limit"), **be_opts)
-    if t == "code_map":
-        # pass the SOURCE through: the frame logs it, keeping the replayed
-        # chain YAML-exportable (round-trip)
-        return sf.code_map(c["code"], c["output"]["schema"], drop_keys=c.get("drop_keys"))
-    if t == "code_filter":
-        return sf.code_filter(c.get("predicate") or c["code"], limit=c.get("limit"))
-    if t == "code_reduce":
-        return sf.code_reduce(c["reduce_key"], c["code"], c["output"]["schema"],
-                              name=spec.config.get("name", "code_reduce"))
-    if t == "split":
-        return sf.split(c["split_key"], c["method"], c.get("method_kwargs", {}),
-                        name=spec.config.get("name", "split"), doc_id=c.get("doc_id"))
-    if t == "gather":
-        return sf.gather(c["content_key"], c["doc_id_key"], c["order_key"],
-                         peripheral_chunks=c.get("peripheral_chunks", {}))
-    if t == "unnest":
-        return sf.unnest(c["unnest_key"], keep_empty=c.get("keep_empty", False),
-                         expand_fields=c.get("expand_fields"),
-                         recursive=c.get("recursive", False), depth=c.get("depth"))
-    if t == "unnest_columns":
-        return sf.unnest_columns(c["column"])
-    if t == "add_uuid":
-        return sf.add_uuid(c.get("id_key", "uuid_id"),
-                           deterministic_from=c.get("deterministic_from"))
-    if t == "sample":
-        method = c.pop("method")
-        samples = c.pop("samples", None)
-        return sf.sample(method, samples, **c)
-    if t == "topk":
-        return sf.topk(c.pop("method"), c.pop("k"), **c)
-    if t == "rank":
-        return sf.rank(**c)
-    if t == "extract":
-        return sf.extract(c.pop("prompt"), c.pop("document_keys"), **c)
-    if t == "resolve":
-        return sf.resolve(id_col=c.pop("id_col"), comparison_prompt=c.pop("comparison_prompt"),
-                          output_schema=c.pop("output", {}).get("schema") or c.pop("output_schema"), **c)
-    if t == "cluster":
-        return sf.cluster(id_col=c.pop("id_col"), embedding_keys=c.pop("embedding_keys"), **c)
-    if t == "link_resolve":
-        return sf.link_resolve(id_key=c.pop("id_key"), link_key=c.pop("link_key"), **c)
-    if t == "equijoin":
-        right = datasets[c.pop("right")]
-        return sf.equijoin(right, comparison_prompt=c.pop("comparison_prompt"),
-                           left_keys=c.pop("left_keys"), right_keys=c.pop("right_keys"), **c)
-    # training-pipeline ops (beyond-reference surface, COVERAGE.md)
-    if t == "pack_sequences":
-        return sf.pack_sequences(budget=c.pop("budget"), **c)
-    if t == "pack_documents":
-        return sf.pack_documents(budget=c.pop("budget"), **c)
-    if t == "sample_temperature":
-        return sf.sample_temperature(c.pop("group_col"), temperature=c.pop("temperature"), **c)
-    if t == "sample_mixture":
-        return sf.sample_mixture(c.pop("group_col"), c.pop("target_weights"), **c)
-    if t == "sample_unimax":
-        return sf.sample_unimax(c.pop("group_col"), budget=c.pop("budget"), **c)
-    if t == "select_top_frac":
-        return sf.select_top_frac(c.pop("score_col"), c.pop("frac"), **c)
-    if t == "cap_per_group":
-        return sf.cap_per_group(c.pop("group_cols"), c.pop("n"), order=c.pop("order"), **c)
-    if t == "near_dup_minhash":
-        return sf.near_dup_minhash(c.pop("id_col"), c.pop("text_col"), **c)
-    if t == "near_dup_simhash":
-        return sf.near_dup_simhash(c.pop("id_col"), c.pop("text_col"), **c)
-    if t == "retrieve_context":
-        corpus = datasets[c.pop("corpus")]
-        return sf.retrieve_context(corpus, text_keys=c.pop("text_keys"), **c)
-    if t == "contamination":
-        bench = datasets[c.pop("benchmark")]
-        return sf.contamination(bench, **c)
-    if t == "decontaminate":
-        bench = datasets[c.pop("benchmark")]
-        return sf.decontaminate(bench, **c)
-    if t == "embed":
-        return sf.embed(c.pop("keys"), **c)
-    if t == "dedup_semantic":
-        return sf.dedup_semantic(c.pop("id_col"), **c)
-    if t == "dedup_passages":
-        return sf.dedup_passages(c.pop("text_col"), id_col=c.pop("id_col"), **c)
-    if t == "dedup_substrings":
-        return sf.dedup_substrings(c.pop("text_col"), id_col=c.pop("id_col"), **c)
-    if t == "near_dup_grams":
-        return sf.near_dup_grams(c.pop("id_col"), c.pop("text_col"), **c)
-    if t == "dedup_incremental":
-        store = datasets[c.pop("store")]
-        return sf.dedup_incremental(store, c.pop("text_col"), id_col=c.pop("id_col"), **c)
-    if t == "dsir_select":
-        target = datasets[c.pop("target")]
-        return sf.dsir_select(target, c.pop("text_col"), id_col=c.pop("id_col"), k=c.pop("k"), **c)
-    if t == "term_stats":
-        return sf.term_stats(c.pop("text_col"), id_col=c.pop("id_col"), **c)
-    if t == "shard_manifest":
-        return sf.shard_manifest(id_col=c.pop("id_col"), **c)
-    if t == "lm_score":
-        if "model_corpus" in c:
-            c["model_corpus"] = datasets[c.pop("model_corpus")]
-        return sf.lm_score(text_col=c.pop("text_col"), id_col=c.pop("id_col"), **c)
-    if t == "assign_splits":
-        return sf.assign_splits(id_cols=c.pop("id_cols"), **c)
-    # time-series / analytics ops (beyond-reference surface, COVERAGE.md).
-    # YAML carries aggregates as {name: "sql expression"} strings,
-    # compiled with F.expr — the one encoding a pipeline file can hold
-    # (the SemanticFrame verbs take Column objects directly).
-    if t == "time_rollup":
-        return sf.time_rollup(c.pop("ts_col"), _expr_aggs(c.pop("aggs")), **c)
-    if t == "hopping_rollup":
-        return sf.hopping_rollup(
-            _expr_aggs(c.pop("aggs")), ts_col=c.pop("ts_col"),
-            every_ns=c.pop("every_ns"), size_ns=c.pop("size_ns"), **c)
-    if t == "gap_fill":
-        return sf.gap_fill(
-            c.pop("ts_col"), keys=c.pop("keys"),
-            bucket_width=c.pop("bucket_width"),
-            aggs=_expr_aggs(c.pop("aggs")), **c)
-    if t == "time_weighted_avg":
-        return sf.time_weighted_avg(
-            c.pop("ts_col"), c.pop("value_col"), keys=c.pop("keys"), **c)
-    if t == "cohort_retention":
-        return sf.cohort_retention(
-            c.pop("ts_col"), c.pop("user_col"), period=c.pop("period"), **c)
-    if t == "funnel":
-        return sf.funnel(c.pop("steps"), **c)
-    if t == "skew_profile":
-        return sf.skew_profile(c.pop("keys"), **c)
-    if t == "exact_quantiles":
-        return sf.exact_quantiles(c.pop("value_col"), c.pop("ps"), **c)
-    if t == "approx_quantiles":
-        return sf.approx_quantiles(c.pop("value_col"), c.pop("ps"), **c)
-    if t == "cooccurrence_stats":
-        return sf.cooccurrence_stats(c.pop("text_col"), id_col=c.pop("id_col"), **c)
-    if t == "sessionize":
-        return sf.sessionize(keys=c.pop("keys"), ts_col=c.pop("ts_col"),
-                             gap=c.pop("gap"), **c)
-    if t == "rolling_features":
-        if "value_aggs" in c:
-            c["value_aggs"] = _expr_aggs(c.pop("value_aggs"))
-        return sf.rolling_features(c.pop("ts_col"), keys=c.pop("keys"), **c)
-    if t == "asof_join":
-        right = datasets[c.pop("right")]
-        return sf.asof_join(right, **c)
-    if t == "range_join":
-        intervals = datasets[c.pop("intervals")]
-        return sf.range_join(intervals, **c)
-    if t == "snapshot_latest":
-        return sf.snapshot_latest(keys=c.pop("keys"), ts_col=c.pop("ts_col"), **c)
-    if t == "interval_join":
-        right = datasets[c.pop("right")]
-        return sf.interval_join(
-            right, on=c.pop("on"), left_start=c.pop("left_start"),
-            left_end=c.pop("left_end"), right_start=c.pop("right_start"),
-            right_end=c.pop("right_end"), bin_width=c.pop("bin_width"), **c)
-    if t == "transitions":
-        return sf.transitions(keys=c.pop("keys"), ts_col=c.pop("ts_col"),
-                              state_col=c.pop("state_col"), **c)
-    if t == "quantile_buckets":
-        return sf.quantile_buckets(c.pop("value_col"), c.pop("n"), **c)
-    if t == "salted_join":
-        right = datasets[c.pop("right")]
-        return sf.salted_join(right, c.pop("on"), salt=c.pop("salt"), **c)
-    if t == "readability":
-        return sf.readability(c.pop("text_col"), **c)
-    if t == "ngram_stats":
-        return sf.ngram_stats(c.pop("text_col"), id_col=c.pop("id_col"), **c)
-    if t == "changelog_to_scd2":
-        return sf.changelog_to_scd2(keys=c.pop("keys"), ts_col=c.pop("ts_col"),
-                                    attrs=c.pop("attrs"), **c)
-    if t == "winsorize":
-        return sf.winsorize(c.pop("value_col"), **c)
-    if t == "ewma":
-        return sf.ewma(c.pop("ts_col"), c.pop("value_col"),
-                       keys=c.pop("keys"), alpha=c.pop("alpha"), **c)
-    if t == "ewma_bucketed":
-        return sf.ewma_bucketed(c.pop("ts_col"), c.pop("value_col"),
-                                keys=c.pop("keys"), alpha=c.pop("alpha"),
-                                bucket_width=c.pop("bucket_width"), **c)
-    if t == "streaks":
-        return sf.streaks(c.pop("ts_col"), keys=c.pop("keys"),
-                          bucket_width=c.pop("bucket_width"), **c)
-    if t == "attribute_conversions":
-        return sf.attribute_conversions(
-            conversion_type=c.pop("conversion_type"),
-            touch_types=c.pop("touch_types"), horizon=c.pop("horizon"), **c)
-    if t == "heavy_hitters":
-        return sf.heavy_hitters(c.pop("value_col"), **c)
-    if t == "flag_outliers":
-        return sf.flag_outliers(c.pop("value_col"), **c)
-    if t == "flag_outliers_mad":
-        return sf.flag_outliers_mad(c.pop("value_col"), **c)
-    if t == "histogram":
-        return sf.histogram(c.pop("value_col"), bin_width=c.pop("bin_width"), **c)
-    if t == "running_totals":
-        return sf.running_totals(c.pop("value_col"), keys=c.pop("keys"),
-                                 order_by=c.pop("order_by"), **c)
-    if t == "weighted_quantiles":
-        return sf.weighted_quantiles(c.pop("value_col"), c.pop("weight_col"),
-                                     qs_bp=c.pop("qs_bp"), **c)
-    if t == "trend_fit":
-        return sf.trend_fit(c.pop("x_col"), c.pop("y_col"), **c)
-    if t == "benford_profile":
-        return sf.benford_profile(c.pop("value_col"), **c)
-    if t == "data_diff":
-        return sf.diff_against(datasets[c.pop("right")], c.pop("keys"), **c)
-    if t == "group_concat":
-        return sf.group_concat(c.pop("group_cols"), c.pop("value_col"), **c)
-    if t == "profile_columns":
-        return sf.profile_columns(c.pop("columns", None))
-    if t == "check_constraints":
-        return sf.check_constraints(c.pop("constraints"))
-    if t == "fk_violations":
-        return sf.fk_violations(datasets[c.pop("parent")], c.pop("on"))
-    if t == "debounce":
-        return sf.debounce(keys=c.pop("keys"), ts_col=c.pop("ts_col"),
-                           min_gap_ns=c.pop("min_gap_ns"), **c)
-    if t == "throttle":
-        return sf.throttle(keys=c.pop("keys"), ts_col=c.pop("ts_col"),
-                           window_ns=c.pop("window_ns"),
-                           max_per_window=c.pop("max_per_window"), **c)
-    if t == "apply_cdc":
-        return sf.apply_cdc(datasets[c.pop("changes")], keys=c.pop("keys"),
-                            ts_col=c.pop("ts_col"), **c)
-    if t == "collapse_rare":
-        return sf.collapse_rare(c.pop("col"), **c)
-    if t == "target_encode_loo":
-        return sf.target_encode_loo(c.pop("category_col"), c.pop("target_col"), **c)
-    if t == "ab_test_summary":
-        return sf.ab_test_summary(c.pop("variant_col"), c.pop("success_col"), **c)
-    if t == "cohort_values":
-        return sf.cohort_values(entity_col=c.pop("entity_col"), ts_col=c.pop("ts_col"),
-                                value_col=c.pop("value_col"), width_ns=c.pop("width_ns"), **c)
-    if t == "decade_histogram":
-        return sf.decade_histogram(c.pop("value_col"), **c)
-    if t == "seasonal_outliers":
-        return sf.seasonal_outliers(c.pop("value_col"), c.pop("ts_col"), **c)
-    if t == "pair_metrics":
-        return sf.pair_metrics(datasets[c.pop("truth")], **c)
-    if t == "gini":
-        return sf.gini(c.pop("value_col"), **c)
-    if t == "skyline":
-        return sf.skyline(c.pop("x_col"), c.pop("y_col"), **c)
-    if t == "period_over_period":
-        return sf.period_over_period(c.pop("ts_col"), c.pop("value_col"),
-                                     width_ns=c.pop("width_ns"), **c)
-    if t == "basket_pairs":
-        return sf.basket_pairs(c.pop("basket_col"), c.pop("item_col"), **c)
-    if t == "audience_overlap":
-        return sf.audience_overlap(c.pop("entity_col"), c.pop("group_col"), **c)
-    if t == "auc":
-        return sf.auc(c.pop("score_col"), c.pop("label_col"), **c)
-    if t == "chi_square":
-        return sf.chi_square(c.pop("col_a"), c.pop("col_b"), **c)
-    if t == "ks_test":
-        return sf.ks_test(c.pop("value_col"), c.pop("group_col"),
-                          group_a=c.pop("group_a"), group_b=c.pop("group_b"), **c)
-    if t == "concentration":
-        return sf.concentration(c.pop("value_col"), c.pop("entity_col"), **c)
-    if t == "diversity":
-        return sf.diversity(c.pop("category_col"), **c)
-    if t == "mode":
-        return sf.mode(c.pop("value_col"), **c)
-    if t == "lift_table":
-        return sf.lift_table(c.pop("score_col"), c.pop("label_col"), **c)
-    if t == "vocab_profile":
-        return sf.vocab_profile(c.pop("text_col"), id_col=c.pop("id_col"), **c)
-    if t == "dup_cluster_sizes":
-        return sf.dup_cluster_sizes(c.pop("text_col"), **c)
-    if t == "bursts":
-        return sf.bursts(keys=c.pop("keys"), ts_col=c.pop("ts_col"),
-                         window_ns=c.pop("window_ns"))
-    if t == "transition_probs":
-        return sf.transition_probs(keys=c.pop("keys"), ts_col=c.pop("ts_col"),
-                                   state_col=c.pop("state_col"), **c)
-    if t == "pareto_coverage":
-        kw = dict(c)
-        return sf.pareto_coverage(
-            kw.pop("value_col"), kw.pop("entity_col"),
-            **{k: tuple(v) if k == "thresholds_bp" else v for k, v in kw.items()})
-    if t == "correlation_r2":
-        return sf.correlation_r2(c.pop("x_col"), c.pop("y_col"), **c)
-    if t == "sequence_ngrams":
-        return sf.sequence_ngrams(keys=c.pop("keys"), ts_col=c.pop("ts_col"),
-                                  state_col=c.pop("state_col"), **c)
-    if t == "zipf_profile":
-        return sf.zipf_profile(c.pop("text_col"), id_col=c.pop("id_col"), **c)
-    if t == "rfm_segments":
-        return sf.rfm_segments(keys=c.pop("keys"), ts_col=c.pop("ts_col"),
-                               amount_col=c.pop("amount_col"), **c)
-    if t == "spearman":
-        return sf.spearman(c.pop("x_col"), c.pop("y_col"), **c)
-    if t == "cramers_v2":
-        return sf.cramers_v2(c.pop("col_a"), c.pop("col_b"), **c)
-    if t == "impurity":
-        return sf.impurity(c.pop("feature_col"), c.pop("label_col"), **c)
-    if t == "dist_drift":
-        return sf.dist_drift(c.pop("category_col"), c.pop("period_col"),
-                             base=c.pop("base"), current=c.pop("current"), **c)
-    if t == "woe_table":
-        return sf.woe_table(c.pop("feature_col"), c.pop("label_col"), **c)
-    if t == "cohen_kappa":
-        return sf.cohen_kappa(c.pop("rater_a"), c.pop("rater_b"), **c)
-    if t == "psi":
-        return sf.psi(c.pop("category_col"), c.pop("period_col"),
-                      base=c.pop("base"), current=c.pop("current"), **c)
-    if t == "ngram_novelty":
-        return sf.ngram_novelty(c.pop("text_col"), id_col=c.pop("id_col"), **c)
-    if t == "trimmed_mean":
-        return sf.trimmed_mean(c.pop("value_col"), by=c.pop("by"), **c)
-    if t == "mann_kendall":
-        return sf.mann_kendall(c.pop("ts_col"), c.pop("value_col"),
-                               by=c.pop("by"), **c)
-    if t == "kendall_tau":
-        return sf.kendall_tau(c.pop("x_col"), c.pop("y_col"),
-                              by=c.pop("by"), **c)
-    if t == "theil_sen":
-        return sf.theil_sen(c.pop("ts_col"), c.pop("value_col"),
-                            by=c.pop("by"), **c)
-    if t == "kaplan_meier":
-        return sf.kaplan_meier(c.pop("duration_col"), c.pop("event_col"), **c)
-    if t == "bootstrap_ci":
-        return sf.bootstrap_ci(c.pop("value_col"), id_col=c.pop("id_col"), **c)
-    if t == "kruskal_wallis":
-        return sf.kruskal_wallis(c.pop("value_col"), c.pop("group_col"), **c)
-    if t == "mutual_info":
-        return sf.mutual_info(c.pop("a_col"), c.pop("b_col"), **c)
-    if t == "anova_f":
-        return sf.anova_f(c.pop("value_col"), c.pop("group_col"), **c)
-    if t == "triangle_count":
-        return sf.triangle_count(c.pop("src"), c.pop("dst"))
-    if t == "pagerank":
-        return sf.pagerank(c.pop("src"), c.pop("dst"), **c)
-    if t == "graph_components":
-        return sf.graph_components(c.pop("src"), c.pop("dst"), **c)
-    if t == "jaccard_neighbors":
-        return sf.jaccard_neighbors(c.pop("src"), c.pop("dst"), **c)
-    if t == "label_propagation":
-        seeds = datasets[c.pop("seeds")]
-        return sf.label_propagation(seeds, c.pop("src"), c.pop("dst"), **c)
-    if t == "changepoint_mean_shift":
-        return sf.changepoint_mean_shift(keys=c.pop("keys"),
-                                         ts_col=c.pop("ts_col"),
-                                         value_col=c.pop("value_col"), **c)
-    if t == "sma_crossover":
-        return sf.sma_crossover(keys=c.pop("keys"), ts_col=c.pop("ts_col"),
-                                value_col=c.pop("value_col"), **c)
-    if t == "runs":
-        return sf.runs(keys=c.pop("keys"), ts_col=c.pop("ts_col"),
-                       value_col=c.pop("value_col"), **c)
-    if t == "acf_table":
-        return sf.acf_table(keys=c.pop("keys"), ts_col=c.pop("ts_col"),
-                            value_col=c.pop("value_col"), **c)
-    if t == "session_entry_exit":
-        return sf.session_entry_exit(keys=c.pop("keys"), ts_col=c.pop("ts_col"),
-                                     page_col=c.pop("page_col"),
-                                     gap=c.pop("gap"),
-                                     tiebreak=c.pop("tiebreak"), **c)
-    if t == "vocab_growth":
-        return sf.vocab_growth(c.pop("text_col"), id_col=c.pop("id_col"), **c)
-    if t == "curriculum_order":
-        return sf.curriculum_order(c.pop("score_col"),
-                                   id_cols=c.pop("id_cols"), **c)
-    if t == "edit_distance_pairs":
-        return sf.edit_distance_pairs(c.pop("id_col"), c.pop("text_col"), **c)
-    if t == "interval_union":
-        return sf.interval_union(keys=c.pop("keys"), start_col=c.pop("start_col"),
-                                 end_col=c.pop("end_col"), **c)
-    if t == "session_paths":
-        return sf.session_paths(session_keys=c.pop("session_keys"),
-                                state_col=c.pop("state_col"), ts_col=c.pop("ts_col"), **c)
-    if t == "autocorr_lag":
-        return sf.autocorr_lag(c.pop("value_col"), keys=c.pop("keys"),
-                               ts_col=c.pop("ts_col"), **c)
-    if t == "null_runs":
-        return sf.null_runs(c.pop("value_col"), keys=c.pop("keys"),
-                            ts_col=c.pop("ts_col"), **c)
-    if t == "changepoint_cusum":
-        return sf.changepoint_cusum(c.pop("value_col"), keys=c.pop("keys"),
-                                    ts_col=c.pop("ts_col"), threshold=c.pop("threshold"), **c)
-    if t == "state_durations":
-        return sf.state_durations(keys=c.pop("keys"), ts_col=c.pop("ts_col"),
-                                  state_col=c.pop("state_col"), **c)
-    if t == "rollup_state":
-        return sf.rollup_state(c.pop("keys"), {k: tuple(v) for k, v in c.pop("aggs").items()})
-    if t == "merge_rollup":
-        return sf.merge_rollup(datasets[c.pop("delta")], c.pop("keys"),
-                               {k: tuple(v) for k, v in c.pop("aggs").items()})
-    if t == "sample_pps":
-        return sf.sample_pps(c.pop("weight_col"), c.pop("n"),
-                             order_by=c.pop("order_by"), **c)
-    if t == "percentile_normalize":
-        return sf.percentile_normalize(c.pop("value_col"), **c)
-    if t == "active_users_approx":
-        kw = dict(c)
-        return sf.active_users_approx(
-            kw.pop("ts_col"), user_col=kw.pop("user_col"),
-            **{k: tuple(v) if k == "windows" else v for k, v in kw.items()})
-    if t == "active_users":
-        kw = dict(c)
-        return sf.active_users(kw.pop("ts_col"), user_col=kw.pop("user_col"),
-                               **{k: tuple(v) if k == "windows" else v
-                                  for k, v in kw.items()})
-    if t == "time_profile":
-        _aggs = c.pop("aggs", None)
-        return sf.time_profile(
-            c.pop("ts_col"), aggs=_expr_aggs(_aggs) if _aggs else None, **c)
-    if t == "melt":
-        return sf.melt(c.pop("id_cols"), c.pop("value_cols"), **c)
-    if t == "json_extract":
-        return sf.json_extract(c.pop("json_col"), c.pop("fields"), **c)
-    if t == "keywords":
-        return sf.keywords(c.pop("text_col"), id_col=c.pop("id_col"), **c)
-    # plugin operators: entry-point group docetl_spark.operators or
-    # register_operator() (reference operations/__init__.py:54-76)
-    from ..plugins import get_operator
+    op = OP_TYPES.get(t)
+    if op is None:
+        # plugin operators: entry-point group docetl_spark.operators or
+        # register_operator() (reference operations/__init__.py:54-76)
+        from ..plugins import get_operator
 
-    plugin = get_operator(t)
-    if plugin is not None:
+        plugin = get_operator(t)
+        if plugin is None:
+            raise ValueError(f"unknown op type {t!r}")
         return plugin(sf, dict(spec.config), datasets)
-    raise ValueError(f"unknown op type {t!r}")
+    if not op.takes_name:
+        c.pop("name", None)
+    for k in op.datasets:
+        if k in c:
+            c[k] = datasets[c[k]]
+    # YAML carries aggregates as {name: "sql expression"} strings (the
+    # verbs take Column objects)
+    for k in op.sql_aggs:
+        if c.get(k):
+            c[k] = _expr_aggs(c[k])
+    for k in op.tuples:
+        if k in c:
+            v = c[k]
+            c[k] = {n: tuple(x) for n, x in v.items()} if isinstance(v, dict) else tuple(v)
+    schema = (c.pop("output", None) or {}).get("schema")
+    if schema is not None:
+        c["output_schema"] = schema
+    for key, param in op.renames:
+        if key in c:
+            if c.get(param) is not None:
+                raise TypeError(f"{t} takes `{key}` or `{param}`, not both")
+            c[param] = c.pop(key)
+    return getattr(sf, op.verb or t)(**c)
 
 
 def _empirical_evaluator(sf, datasets, backend, stats, *, sample_rows: int = 20):

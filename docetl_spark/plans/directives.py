@@ -29,7 +29,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field, replace
 
-from .ir import OpSpec
+from .ir import OP_TYPES, OpSpec
 
 # relative per-1k-token call cost (litellm-style public price ratios)
 MODEL_WEIGHTS = {
@@ -102,7 +102,7 @@ def estimate_cost(ops: list[OpSpec], stats: PlanStats) -> float:
             per_group = rows / groups
             if vs:
                 per_group = min(per_group, float(vs.get("size", per_group)))
-            if op.config.get("compressed_inputs"):
+            if op.config.get("_compressed_inputs"):
                 # map_reduce_fusion: the reduce iterates over pre-extracted
                 # fields, not full documents
                 size *= 0.3
@@ -292,7 +292,7 @@ def _d_map_reduce_fusion(ops, i, stats, backend):
     pre-extracts what the reduce needs, the reduce iterates over those
     extractions instead of full documents. Deterministic instantiation:
     the reduce's document references swap to the map's first output key
-    and the reduce is marked compressed_inputs (cost model: ~0.3x
+    and the reduce is marked _compressed_inputs (cost model: ~0.3x
     prompt)."""
     m, red = ops[i], ops[i + 1]
     map_keys = sorted(_out_schema(m)) or ["extracted"]
@@ -307,7 +307,7 @@ def _d_map_reduce_fusion(ops, i, stats, backend):
         "prompt": red.config.get("prompt", "").replace(
             f"input.{doc_key}", f"input.{map_keys[0]}"
         ).replace(f"item.{doc_key}", f"item.{map_keys[0]}"),
-        "compressed_inputs": True,
+        "_compressed_inputs": True,
     })
     return ops[:i] + [new_map, new_reduce] + ops[i + 2 :]
 
@@ -324,7 +324,6 @@ def _d_doc_compression(ops, i, stats, backend):
         "prompt": f"Extract the minimal spans of {{{{ input.{key} }}}} needed for: "
                   + op.config.get("prompt", "")[:200],
         "document_keys": [key],
-        "model": DEFAULT_MODEL,
         "_shrinks_tokens": 0.3,
     })
     new = replace(op, config={
@@ -382,7 +381,7 @@ def _d_hierarchical_reduce(ops, i, stats, backend):
         **red.config,
         "name": f"{name}_rollup",
         "prompt": "Combine these sub-group summaries into one: {{ inputs }}",
-        "compressed_inputs": True,
+        "_compressed_inputs": True,
     })
     return ops[:i] + [bucket, level1, level2] + ops[i + 1 :]
 
@@ -492,7 +491,6 @@ def _d_isolating_subtasks(ops, i, stats, backend):
         "name": f"{name}_subtasks",
         "prompts": prompts,
         "output": {"schema": schema},
-        "model": m.config.get("model", DEFAULT_MODEL),
         "_isolated": True,
     })
     synth = OpSpec("map", {
@@ -527,7 +525,7 @@ def _d_reduce_chaining(ops, i, stats, backend):
         "prompt": red.config.get("prompt", "")
         .replace(f"input.{key}", "input.result")
         .replace(f"item.{key}", "item.result"),
-        "compressed_inputs": True,
+        "_compressed_inputs": True,
         "_chained": True,
     })
     return ops[:i] + [pre, new_red] + ops[i + 1 :]
@@ -630,7 +628,7 @@ def _d_doc_chunking_topk(ops, i, stats, backend):
         + "\nBase the answer only on these retrieved excerpts: {{ inputs }}",
         "output": {"schema": out_schema},
         "model": m.config.get("model", DEFAULT_MODEL),
-        "compressed_inputs": True,
+        "_compressed_inputs": True,
     })
     tail: list[OpSpec] = [split, topk, answer]
     if m.type == "filter":
@@ -751,10 +749,7 @@ def _d_arbitrary_rewrite(ops, i, stats, backend):
         new_ops = [OpSpec(o["type"], dict(o["config"])) for o in parsed]
     except Exception:
         return None
-    known = {"map", "parallel_map", "filter", "reduce", "code_map", "code_filter",
-             "code_reduce", "split", "gather", "unnest", "add_uuid", "sample",
-             "topk", "rank", "extract", "resolve", "cluster", "link_resolve", "equijoin"}
-    if not new_ops or any(o.type not in known for o in new_ops):
+    if not new_ops or any(o.type not in OP_TYPES for o in new_ops):
         return None
     if _out_schema(new_ops[-1]).keys() != _out_schema(ops[-1]).keys():
         return None  # terminal schema must survive the rewrite
@@ -809,12 +804,12 @@ DIRECTIVES: list[Directive] = [
     ),
     Directive(
         "change_model_cost",
-        lambda ops, i, stats, be: ops[i].is_llm and ops[i].config.get("model", DEFAULT_MODEL) in CHEAPER,
+        lambda ops, i, stats, be: ops[i].takes_model and ops[i].config.get("model", DEFAULT_MODEL) in CHEAPER,
         _d_change_model(CHEAPER),
     ),
     Directive(
         "change_model_acc",
-        lambda ops, i, stats, be: ops[i].is_llm and ops[i].config.get("model", DEFAULT_MODEL) in STRONGER,
+        lambda ops, i, stats, be: ops[i].takes_model and ops[i].config.get("model", DEFAULT_MODEL) in STRONGER,
         _d_change_model(STRONGER),
     ),
     Directive(
@@ -836,7 +831,7 @@ DIRECTIVES: list[Directive] = [
         "map_reduce_fusion",
         lambda ops, i, stats, be: (
             i + 1 < len(ops) and ops[i].type == "map" and ops[i + 1].type == "reduce"
-            and not ops[i + 1].config.get("compressed_inputs")
+            and not ops[i + 1].config.get("_compressed_inputs")
         ),
         _d_map_reduce_fusion,
     ),
@@ -894,7 +889,7 @@ DIRECTIVES: list[Directive] = [
     Directive(
         "reduce_chaining",
         lambda ops, i, stats, be: (
-            ops[i].type == "reduce" and not ops[i].config.get("compressed_inputs")
+            ops[i].type == "reduce" and not ops[i].config.get("_compressed_inputs")
             and not ops[i].config.get("_chained")
             and stats.avg_doc_tokens >= stats.long_doc_tokens
         ),
@@ -961,7 +956,7 @@ DIRECTIVES: list[Directive] = [
     ),
     Directive(
         "change_model",
-        lambda ops, i, stats, be: ops[i].is_llm,
+        lambda ops, i, stats, be: ops[i].takes_model,
         _d_change_model_auto,
     ),
     Directive(

@@ -6,6 +6,11 @@ lattice + traits). Config dicts are lifted into ``OpSpec`` nodes whose
 traits drive the pre-compilation rewrite rules in rewrite.py; the result
 is lowered back to configs and compiled onto DataFrames (compiler.py) —
 Catalyst then handles everything expressible natively.
+
+``OP_TYPES`` is the one catalog of YAML op types. The compiler, the
+validator, the rewrite rules, the optimizer directives and the typed
+``Pipeline`` all read it; a type missing from it runs only through the
+plugin registry.
 """
 
 from __future__ import annotations
@@ -21,32 +26,99 @@ ONE_TO_MANY = "one_to_many"
 MANY_TO_MANY = "many_to_many"
 
 
-# trait table per op type: (cardinality, is_llm, is_row_local, preserves_order)
-# mirrors base.py:139-188 defaults; conservative where unknown.
-_TRAITS: dict[str, tuple[str, bool, bool, bool]] = {
-    "map": (ONE_TO_ONE, True, True, True),
-    "parallel_map": (ONE_TO_ONE, True, True, True),
-    "filter": (SELECTION, True, True, True),
-    "code_map": (ONE_TO_ONE, False, True, True),
-    "code_filter": (SELECTION, False, True, True),
-    "code_reduce": (MANY_TO_ONE, False, False, False),
-    "reduce": (MANY_TO_ONE, True, False, False),
-    "resolve": (MANY_TO_MANY, True, False, False),
-    "equijoin": (MANY_TO_MANY, True, False, False),
-    "split": (ONE_TO_MANY, False, True, True),
-    "gather": (ONE_TO_ONE, False, False, False),
-    "unnest": (ONE_TO_MANY, False, True, True),
-    "unnest_columns": (ONE_TO_ONE, False, True, True),
-    "sample": (SELECTION, False, False, False),
-    "topk": (SELECTION, False, False, False),
-    "rank": (ONE_TO_ONE, True, False, False),
-    "cluster": (ONE_TO_ONE, True, False, False),
-    "extract": (ONE_TO_ONE, True, True, True),
-    "link_resolve": (ONE_TO_ONE, True, False, True),
-    "add_uuid": (ONE_TO_ONE, False, True, True),
-    "web_search": (ONE_TO_ONE, False, True, True),
-    "web_fetch": (ONE_TO_ONE, False, True, True),
-    "scan": (ONE_TO_ONE, False, True, True),
+@dataclass(frozen=True)
+class OpType:
+    """One YAML op type: its traits, plus only what differs from "each
+    config key is the verb's parameter name" (``output: {schema: S}`` is
+    every type's ``output_schema``). compiler.apply_op reads this to call
+    ``getattr(sf, verb)(**config)``; validate.py derives the required
+    keys from the verb's signature."""
+
+    cardinality: str = MANY_TO_MANY
+    is_llm: bool = False  # calls a model: the rewrite rules' cost motive
+    is_row_local: bool = False
+    preserves_order: bool = False
+    verb: str = ""  # SemanticFrame method, when it is not the type's name
+    renames: tuple[tuple[str, str], ...] = ()  # (YAML key, verb parameter)
+    datasets: tuple[str, ...] = ()  # keys whose value names a dataset
+    sql_aggs: tuple[str, ...] = ()  # {name: "sql expression"} mappings
+    tuples: tuple[str, ...] = ()  # lists (or a mapping's lists) -> tuples
+    takes_name: bool = False  # the op's `name` reaches the verb
+    takes_model: bool = False  # per-op model / timeout / litellm kwargs
+
+
+_ROW = {"is_row_local": True, "preserves_order": True}
+_CODE = (("code", "fn"),)
+# an op type resolved through the plugin registry: opaque, so assumed to
+# call a model
+_PLUGIN = OpType(is_llm=True)
+
+OP_TYPES: dict[str, OpType] = {
+    "map": OpType(ONE_TO_ONE, is_llm=True, **_ROW, takes_model=True),
+    "parallel_map": OpType(ONE_TO_ONE, is_llm=True, **_ROW),
+    "filter": OpType(SELECTION, is_llm=True, **_ROW, takes_model=True),
+    "reduce": OpType(MANY_TO_ONE, is_llm=True, takes_name=True, takes_model=True),
+    "code_map": OpType(ONE_TO_ONE, **_ROW, renames=_CODE),
+    "code_filter": OpType(SELECTION, **_ROW, renames=(("code", "predicate"),)),
+    "code_reduce": OpType(MANY_TO_ONE, renames=_CODE, takes_name=True),
+    "resolve": OpType(is_llm=True),
+    "equijoin": OpType(is_llm=True, datasets=("right",), renames=(("right", "other"),)),
+    "split": OpType(ONE_TO_MANY, **_ROW, takes_name=True),
+    "gather": OpType(ONE_TO_ONE),
+    "unnest": OpType(ONE_TO_MANY, **_ROW),
+    "unnest_columns": OpType(ONE_TO_ONE, **_ROW),
+    "add_uuid": OpType(ONE_TO_ONE, **_ROW),
+    "sample": OpType(SELECTION),
+    "topk": OpType(SELECTION),
+    "rank": OpType(ONE_TO_ONE, is_llm=True),
+    "cluster": OpType(ONE_TO_ONE, is_llm=True),
+    "extract": OpType(ONE_TO_ONE, is_llm=True, **_ROW),
+    "link_resolve": OpType(ONE_TO_ONE, is_llm=True, preserves_order=True),
+    "embed": OpType(is_llm=True),
+    "retrieve_context": OpType(is_llm=True, datasets=("corpus",)),
+    "data_diff": OpType(verb="diff_against", datasets=("right",), renames=(("right", "new"),)),
+    **{t: OpType(datasets=(k,)) for t, k in (
+        ("contamination", "benchmark"), ("decontaminate", "benchmark"),
+        ("dedup_incremental", "store"), ("dsir_select", "target"),
+        ("lm_score", "model_corpus"), ("asof_join", "right"),
+        ("interval_join", "right"), ("salted_join", "right"),
+        ("range_join", "intervals"), ("fk_violations", "parent"),
+        ("apply_cdc", "changes"), ("pair_metrics", "truth"),
+        ("label_propagation", "seeds"),
+    )},
+    "merge_rollup": OpType(datasets=("delta",), tuples=("aggs",)),
+    "rollup_state": OpType(tuples=("aggs",)),
+    **{t: OpType(sql_aggs=("aggs",)) for t in ("time_rollup", "hopping_rollup", "gap_fill", "time_profile")},
+    "rolling_features": OpType(sql_aggs=("value_aggs",)),
+    "pareto_coverage": OpType(tuples=("thresholds_bp",)),
+    "active_users": OpType(tuples=("windows",)),
+    "active_users_approx": OpType(tuples=("windows",)),
+    # every key is the verb's parameter, and no model is called
+    **dict.fromkeys("""
+        ab_test_summary acf_table anova_f approx_quantiles assign_splits
+        attribute_conversions auc audience_overlap autocorr_lag basket_pairs
+        benford_profile bootstrap_ci bursts cap_per_group changelog_to_scd2
+        changepoint_cusum changepoint_mean_shift check_constraints chi_square
+        cohen_kappa cohort_retention cohort_values collapse_rare concentration
+        cooccurrence_stats correlation_r2 cramers_v2 curriculum_order debounce
+        decade_histogram dedup_passages dedup_semantic dedup_substrings dist_drift
+        diversity dup_cluster_sizes edit_distance_pairs ewma ewma_bucketed
+        exact_quantiles flag_outliers flag_outliers_mad funnel gini graph_components
+        group_concat heavy_hitters histogram impurity interval_union
+        jaccard_neighbors json_extract kaplan_meier kendall_tau keywords
+        kruskal_wallis ks_test lift_table limit mann_kendall melt mode mutual_info
+        near_dup_grams near_dup_minhash near_dup_simhash ngram_novelty ngram_stats
+        null_runs pack_documents pack_sequences pagerank percentile_normalize
+        period_over_period profile_columns psi quantile_buckets readability
+        rfm_segments running_totals runs sample_mixture sample_pps
+        sample_temperature sample_unimax seasonal_outliers select_top_frac
+        sequence_ngrams session_entry_exit session_paths sessionize shard_manifest
+        skew_profile skyline sma_crossover snapshot_latest spearman state_durations
+        streaks target_encode_loo term_stats theil_sen throttle time_weighted_avg
+        transition_probs transitions trend_fit triangle_count trimmed_mean
+        vocab_growth vocab_profile weighted_quantiles winsorize woe_table
+        zipf_profile
+    """.split(), OpType()),
 }
 
 # sample method=first preserves order and is a positional head (limit-like)
@@ -62,20 +134,28 @@ class OpSpec:
 
     # ------------------------------------------------------------ traits
     @property
+    def op_type(self) -> OpType:
+        return OP_TYPES.get(self.type, _PLUGIN)
+
+    @property
     def cardinality(self) -> str:
-        return _TRAITS.get(self.type, (MANY_TO_MANY,))[0]
+        return self.op_type.cardinality
 
     @property
     def is_llm(self) -> bool:
-        return _TRAITS.get(self.type, (None, True))[1]
+        return self.op_type.is_llm
 
     @property
     def is_row_local(self) -> bool:
-        return _TRAITS.get(self.type, (None, None, False))[2]
+        return self.op_type.is_row_local
 
     @property
     def preserves_order(self) -> bool:
-        return _TRAITS.get(self.type, (None, None, None, False))[3]
+        return self.op_type.preserves_order
+
+    @property
+    def takes_model(self) -> bool:
+        return self.op_type.takes_model
 
     # ------------------------------------------------- field read/write
     def fields_written(self) -> set[str] | None:

@@ -3,8 +3,9 @@
 Reference: /root/reference/docetl/plan/analysis.py:103-160 (validate /
 validate_config -> PlanIssue list) and plan/ir.py:120-128 (PlanIssue).
 Checks run BEFORE any Spark job: structural wiring (datasets, steps, op
-name references), per-op config contracts (the same ones apply_op would
-hit mid-run, surfaced up front), output-schema type-grammar parses, and
+name references), per-op config contracts (known types from
+``ir.OP_TYPES``, required keys from the SemanticFrame verb each type
+calls, plus a few value checks), output-schema type-grammar parses, and
 a field-flow pass flagging reads of fields a previous op dropped.
 
 Levels: "error" (the pipeline cannot run), "warning" (likely wrong but
@@ -13,58 +14,18 @@ executable), "info" (opaque/plugin ops the validator can't introspect).
 
 from __future__ import annotations
 
-import re
+import inspect
 from dataclasses import dataclass
+from functools import lru_cache
 
+from ..frame import SemanticFrame
 from ..types import schema_of
-from .ir import lift
+from .ir import OP_TYPES, lift
 
 _SAMPLE_METHODS = {"first", "uniform", "custom", "stratified", "outliers", "top_embedding", "top_fts", "smart"}
 _TOPK_METHODS = {"embedding", "fts", "llm_compare"}
-_KNOWN_OPS = {
-    "map", "parallel_map", "filter", "reduce", "code_map", "code_filter",
-    "code_reduce", "split", "gather", "unnest", "unnest_columns", "add_uuid",
-    "sample", "topk", "rank", "extract", "resolve", "cluster", "link_resolve",
-    "equijoin", "step_boundary", "limit", "pack_sequences", "pack_documents",
-    "sample_temperature", "sample_mixture", "sample_unimax", "select_top_frac", "cap_per_group",
-    "near_dup_minhash", "contamination", "decontaminate",
-    "dedup_passages", "dedup_substrings", "near_dup_grams", "dedup_incremental", "dedup_semantic", "embed",
-    "dsir_select", "term_stats", "shard_manifest", "lm_score", "assign_splits",
-    "time_rollup", "hopping_rollup", "gap_fill", "time_weighted_avg",
-    "cohort_retention", "funnel", "skew_profile", "exact_quantiles",
-    "approx_quantiles", "ewma_bucketed",
-    "cooccurrence_stats", "asof_join", "range_join", "sessionize",
-    "rolling_features", "near_dup_simhash", "retrieve_context",
-    "streaks", "attribute_conversions", "heavy_hitters", "flag_outliers",
-    "melt", "json_extract", "keywords", "ewma", "changelog_to_scd2",
-    "winsorize", "transitions", "quantile_buckets", "salted_join",
-    "ngram_stats", "snapshot_latest", "interval_join", "readability",
-    "flag_outliers_mad", "histogram", "running_totals", "data_diff",
-    "group_concat", "time_profile", "profile_columns", "check_constraints",
-    "active_users", "sample_pps", "percentile_normalize",
-    "rollup_state", "merge_rollup", "apply_cdc", "state_durations",
-    "weighted_quantiles", "trend_fit", "benford_profile",
-    "interval_union", "session_paths", "autocorr_lag", "null_runs",
-    "changepoint_cusum", "basket_pairs", "audience_overlap",
-    "rfm_segments", "edit_distance_pairs", "gini", "skyline",
-    "period_over_period", "seasonal_outliers", "pair_metrics",
-    "cohort_values", "decade_histogram", "ab_test_summary",
-    "collapse_rare", "target_encode_loo",
-    "active_users_approx", "debounce", "throttle",
-    "fk_violations",
-    "auc", "chi_square", "ks_test", "concentration", "diversity",
-    "mode", "lift_table", "vocab_profile", "dup_cluster_sizes",
-    "bursts", "transition_probs",
-    "pareto_coverage", "correlation_r2", "sequence_ngrams", "zipf_profile",
-    "spearman", "cramers_v2", "impurity", "dist_drift", "woe_table",
-    "cohen_kappa", "psi", "ngram_novelty",
-    "trimmed_mean", "mann_kendall", "kendall_tau", "theil_sen",
-    "kaplan_meier", "changepoint_mean_shift", "sma_crossover", "runs",
-    "acf_table", "session_entry_exit", "vocab_growth", "curriculum_order",
-    "kruskal_wallis", "mutual_info", "anova_f",
-    "triangle_count", "pagerank", "graph_components",
-    "jaccard_neighbors", "label_propagation", "bootstrap_ci",
-}
+# code ops: the function the source must define besides transform()
+_CODE_ENTRY = {"code_map": "transform", "code_filter": "predicate", "code_reduce": "reduce_fn"}
 
 
 @dataclass
@@ -83,13 +44,15 @@ def _schema(c: dict) -> dict | None:
     return (c.get("output") or {}).get("schema") or c.get("output_schema")
 
 
-def _check_code(c: dict, entry: str, name: str, issues: list[PlanIssue]) -> None:
-    code = c.get("code")
-    if code is None:
-        issues.append(PlanIssue("error", name, "code op needs a `code` config"))
-        return
-    if not isinstance(code, str):
-        return  # bare callable: nothing to parse
+@lru_cache(maxsize=None)
+def _required_params(verb: str) -> tuple[str, ...]:
+    """The verb's parameters that have no default."""
+    params = list(inspect.signature(getattr(SemanticFrame, verb)).parameters.values())[1:]
+    return tuple(p.name for p in params
+                 if p.default is p.empty and p.kind in (p.POSITIONAL_OR_KEYWORD, p.KEYWORD_ONLY))
+
+
+def _check_code(code: str, entry: str, name: str, issues: list[PlanIssue]) -> None:
     try:
         compile(code, name, "exec")
     except SyntaxError as e:
@@ -105,7 +68,8 @@ def _check_op(op: dict) -> list[PlanIssue]:
     name = op.get("name", t or "<unnamed>")
     if not t:
         return [PlanIssue("error", name, "operation has no `type`")]
-    if t not in _KNOWN_OPS:
+    op_type = OP_TYPES.get(t)
+    if op_type is None:
         from ..plugins import get_operator
 
         level = "info" if get_operator(t) else "error"
@@ -120,227 +84,46 @@ def _check_op(op: dict) -> list[PlanIssue]:
         except Exception as e:
             issues.append(PlanIssue("error", name, f"output schema does not parse: {e}"))
 
-    if t in ("map", "filter", "reduce", "extract") and not op.get("prompt"):
-        issues.append(PlanIssue("error", name, f"{t} needs a `prompt`"))
-    if t == "parallel_map" and not op.get("prompts"):
-        issues.append(PlanIssue("error", name, "parallel_map needs `prompts`"))
-    if t in ("map", "parallel_map", "filter", "reduce") and not schema:
-        issues.append(PlanIssue("error", name, f"{t} needs an output schema"))
+    # required keys: the verb's parameters with no default, under the
+    # YAML names apply_op maps onto them (output.schema -> output_schema)
+    given = {k for k, v in op.items() if v is not None and k != "output"}
+    if schema is not None:
+        given.add("output_schema")
+    yaml_name = {"output_schema": "output.schema"}
+    for key, param in op_type.renames:
+        yaml_name[param] = key
+        if key in given:
+            given.add(param)
+    for param in _required_params(op_type.verb or t):
+        if param not in given:
+            issues.append(PlanIssue("error", name, f"{t} needs `{yaml_name.get(param, param)}`"))
+
     if t == "filter" and schema:
         bools = [k for k, v in schema.items() if str(v).lower().startswith("bool")]
         if len(schema) != 1 or len(bools) != 1:
             issues.append(PlanIssue(
                 "error", name,
                 "filter output schema must be exactly one bool key (filter.py:53-71)"))
-    if t in ("reduce", "code_reduce") and not op.get("reduce_key"):
-        issues.append(PlanIssue("error", name, f"{t} needs `reduce_key` (use '_all' for global)"))
-    if t in ("code_map", "code_filter", "code_reduce"):
-        entry = {"code_map": "transform", "code_filter": "predicate", "code_reduce": "reduce_fn"}[t]
-        if t == "code_filter" and op.get("predicate") is not None:
-            pass  # SQL-expression predicate: checked by Spark analysis
-        else:
-            _check_code(op, entry, name, issues)
-    if t == "split":
-        if not op.get("split_key"):
-            issues.append(PlanIssue("error", name, "split needs `split_key`"))
-        if op.get("method") not in ("token_count", "delimiter"):
-            issues.append(PlanIssue("error", name, "split method must be token_count|delimiter"))
-    if t == "gather":
-        for k in ("content_key", "doc_id_key", "order_key"):
-            if not op.get(k):
-                issues.append(PlanIssue("error", name, f"gather needs `{k}`"))
-    if t == "resolve":
-        if not op.get("comparison_prompt"):
-            issues.append(PlanIssue("error", name, "resolve needs `comparison_prompt`"))
-        if not (op.get("blocking_keys") or op.get("blocking_conditions")
-                or op.get("blocking_threshold")):
-            issues.append(PlanIssue(
-                "warning", name,
-                "resolve has no blocking config: the all-pairs fallback is "
-                "gated to tiny inputs (reference equijoin.py:318-330)"))
-    if t == "equijoin":
-        for k in ("right", "comparison_prompt", "left_keys", "right_keys"):
-            if not op.get(k):
-                issues.append(PlanIssue("error", name, f"equijoin needs `{k}`"))
+    code = op.get("code")  # a bare callable has nothing to parse
+    if t == "code_filter" and op.get("predicate") is not None:
+        code = None  # SQL-expression predicate: checked by Spark analysis
+    if t in _CODE_ENTRY and isinstance(code, str):
+        _check_code(code, _CODE_ENTRY[t], name, issues)
+    if t == "split" and op.get("method") not in ("token_count", "delimiter"):
+        issues.append(PlanIssue("error", name, "split method must be token_count|delimiter"))
+    if t == "resolve" and not (op.get("blocking_keys") or op.get("blocking_conditions")
+                               or op.get("blocking_threshold")):
+        issues.append(PlanIssue(
+            "warning", name,
+            "resolve has no blocking config: the all-pairs fallback is "
+            "gated to tiny inputs (reference equijoin.py:318-330)"))
     if t == "sample" and op.get("method") not in _SAMPLE_METHODS:
         issues.append(PlanIssue("error", name, f"sample method must be one of {sorted(_SAMPLE_METHODS)}"))
-    if t == "topk":
-        if op.get("method") not in _TOPK_METHODS:
-            issues.append(PlanIssue("error", name, f"topk method must be one of {sorted(_TOPK_METHODS)}"))
-        if not op.get("k"):
-            issues.append(PlanIssue("error", name, "topk needs `k`"))
-    if t in ("pack_sequences", "pack_documents") and not op.get("budget"):
+    if t == "topk" and op.get("method") not in _TOPK_METHODS:
+        issues.append(PlanIssue("error", name, f"topk method must be one of {sorted(_TOPK_METHODS)}"))
+    budget = op.get("budget")
+    if budget is not None and not (isinstance(budget, (int, float)) and budget > 0):
         issues.append(PlanIssue("error", name, f"{t} needs a positive `budget`"))
-    if t == "sample_temperature":
-        for k in ("group_col", "temperature"):
-            if not op.get(k):
-                issues.append(PlanIssue("error", name, f"sample_temperature needs `{k}`"))
-    if t == "sample_unimax":
-        for k in ("group_col", "budget"):
-            if not op.get(k):
-                issues.append(PlanIssue("error", name, f"sample_unimax needs `{k}`"))
-    if t == "select_top_frac":
-        for k in ("score_col", "frac"):
-            if op.get(k) is None:
-                issues.append(PlanIssue("error", name, f"select_top_frac needs `{k}`"))
-    if t == "cap_per_group":
-        for k in ("group_cols", "n", "order"):
-            if not op.get(k):
-                issues.append(PlanIssue("error", name, f"cap_per_group needs `{k}`"))
-    if t == "near_dup_minhash":
-        for k in ("id_col", "text_col"):
-            if not op.get(k):
-                issues.append(PlanIssue("error", name, f"near_dup_minhash needs `{k}`"))
-    if t in ("contamination", "decontaminate") and not op.get("benchmark"):
-        issues.append(PlanIssue("error", name, f"{t} needs a `benchmark` dataset ref"))
-    if t in ("dedup_passages", "dedup_substrings", "near_dup_grams", "dedup_incremental"):
-        for k in ("id_col", "text_col"):
-            if not op.get(k):
-                issues.append(PlanIssue("error", name, f"{t} needs `{k}`"))
-        if t == "dedup_incremental" and not op.get("store"):
-            issues.append(PlanIssue("error", name, "dedup_incremental needs a `store` dataset ref"))
-    if t == "dsir_select":
-        for k in ("target", "text_col", "id_col", "k"):
-            if not op.get(k):
-                issues.append(PlanIssue("error", name, f"dsir_select needs `{k}`"))
-    if t == "term_stats":
-        for k in ("text_col", "id_col"):
-            if not op.get(k):
-                issues.append(PlanIssue("error", name, f"term_stats needs `{k}`"))
-    if t == "shard_manifest" and not op.get("id_col"):
-        issues.append(PlanIssue("error", name, "shard_manifest needs `id_col`"))
-    if t == "lm_score":
-        for k in ("text_col", "id_col"):
-            if not op.get(k):
-                issues.append(PlanIssue("error", name, f"lm_score needs `{k}`"))
-    if t == "assign_splits" and not op.get("id_cols"):
-        issues.append(PlanIssue("error", name, "assign_splits needs `id_cols`"))
-    # analytics family: required keys checked here so a spec typo fails
-    # with a named PlanIssue instead of a bare KeyError at compile time
-    _ANALYTICS_REQUIRED = {
-        "time_rollup": ("ts_col", "aggs"),
-        "hopping_rollup": ("ts_col", "aggs", "every_ns", "size_ns"),
-        "gap_fill": ("ts_col", "keys", "bucket_width", "aggs"),
-        "time_weighted_avg": ("ts_col", "value_col", "keys"),
-        "cohort_retention": ("ts_col", "user_col", "period"),
-        "funnel": ("steps",),
-        "skew_profile": ("keys",),
-        "exact_quantiles": ("value_col", "ps"),
-        "approx_quantiles": ("value_col", "ps"),
-        "cooccurrence_stats": ("text_col", "id_col"),
-        "asof_join": ("right", "on", "left_ts", "right_ts", "right_cols"),
-        "range_join": ("intervals", "point_ts", "start_ts", "end_ts"),
-        "sessionize": ("keys", "ts_col", "gap"),
-        "rolling_features": ("ts_col", "keys"),
-        "near_dup_simhash": ("id_col", "text_col"),
-        "retrieve_context": ("corpus", "text_keys"),
-        "ewma": ("ts_col", "value_col", "keys", "alpha"),
-        "ewma_bucketed": ("ts_col", "value_col", "keys", "alpha", "bucket_width"),
-        "changelog_to_scd2": ("keys", "ts_col", "attrs"),
-        "winsorize": ("value_col",),
-        "transitions": ("keys", "ts_col", "state_col"),
-        "snapshot_latest": ("keys", "ts_col"),
-        "interval_join": ("right", "on", "left_start", "left_end",
-                          "right_start", "right_end", "bin_width"),
-        "quantile_buckets": ("value_col", "n"),
-        "flag_outliers_mad": ("value_col",),
-        "histogram": ("value_col", "bin_width"),
-        "weighted_quantiles": ("value_col", "weight_col", "qs_bp"),
-        "trend_fit": ("x_col", "y_col"),
-        "benford_profile": ("value_col",),
-        "interval_union": ("keys", "start_col", "end_col"),
-        "session_paths": ("session_keys", "state_col", "ts_col"),
-        "autocorr_lag": ("value_col", "keys", "ts_col"),
-        "null_runs": ("value_col", "keys", "ts_col"),
-        "changepoint_cusum": ("value_col", "keys", "ts_col", "threshold"),
-        "basket_pairs": ("basket_col", "item_col"),
-        "audience_overlap": ("entity_col", "group_col"),
-        "rfm_segments": ("keys", "ts_col", "amount_col"),
-        "edit_distance_pairs": ("id_col", "text_col"),
-        "gini": ("value_col",),
-        "skyline": ("x_col", "y_col"),
-        "period_over_period": ("ts_col", "value_col", "width_ns"),
-        "seasonal_outliers": ("value_col", "ts_col"),
-        "pair_metrics": ("truth",),
-        "cohort_values": ("entity_col", "ts_col", "value_col", "width_ns"),
-        "decade_histogram": ("value_col",),
-        "ab_test_summary": ("variant_col", "success_col"),
-        "collapse_rare": ("col",),
-        "target_encode_loo": ("category_col", "target_col"),
-        "spearman": ("x_col", "y_col"),
-        "cramers_v2": ("col_a", "col_b"),
-        "impurity": ("feature_col", "label_col"),
-        "dist_drift": ("category_col", "period_col", "base", "current"),
-        "woe_table": ("feature_col", "label_col"),
-        "cohen_kappa": ("rater_a", "rater_b"),
-        "psi": ("category_col", "period_col", "base", "current"),
-        "ngram_novelty": ("text_col", "id_col"),
-        "trimmed_mean": ("value_col", "by"),
-        "mann_kendall": ("ts_col", "value_col", "by"),
-        "kendall_tau": ("x_col", "y_col", "by"),
-        "theil_sen": ("ts_col", "value_col", "by"),
-        "kaplan_meier": ("duration_col", "event_col"),
-        "changepoint_mean_shift": ("keys", "ts_col", "value_col"),
-        "kruskal_wallis": ("value_col", "group_col"),
-        "mutual_info": ("a_col", "b_col"),
-        "anova_f": ("value_col", "group_col"),
-        "triangle_count": ("src", "dst"),
-        "pagerank": ("src", "dst"),
-        "graph_components": ("src", "dst"),
-        "jaccard_neighbors": ("src", "dst"),
-        "label_propagation": ("seeds", "src", "dst"),
-        "bootstrap_ci": ("value_col", "id_col"),
-        "sma_crossover": ("keys", "ts_col", "value_col"),
-        "runs": ("keys", "ts_col", "value_col"),
-        "acf_table": ("keys", "ts_col", "value_col"),
-        "session_entry_exit": ("keys", "ts_col", "page_col", "gap", "tiebreak"),
-        "vocab_growth": ("text_col", "id_col"),
-        "curriculum_order": ("score_col", "id_cols"),
-        "running_totals": ("value_col", "keys", "order_by"),
-        "data_diff": ("right", "keys"),
-        "group_concat": ("group_cols", "value_col"),
-        "time_profile": ("ts_col",),
-        "active_users": ("ts_col", "user_col"),
-        "active_users_approx": ("ts_col", "user_col"),
-        "sample_pps": ("weight_col", "n", "order_by"),
-        "percentile_normalize": ("value_col",),
-        "rollup_state": ("keys", "aggs"),
-        "merge_rollup": ("delta", "keys", "aggs"),
-        "apply_cdc": ("changes", "keys", "ts_col"),
-        "state_durations": ("keys", "ts_col", "state_col"),
-        "debounce": ("keys", "ts_col", "min_gap_ns"),
-        "throttle": ("keys", "ts_col", "window_ns", "max_per_window"),
-        "check_constraints": ("constraints",),
-        "fk_violations": ("parent", "on"),
-        "salted_join": ("right", "on", "salt"),
-        "ngram_stats": ("text_col", "id_col"),
-        "readability": ("text_col",),
-        "streaks": ("ts_col", "keys", "bucket_width"),
-        "attribute_conversions": ("conversion_type", "touch_types", "horizon"),
-        "heavy_hitters": ("value_col",),
-        "flag_outliers": ("value_col",),
-        "melt": ("id_cols", "value_cols"),
-        "json_extract": ("json_col", "fields"),
-        "keywords": ("text_col", "id_col"),
-        "auc": ("score_col", "label_col"),
-        "chi_square": ("col_a", "col_b"),
-        "ks_test": ("value_col", "group_col", "group_a", "group_b"),
-        "concentration": ("value_col", "entity_col"),
-        "diversity": ("category_col",),
-        "mode": ("value_col",),
-        "lift_table": ("score_col", "label_col"),
-        "vocab_profile": ("text_col", "id_col"),
-        "dup_cluster_sizes": ("text_col",),
-        "bursts": ("keys", "ts_col", "window_ns"),
-        "transition_probs": ("keys", "ts_col", "state_col"),
-        "pareto_coverage": ("value_col", "entity_col"),
-        "correlation_r2": ("x_col", "y_col"),
-        "sequence_ngrams": ("keys", "ts_col", "state_col"),
-        "zipf_profile": ("text_col", "id_col"),
-    }
-    for k in _ANALYTICS_REQUIRED.get(t, ()):
-        if op.get(k) is None:
-            issues.append(PlanIssue("error", name, f"{t} needs `{k}`"))
     return issues
 
 

@@ -175,7 +175,7 @@ def test_map_reduce_fusion_rewrites_reduce_inputs():
     new, _ = _apply_named("map_reduce_fusion", ops)
     assert new is not None and [o.type for o in new] == ["map", "reduce"]
     assert "input.orgs" in new[1].config["prompt"]
-    assert new[1].config["compressed_inputs"]
+    assert new[1].config["_compressed_inputs"]
     # fused reduce is cheaper than the original at the same stats
     stats = PlanStats(rows=1000, avg_doc_tokens=3000)
     assert estimate_cost(new, stats) < estimate_cost(ops, stats)
@@ -294,7 +294,7 @@ def test_reduce_chaining_preextracts():
     ops = _ops()
     out = _apply("reduce_chaining", ops, 2)
     assert out[2].type == "map" and out[3].type == "reduce"
-    assert out[3].config["compressed_inputs"] is True
+    assert out[3].config["_compressed_inputs"] is True
     assert "input.result" not in ops[2].config["prompt"]  # original untouched
 
 

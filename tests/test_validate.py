@@ -34,7 +34,7 @@ def test_errors_structural_and_per_op():
     msgs = [str(i) for i in validate_config(cfg)]
     assert any("exactly one bool key" in m for m in msgs)
     assert any("reduce_key" in m for m in msgs)
-    assert any("needs a `prompt`" in m for m in msgs)
+    assert any("map needs `prompt`" in m for m in msgs)
     assert any("schema does not parse" in m for m in msgs)
     assert any("unknown step input 'nope'" in m for m in msgs)
     assert any("unknown operation 'ghost'" in m for m in msgs)
@@ -92,11 +92,14 @@ def test_analytics_ops_required_keys():
         "operations": [
             {"name": "g", "type": "gap_fill", "ts_col": "t"},  # missing keys/width/aggs
             {"name": "s", "type": "sessionize", "keys": ["u"], "ts_col": "t", "gap": 10},
+            {"name": "a", "type": "asof_join", "right": "d", "on": ["k"],
+             "right_ts": "t", "right_cols": ["v"]},  # missing left_ts
         ],
-        "pipeline": {"steps": [{"name": "s1", "input": "d", "operations": ["g", "s"]}]},
+        "pipeline": {"steps": [{"name": "s1", "input": "d", "operations": ["g", "s", "a"]}]},
     }
     errs = [str(i) for i in validate_config(cfg) if i.level == "error"]
     assert any("gap_fill needs `keys`" in e for e in errs)
     assert any("gap_fill needs `bucket_width`" in e for e in errs)
     assert any("gap_fill needs `aggs`" in e for e in errs)
     assert not any("sessionize" in e for e in errs)  # complete spec passes
+    assert [e for e in errs if "asof_join" in e] == ["[error] a: asof_join needs `left_ts`"]
