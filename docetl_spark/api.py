@@ -204,7 +204,7 @@ class UnnestOp(_Op):
 
 class UnnestColumnsOp(_Op):
     type: str = "unnest_columns"
-    columns: list[str] | None = None
+    column: str | None = None
 
 
 class ClusterOp(_Op):
@@ -218,7 +218,6 @@ class SampleOp(_Op):
     type: str = "sample"
     method: str | None = None
     samples: Any = None
-    method_kwargs: dict[str, Any] | None = None
 
 
 class TopkOp(_Op):
@@ -231,7 +230,7 @@ class TopkOp(_Op):
 class RankOp(_Op):
     type: str = "rank"
     method: str | None = None
-    rank_key: str | None = None
+    rank_col: str | None = None
     prompt: str | None = None
 
 
@@ -259,7 +258,7 @@ class ExtractOp(_Op):
     type: str = "extract"
     prompt: str | None = None
     document_keys: list[str] | None = None
-    extraction_method: str | None = None
+    strategy: str | None = None
 
 
 class LinkResolveOp(_Op):
@@ -271,8 +270,8 @@ class LinkResolveOp(_Op):
 
 class WebSearchOp(_Op):
     type: str = "web_search"
-    query_key: str | None = None
-    output: dict[str, Any] | None = None
+    query_col: str | None = None
+    output_col: str | None = None
 
 
 OpType = Union[

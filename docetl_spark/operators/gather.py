@@ -71,8 +71,8 @@ def render_hierarchy_headers(current_chunk: dict, chunks: list[dict], doc_header
     ``_Current Section:_ # A > ## B``. Chunks with no headers of their
     own render nothing."""
     def headers_of(chunk):
-        hs = chunk.get(doc_header_key) or []
-        return [dict(h) if not isinstance(h, dict) else h for h in hs]
+        hs = chunk.get(doc_header_key)  # a numpy array under Arrow: no truth value
+        return [] if hs is None else [dict(h) if not isinstance(h, dict) else h for h in hs]
 
     current_headers = headers_of(current_chunk)
     if not current_headers:

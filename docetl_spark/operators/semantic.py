@@ -170,19 +170,29 @@ def _complete_with_quality_loop(
     if strict_types and problems:
         raise ValueError(f"output type validation failed after {attempts} attempts: {problems}")
     if gleaning:
-        val_prompt = gleaning.get("validation_prompt", "")
-        for _round in range(int(gleaning.get("num_rounds", 1))):
-            judge = render_prompt(val_prompt, {"input": row, "output": res})
-            verdict = backend.complete(
-                judge, {"needs_improvement": "bool", "feedback": "str"}, {"row": row, "output": res}
-            )
-            if not verdict.get("needs_improvement"):
-                break
-            res = backend.complete(
-                rendered + f"\n[feedback round {_round}]: {verdict.get('feedback', '')}",
-                output_schema,
-                row,
-            )
+        res = _glean(backend, gleaning, rendered, output_schema, res, {"input": row}, row)
+    return res
+
+
+def _glean(backend: ModelBackend, gleaning: dict, rendered: str, output_schema: dict,
+           res: dict, scope: dict, context) -> dict:
+    """Gleaning (api.py:365-485): a validator prompt, rendered over
+    ``scope`` plus ``output``, judges ``res`` up to ``num_rounds`` times;
+    while it reports needs_improvement, ``rendered`` is asked again with
+    the feedback appended."""
+    val_prompt = gleaning.get("validation_prompt", "")
+    for _round in range(int(gleaning.get("num_rounds", 1))):
+        judge = render_prompt(val_prompt, {**scope, "output": res})
+        verdict = backend.complete(
+            judge, {"needs_improvement": "bool", "feedback": "str"}, {"row": context, "output": res}
+        )
+        if not verdict.get("needs_improvement"):
+            break
+        res = backend.complete(
+            rendered + f"\n[feedback round {_round}]: {verdict.get('feedback', '')}",
+            output_schema,
+            context,
+        )
     return res
 
 
@@ -638,6 +648,7 @@ def semantic_reduce(
     value_sampling: dict | None = None,
     limit: int | None = None,
     persist_intermediates: bool = False,
+    gleaning: dict | None = None,
     agent=None,
     model: str | None = None,
     timeout: float | None = None,
@@ -674,6 +685,13 @@ def semantic_reduce(
     iteration order is nondeterministic otherwise — required for
     reproducible/oracle-checkable outputs).
 
+    ``gleaning`` {"num_rounds", "validation_prompt"} (reduce.py
+    _batch_reduce) judges each group's one-shot output — the validation
+    prompt sees ``inputs``, ``reduce_key`` and ``output`` — and asks the
+    reduce prompt again with the judge's feedback while it reports
+    needs_improvement. One-shot only: it does not compose with
+    ``fold_prompt`` or ``agent``.
+
     ``associative=False`` (reduce.py:62,356-357) disables every
     merge-based parallel plan: items fold SEQUENTIALLY in
     ``sort_within_group`` order, because a non-associative combine is
@@ -700,6 +718,9 @@ def semantic_reduce(
     falls back to a single ordered chain (``associative=False``).
     """
     backend = _apply_backend_options(backend, model, timeout, litellm_completion_kwargs)
+    if gleaning and (fold_prompt or agent is not None):
+        raise ValueError("reduce gleaning judges the one-shot output: it does not "
+                         "compose with fold_prompt or agent")
     if merge_batch_size is not None and merge_batch_size < 2:
         # a 1-at-a-time (or negative) merge pass never shrinks the
         # partial list — the while-loop below would spin forever making
@@ -748,7 +769,11 @@ def semantic_reduce(
             from ..agents import run_agent
 
             return run_agent(backend, agent, rendered, output_schema, items)
-        return backend.complete(rendered, output_schema, items)
+        res = backend.complete(rendered, output_schema, items)
+        if gleaning:
+            scope = {"inputs": items, "reduce_key": rk}
+            res = _glean(backend, gleaning, rendered, output_schema, res, scope, items)
+        return res
 
     def fold(items, rk, trace=None):
         acc: dict | None = None

@@ -195,7 +195,9 @@ def _d_cascade_filtering(ops, i, stats, backend):
 
 
 def _d_gleaning(ops, i, stats, backend):
-    glean = {"num_rounds": 1, "validation_prompt": "Is this output complete and faithful to the input?"}
+    glean = {"num_rounds": 1,
+             "validation_prompt": "Is this output complete and faithful to the input?\n"
+                                  "Input: {{ input }}\nOutput: {{ output }}"}
     new = replace(ops[i], config={**ops[i].config, "gleaning": glean})
     return ops[:i] + [new] + ops[i + 1 :]
 
@@ -390,7 +392,8 @@ def _d_reduce_gleaning(ops, i, stats, backend):
     """reduce_gleaning (directives/reduce_gleaning.py): judge-validate
     each reduce output, refine until it passes or rounds run out."""
     glean = {"num_rounds": 1,
-             "validation_prompt": "Does this aggregate faithfully cover every input item?"}
+             "validation_prompt": "Does this aggregate faithfully cover every input item?\n"
+                                  "Aggregate: {{ output }}\nItems: {{ inputs }}"}
     new = replace(ops[i], config={**ops[i].config, "gleaning": glean})
     return ops[:i] + [new] + ops[i + 1 :]
 
@@ -545,7 +548,8 @@ def _d_chunk_header_summary(ops, i, stats, backend):
         "name": f"{name}_chunk_meta",
         "prompt": f"For {{{{ input.{content_key} }}}}: list its section headers (with "
                   "nesting level) and write a 1-2 sentence summary.",
-        "output": {"schema": {"headers": "list[str]", f"{content_key}_summary": "str"}},
+        "output": {"schema": {"headers": "list[{header: str, level: int}]",
+                              f"{content_key}_summary": "str"}},
         "model": CHEAPER.get(DEFAULT_MODEL, DEFAULT_MODEL),
         "_header_summary": True,
     })
@@ -866,7 +870,11 @@ DIRECTIVES: list[Directive] = [
     ),
     Directive(
         "reduce_gleaning",
-        lambda ops, i, stats, be: ops[i].type == "reduce" and not ops[i].config.get("gleaning"),
+        lambda ops, i, stats, be: (
+            # semantic_reduce gleans its one-shot output only
+            ops[i].type == "reduce"
+            and not any(ops[i].config.get(k) for k in ("gleaning", "fold_prompt", "agent"))
+        ),
         _d_reduce_gleaning,
     ),
     Directive(
@@ -950,7 +958,10 @@ DIRECTIVES: list[Directive] = [
     Directive(
         "clarify_instructions",
         lambda ops, i, stats, be: (
-            be is not None and ops[i].is_llm and not ops[i].config.get("_clarified")
+            # only a `prompt` key: resolve/equijoin's comparison_prompt is
+            # another parameter
+            be is not None and ops[i].is_llm and bool(ops[i].config.get("prompt"))
+            and not ops[i].config.get("_clarified")
         ),
         _d_clarify_instructions,
     ),

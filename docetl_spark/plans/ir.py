@@ -76,6 +76,8 @@ OP_TYPES: dict[str, OpType] = {
     "link_resolve": OpType(ONE_TO_ONE, is_llm=True, preserves_order=True),
     "embed": OpType(is_llm=True),
     "retrieve_context": OpType(is_llm=True, datasets=("corpus",)),
+    "web_search": OpType(ONE_TO_ONE, **_ROW),
+    "web_fetch": OpType(ONE_TO_ONE, **_ROW),
     "data_diff": OpType(verb="diff_against", datasets=("right",), renames=(("right", "new"),)),
     **{t: OpType(datasets=(k,)) for t, k in (
         ("contamination", "benchmark"), ("decontaminate", "benchmark"),

@@ -85,8 +85,11 @@ def _check_op(op: dict) -> list[PlanIssue]:
             issues.append(PlanIssue("error", name, f"output schema does not parse: {e}"))
 
     # required keys: the verb's parameters with no default, under the
-    # YAML names apply_op maps onto them (output.schema -> output_schema)
-    given = {k for k, v in op.items() if v is not None and k != "output"}
+    # YAML names apply_op maps onto them (output.schema -> output_schema);
+    # an empty string or container is missing, 0 and False are given
+    given = {k for k, v in op.items()
+             if v is not None and not (isinstance(v, (str, list, tuple, dict)) and not v)
+             and k != "output"}
     if schema is not None:
         given.add("output_schema")
     yaml_name = {"output_schema": "output.schema"}
@@ -96,7 +99,8 @@ def _check_op(op: dict) -> list[PlanIssue]:
             given.add(param)
     for param in _required_params(op_type.verb or t):
         if param not in given:
-            issues.append(PlanIssue("error", name, f"{t} needs `{yaml_name.get(param, param)}`"))
+            hint = " (use '_all' for global)" if param == "reduce_key" else ""
+            issues.append(PlanIssue("error", name, f"{t} needs `{yaml_name.get(param, param)}`{hint}"))
 
     if t == "filter" and schema:
         bools = [k for k, v in schema.items() if str(v).lower().startswith("bool")]

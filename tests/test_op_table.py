@@ -10,7 +10,7 @@ import pytest
 from docetl_spark import FakeBackend, SemanticFrame, run_pipeline
 from docetl_spark.plans import OpSpec, PlanStats, optimize_ops, validate_config
 from docetl_spark.plans.compiler import apply_op
-from docetl_spark.plans.ir import OP_TYPES
+from docetl_spark.plans.ir import OP_TYPES, lift
 
 _CODE = "def transform(doc):\n    return {}\n"
 # values the validator checks, by key and by type
@@ -153,3 +153,90 @@ def test_default_model_reaches_only_ops_that_take_a_model(spark):
     ops = {o["name"]: o for o in p._runnable_config()["operations"]}
     assert ops["m"]["model"] == "gpt-4o-mini" and "model" not in ops["head"]
     assert len(p.run(spark, backend=FakeBackend()).collect()) == 1
+
+
+def test_optimize_for_accuracy_runs_map_reduce(spark):
+    """The accuracy objective picks reduce_gleaning; the gleaning it is
+    credited for runs: one judge call per group on top of the reduce."""
+    from docetl_spark.resilience import BackendMetrics, ResilientBackend
+
+    ops = [{"name": "m", "type": "map", "prompt": "Summarize {{ input.text }}",
+            "output": {"schema": {"s": "str"}}},
+           {"name": "r", "type": "reduce", "reduce_key": "g", "prompt": "Combine {{ inputs }}",
+            "output": {"schema": {"total": "str"}}}]
+    data = [{"g": "a", "text": "x y"}, {"g": "b", "text": "z"}]
+    out = run_pipeline(spark, _pipeline(ops, data, optimize={"objective": "accuracy"}),
+                       backend=FakeBackend())
+    assert "directive:reduce_gleaning" in dict(out.op_log)["rewrites"]["fired"]
+    assert sorted(r["g"] for r in out.collect()) == ["a", "b"]
+
+    def calls(reduce_cfg: dict) -> int:
+        metrics = BackendMetrics(spark.sparkContext)
+        be = ResilientBackend(FakeBackend(), cache_size=0, metrics=metrics)
+        run_pipeline(spark, _pipeline([{**ops[1], **reduce_cfg}], data), backend=be).collect()
+        return metrics.calls.value
+
+    glean = {"num_rounds": 1, "validation_prompt": "Is {{ output.total }} complete?"}
+    assert calls({"gleaning": glean}) == calls({}) + 2
+
+
+def test_chunk_header_summary_plan_runs(spark):
+    """chunk_header_summary's meta map writes the {header, level} list
+    that gather's doc_header_key reads; the rewritten plan renders
+    header breadcrumbs and middle-chunk summaries."""
+    from docetl_spark.plans.directives import DIRECTIVES
+
+    ops = [{"name": "sp", "type": "split", "split_key": "text", "method": "token_count",
+            "method_kwargs": {"num_tokens": 4}},
+           {"name": "g", "type": "gather", "content_key": "text_chunk", "doc_id_key": "sp_id",
+            "order_key": "sp_chunk_num",
+            "peripheral_chunks": {"previous": {"tail": {"count": 1}}}}]
+    rewrite = next(d for d in DIRECTIVES if d.name == "chunk_header_summary")
+    rewritten = rewrite.apply(lift(ops), 0, PlanStats(), None)
+    assert [o.type for o in rewritten] == ["split", "map", "gather"]
+
+    def headers(row):
+        if row["sp_chunk_num"] == 1:
+            return [{"header": "Intro", "level": 1}, {"header": "Scope", "level": 2}]
+        return [{"header": "Detail", "level": 2}]
+
+    text = " ".join(f"w{i}" for i in range(16))
+    cfg = _pipeline([{"type": o.type, **o.config} for o in rewritten], [{"text": text}])
+    rows = run_pipeline(spark, cfg, backend=FakeBackend(rules={"headers": headers})).collect()
+    rendered = [r["text_chunk_rendered"] for r in sorted(rows, key=lambda r: r["sp_chunk_num"])]
+    assert len(rendered) > 2 and "_Current Section:_" not in rendered[0]
+    assert "_Current Section:_ # Intro\n" in rendered[1]
+    assert "[Chunk 3 (Summary)]" in rendered[1]
+
+
+def test_clarify_instructions_rewrites_only_a_prompt_key():
+    """resolve's prompt is `comparison_prompt`: clarify_instructions
+    must not write a `prompt` key the verb does not take."""
+    from docetl_spark.plans.directives import DIRECTIVES
+
+    agent = FakeBackend(rules={"confident": lambda ctx: True,
+                               "prompt": lambda ctx: "Be precise."})
+    clarify = next(d for d in DIRECTIVES if d.name == "clarify_instructions")
+    ops = lift([{"name": "rs", "type": "resolve", "id_col": "id",
+                 "comparison_prompt": "{{ input1.x }} vs {{ input2.x }}",
+                 "output": {"schema": {"x": "str"}}},
+                {"name": "m", "type": "map", "prompt": "x {{ input.x }}",
+                 "output": {"schema": {"s": "str"}}}])
+    assert not clarify.applies(ops, 0, PlanStats(), agent)
+    assert clarify.applies(ops, 1, PlanStats(), agent)
+
+
+def test_typed_ops_are_table_types(spark):
+    """Every typed op class names a table type; a typed web_search runs."""
+    from docetl_spark import Dataset, Pipeline, PipelineStep, WebSearchOp
+
+    assert set(Pipeline._OP_TYPE_REGISTRY) <= set(OP_TYPES)
+    p = Pipeline(
+        name="search",
+        datasets={"d": Dataset(type="memory", data=[{"q": "spark"}])},
+        operations=[WebSearchOp(name="s", query_col="q", output_col="hits",
+                                fetch_fn=lambda q, n: [{"title": q, "description": "", "url": "u"}])],
+        steps=[PipelineStep(name="s", input="d", operations=["s"])],
+    )
+    assert p.syntax_check() == []
+    assert [h["title"] for h in p.run(spark, backend=FakeBackend()).collect()[0]["hits"]] == ["spark"]

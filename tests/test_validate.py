@@ -40,6 +40,19 @@ def test_errors_structural_and_per_op():
     assert any("unknown operation 'ghost'" in m for m in msgs)
 
 
+def test_empty_required_value_is_missing():
+    cfg = _base([
+        {"name": "m", "type": "map", "prompt": "", "output": {"schema": {"s": "str"}}},
+        {"name": "r", "type": "reduce", "reduce_key": "", "prompt": "p {{ inputs }}",
+         "output": {"schema": {"n": "int"}}},
+        {"name": "t", "type": "time_rollup", "ts_col": "ts", "aggs": {}},
+    ])
+    msgs = [str(i) for i in validate_config(cfg) if i.level == "error"]
+    assert any("map needs `prompt`" in m for m in msgs)
+    assert any("reduce needs `reduce_key` (use '_all' for global)" in m for m in msgs)
+    assert any("time_rollup needs `aggs`" in m for m in msgs)
+
+
 def test_field_flow_warns_on_dropped_read():
     cfg = _base([
         {"name": "m1", "type": "map", "prompt": "x {{ input.text }}",
