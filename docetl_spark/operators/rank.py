@@ -24,7 +24,7 @@ from ..backend import ModelBackend
 from ..operators.sample import cosine_sim
 from ..session import widen_scan
 from .resolve import embed_column
-from .semantic import render_prompt
+from .semantic import render_prompt, run_groups
 
 
 def _likert_scores(
@@ -258,8 +258,10 @@ def _comparison_qurk_rank(
     and a per-batch md5-priority window keeps the top S
     (``_qurk_membership``; the assignment table is O(num_batches*S)
     rows, never the row x batch cross join). Batch ranking runs
-    DISTRIBUTED via applyInPandas — one backend call per batch, batches
-    spread across executors — then win counting is a plain aggregation.
+    DISTRIBUTED via ``semantic.run_groups`` — one backend call per
+    batch, batches spread across executors and up to
+    ``max_concurrency`` of a task's batches in flight — then win
+    counting is a plain aggregation.
     num_batches defaults to the reference's N*(N-1)/(S*(S-1)), hard-
     capped at ``_MAX_DEFAULT_NUM_BATCHES`` (each batch is one model
     call; explicit num_batches overrides).
@@ -299,7 +301,7 @@ def _comparison_qurk_rank(
         )
 
     win_counts = (
-        member.groupBy("_batch").applyInPandas(rank_batch, schema=out_schema)
+        run_groups(member, ["_batch"], rank_batch, out_schema, backend)
         .groupBy("_row_key").agg(F.sum("_wins").alias("_wins"))
     )
     scored = keyed.join(win_counts, "_row_key", "left").fillna({"_wins": 0})

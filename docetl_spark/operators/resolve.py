@@ -17,9 +17,13 @@ Spark realization (scale posture, SURVEY.md §7.4):
   an equi-join on bucket id, never the reference's O(n^2) cosine matrix
   (resolve.py:500-518, deliberately not replicated);
 - pairwise adjudication is a pandas UDF over the (pruned) pair table;
-- clustering = iterative min-label propagation (connected components);
-- canonicalization = groupBy(cluster).applyInPandas, then a broadcast
-  join annotates all rows.
+- clustering = driver union-find over the collected match edges, or
+  iterative min-label propagation past the edge gate (connected
+  components);
+- canonicalization without ``resolution_prompt`` is a SQL majority vote,
+  ``mode`` over a window on the cluster id; with it, one model call per
+  cluster through ``semantic.run_groups`` (a task's clusters in flight
+  together), then a join annotates all rows.
 """
 
 from __future__ import annotations
@@ -34,7 +38,7 @@ from ..functions.dedup import connected_components
 from ..functions.similarity import banded_candidate_pairs
 from ..operators.sample import cosine_sim
 from ..types import schema_of
-from .semantic import render_prompt, run_concurrently
+from .semantic import render_prompt, run_concurrently, run_groups
 
 # Unblocked resolve degenerates to an O(n^2) cross join; refuse past this
 # many input rows (reference equijoin.py:318-330 warns at 100 — we allow
@@ -565,34 +569,31 @@ def resolve(
         ).drop("component")
 
     declared = schema_of(output_schema)
-    canon_fields = [T.StructField("_cluster_id", clustered.schema["_cluster_id"].dataType, True)] + list(
-        declared.fields
+    keep = [c for c in clustered.columns if c not in declared.fieldNames() and c != "_cluster_id"]
+    if not resolution_prompt:
+        # majority vote per declared key (resolve.py:847-861), ties to the
+        # smallest value for determinism; every row of a cluster reads it
+        # off one window, so no Python stage and no join back
+        w = W.partitionBy("_cluster_id")
+        votes = [
+            (F.mode(f.name, deterministic=True).over(w) if f.name in clustered.columns
+             else F.lit(None)).cast(f.dataType).alias(f.name)
+            for f in declared.fields
+        ]
+        return clustered.select("_cluster_id", *keep, *votes)
+
+    canon_schema = T.StructType(
+        [T.StructField("_cluster_id", clustered.schema["_cluster_id"].dataType, True)]
+        + list(declared.fields)
     )
-    canon_schema = T.StructType(canon_fields)
     out_names = canon_schema.fieldNames()
-    sort_col = id_col
 
     def canonicalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_col, kind="mergesort")
-        items = pdf.to_dict("records")
-        if resolution_prompt:
-            prompt = render_prompt(resolution_prompt, {"inputs": items})
-            res = backend.complete(prompt, output_schema, items)
-        else:
-            # majority vote per declared key (resolve.py:847-861); ties ->
-            # lexicographically smallest for determinism
-            res = {}
-            for k in output_schema:
-                vals = [i.get(k) for i in items if i.get(k) is not None]
-                if vals:
-                    counts = pd.Series(vals).value_counts()
-                    top = counts[counts == counts.max()].index.tolist()
-                    res[k] = sorted(str(t) for t in top)[0] if len(top) > 1 else top[0]
-                else:
-                    res[k] = None
+        items = pdf.sort_values(id_col, kind="mergesort").to_dict("records")
+        prompt = render_prompt(resolution_prompt, {"inputs": items})
+        res = backend.complete(prompt, output_schema, items)
         row = {"_cluster_id": items[0]["_cluster_id"], **{k: res.get(k) for k in output_schema}}
         return pd.DataFrame([{k: row.get(k) for k in out_names}], columns=out_names)
 
-    canon = clustered.groupBy("_cluster_id").applyInPandas(canonicalize, schema=canon_schema)
-    keep = [c for c in clustered.columns if c not in declared.fieldNames()]
-    return clustered.select(*keep).join(canon, "_cluster_id", "left")
+    canon = run_groups(clustered, ["_cluster_id"], canonicalize, canon_schema, backend)
+    return clustered.select("_cluster_id", *keep).join(canon, "_cluster_id", "left")

@@ -13,18 +13,21 @@ Reference semantics:
   (group by key(s) or ``_all``; prompt sees ``{{ inputs }}``;
   ``pass_through`` first-row fields; ``_counts_prereduce_<name>``)
 
-Spark realization: Arrow-batched ``mapInPandas`` (row ops) and
-``groupBy().applyInPandas`` (reduce). The backend call sits inside the
-UDF, so per-executor batching/caching lives in the backend; model
-latency parallelizes across partitions. Gleaning/validation retries and
-the fold / fold+merge reduce strategies (semantic_reduce below,
-reference reduce.py:519-752, 987-1053) are backend loops layered on the
-same UDF shape.
+Spark realization: Arrow-batched ``mapInPandas`` for the row ops, and
+``run_groups`` (hash exchange on the key, sort, ``mapInPandas``) for
+reduce. The backend call sits inside the UDF, so per-executor
+batching/caching lives in the backend. Model latency overlaps across
+partitions and, up to ``backend.max_concurrency``, inside each task:
+``run_concurrently`` over a batch's rows, ``run_groups`` over a task's
+groups. Gleaning/validation retries and the fold / fold+merge reduce
+strategies (semantic_reduce below, reference reduce.py:519-752,
+987-1053) are backend loops layered on the same UDF shape.
 """
 
 from __future__ import annotations
 
 import jinja2
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -124,6 +127,84 @@ def run_concurrently(backend: ModelBackend, fn, items: list) -> list:
 
     with ThreadPoolExecutor(max_workers=min(conc, len(items))) as ex:
         return list(ex.map(fn, items))
+
+
+def _group_key(v):
+    """A key value as ``groupBy`` compares it: nulls and NaNs alike
+    (pandas delivers a float column's nulls as NaN), arrays and structs
+    by value."""
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return tuple(map(_group_key, v))
+    if isinstance(v, dict):
+        return tuple((k, _group_key(x)) for k, x in v.items())
+    return None if v is None or v != v else v
+
+
+def run_groups(df: DataFrame, keys: list[str], fn, schema: T.StructType,
+               backend: ModelBackend) -> DataFrame:
+    """``df.groupBy(*keys).applyInPandas(fn, schema)``, with up to
+    ``backend.max_concurrency`` groups of one task calling the model at
+    once (``applyInPandas`` hands Python one group at a time, so a
+    task's groups would call the model one after another).
+
+    Rows are hashed on ``keys`` into ``spark.sql.shuffle.partitions``
+    partitions and sorted within each: the exchange plus sort a
+    ``groupBy`` plans, with the count given explicitly so AQE cannot
+    coalesce a small model stage into one task. With no ``keys`` the
+    whole frame is one group in one partition. A group ends where the
+    key changes between consecutive rows, so null, NaN and list-valued
+    keys group as ``groupBy`` groups them; a float key carries a null
+    flag so its null and NaN groups stay apart. ``fn`` gets each group
+    as one pandas frame, on a pool of ``max_concurrency`` threads. At
+    most that many groups plus the one being read are held, and results
+    come out in key order."""
+    from collections import deque  # noqa: PLC0415
+    from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
+
+    conc = int(getattr(backend, "max_concurrency", 1) or 1)
+    floats = [k for k in keys if isinstance(df.schema[k].dataType, (T.FloatType, T.DoubleType))]
+    flags = [f"_rg_null_{k}" for k in floats]
+    if keys:
+        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        df = df.withColumns({f: F.col(k).isNull() for f, k in zip(flags, floats)})
+        df = df.repartition(n, *keys).sortWithinPartitions(*keys)
+    else:
+        df = df.repartition(1)
+    key_cols = keys + flags
+
+    def run(batches):
+        pool = ThreadPoolExecutor(max_workers=conc)
+        pending: deque = deque()  # futures, in key order
+        pieces: list[pd.DataFrame] = []  # the group being read
+        last = object()
+
+        def flush():
+            pending.append(pool.submit(fn, pd.concat(pieces, ignore_index=True).drop(columns=flags)))
+            pieces.clear()
+            while pending and (len(pending) >= conc or pending[0].done()):
+                yield pending.popleft().result()
+
+        try:
+            for pdf in batches:
+                ks = zip(*(map(_group_key, pdf[c]) for c in key_cols)) if key_cols else [()] * len(pdf)
+                start = 0
+                for i, k in enumerate(ks):
+                    if k != last:
+                        if i > start:
+                            pieces.append(pdf.iloc[start:i])
+                        if pieces:
+                            yield from flush()
+                        start, last = i, k
+                if start < len(pdf):
+                    pieces.append(pdf.iloc[start:])
+            if pieces:
+                yield from flush()
+            while pending:
+                yield pending.popleft().result()
+        finally:
+            pool.shutdown(wait=True, cancel_futures=True)
+
+    return df.mapInPandas(run, schema=schema)
 
 
 def _safe_eval(expr: str, output: dict) -> bool:
@@ -672,9 +753,11 @@ def semantic_reduce(
     = incremental fold (sequential batches, accumulator in
     ``{{ output }}``). ``merge_prompt`` additionally folds
     ``num_parallel_folds`` item stripes independently then merges their
-    outputs (the associative parallel plan). All strategies run inside
-    the per-group pandas apply — the group is already executor-local;
-    fold/merge manages LLM context windows, not distribution.
+    outputs (the associative parallel plan). Every strategy runs on one
+    group's pandas frame inside ``run_groups``, which keeps up to
+    ``backend.max_concurrency`` of a task's groups in flight; the group
+    is already executor-local, so fold/merge manages LLM context
+    windows, not distribution.
 
     ``lineage_keys`` adds ``{name}_lineage``: list of per-item structs of
     the given keys (reduce.py:409-418). ``value_sampling``
@@ -705,7 +788,7 @@ def semantic_reduce(
     (deterministic content hash), each (group, stripe) folds in its own
     task, then a second grouped pass merges the partial outputs (sorted
     by stripe id for reproducibility). This is the skew escape hatch —
-    a giant group no longer lands in a single applyInPandas task, so
+    a giant group no longer lands in a single task, so
     max task size is group/num_parallel_folds. The fold/merge contract
     is associative by definition (reduce.py:987-1053), which is what
     makes the two-stage plan faithful.
@@ -728,6 +811,7 @@ def semantic_reduce(
         raise ValueError(f"merge_batch_size must be >= 2, got {merge_batch_size}")
     keys = [reduce_key] if isinstance(reduce_key, str) else list(reduce_key)
     global_agg = keys == [_ALL]
+    group_keys = [] if global_agg else keys
     if not global_agg:
         # list-valued keys group as sorted tuples (reduce.py:274-299):
         # [b, a] and [a, b] are the same group — normalize in place so the
@@ -738,7 +822,12 @@ def semantic_reduce(
     if limit is not None and not global_agg:
         sizes = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("_gsz"))
         keep = sizes.orderBy(F.col("_gsz").asc(), *[F.col(k).asc() for k in keys]).limit(limit)
-        df = df.join(F.broadcast(keep.drop("_gsz")), keys, "left_semi")
+        keep = keep.select(*[F.col(k).alias(f"_keep_{k}") for k in keys])
+        # null-safe: a null key is a group too, and may be among the smallest
+        same = F.lit(True)
+        for k in keys:
+            same = same & F.col(k).eqNullSafe(F.col(f"_keep_{k}"))
+        df = df.join(F.broadcast(keep), same, "left_semi")
     count_col = f"_counts_prereduce_{name}"
     lineage_col = f"{name}_lineage"
     inter_col = f"_{name}_intermediates"
@@ -896,11 +985,8 @@ def semantic_reduce(
             row["_n"] = len(items)
             return pd.DataFrame([{k: row.get(k) for k in part_names}], columns=part_names)
 
-        g1 = (
-            salted.groupBy("_stripe") if global_agg
-            else salted.groupBy(*keys, "_stripe")
-        )
-        partials_df = g1.applyInPandas(fold_stripe, schema=part_schema)
+        partials_df = run_groups(salted, [*group_keys, "_stripe"], fold_stripe,
+                                 part_schema, backend)
 
         def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values("_stripe", kind="mergesort")
@@ -916,11 +1002,6 @@ def semantic_reduce(
                 row[count_col] = int(pdf["_n"].sum())
             return pd.DataFrame([{k: row.get(k) for k in out_names}], columns=out_names)
 
-        g2 = (
-            partials_df.groupBy(F.lit(1).alias("_g")) if global_agg
-            else partials_df.groupBy(*keys)
-        )
-        return g2.applyInPandas(merge_group, schema=out_schema)
+        return run_groups(partials_df, group_keys, merge_group, out_schema, backend)
 
-    grouped = df.groupBy(F.lit(1).alias("_g")) if global_agg else df.groupBy(*keys)
-    return grouped.applyInPandas(agg, schema=out_schema)
+    return run_groups(df, group_keys, agg, out_schema, backend)

@@ -238,10 +238,11 @@ def _d_doc_chunking(ops, i, stats, backend):
         "prompt": m.config.get("prompt", "").replace(
             f"input.{doc_key}", f"input.{doc_key}_chunk_rendered"),
     })
+    # pass_through: the document's other columns survive the combine
     combine = OpSpec("reduce", {
         "name": f"{name}_combine", "reduce_key": f"{name}_split_id",
         "prompt": "Combine the chunk-level outputs: {{ inputs }}",
-        "output": {"schema": out_schema},
+        "output": {"schema": out_schema}, "pass_through": True,
     })
     return ops[:i] + [split, gather, chunk_map, combine] + ops[i + 1 :]
 
@@ -632,7 +633,7 @@ def _d_doc_chunking_topk(ops, i, stats, backend):
         + "\nBase the answer only on these retrieved excerpts: {{ inputs }}",
         "output": {"schema": out_schema},
         "model": m.config.get("model", DEFAULT_MODEL),
-        "_compressed_inputs": True,
+        "_compressed_inputs": True, "pass_through": True,
     })
     tail: list[OpSpec] = [split, topk, answer]
     if m.type == "filter":
@@ -929,9 +930,10 @@ DIRECTIVES: list[Directive] = [
             ops[i].type in ("map", "filter")
             and stats.avg_doc_tokens >= stats.long_doc_tokens
             and not any(o.type == "split" for o in ops)
-            # the retrieval pipeline re-keys rows by document and keeps
-            # only the op's output schema: legal only when every later op
-            # reads nothing else (fail closed on unknown reads)
+            # the retrieval pipeline re-keys rows by document, and the
+            # answer reduce passes the other columns through from ONE
+            # retrieved chunk's row: legal only when every later op reads
+            # nothing but the op's outputs (fail closed on unknown reads)
             and all(
                 o.fields_read() is not None and o.fields_read() <= set(_out_schema(ops[i]))
                 for o in ops[i + 1 :]

@@ -17,7 +17,7 @@ Wired into :func:`operators.semantic.semantic_reduce` via
 bounded sample (driver-side, ``sample_size`` rows — an allowed
 limit-gated collect), and the reduce compiles to the salted two-stage
 distributed plan only when both checks pass. At 100 TB this is the
-difference between a giant group landing in one applyInPandas task and
+difference between a giant group landing in one task and
 it folding in ``num_parallel_folds`` stripes — but ONLY when the
 fold/merge contract actually commutes; a wrong promotion is a silent
 correctness bug, which is why the gate is conservative (both layers
