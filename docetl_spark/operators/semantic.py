@@ -26,7 +26,10 @@ strategies (semantic_reduce below, reference reduce.py:519-752,
 
 from __future__ import annotations
 
+import json
+
 import jinja2
+import jinja2.meta
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -255,15 +258,24 @@ def _complete_with_quality_loop(
     return res
 
 
+@__import__("functools").lru_cache(maxsize=512)
+def _references_output(template: str) -> bool:
+    return "output" in jinja2.meta.find_undeclared_variables(_env.parse(template))
+
+
 def _glean(backend: ModelBackend, gleaning: dict, rendered: str, output_schema: dict,
            res: dict, scope: dict, context) -> dict:
     """Gleaning (api.py:365-485): a validator prompt, rendered over
     ``scope`` plus ``output``, judges ``res`` up to ``num_rounds`` times;
     while it reports needs_improvement, ``rendered`` is asked again with
-    the feedback appended."""
+    the feedback appended. A validator prompt that does not template
+    ``output`` gets the JSON-encoded output appended, so the judge sees
+    what it judges (the reference appends it to the conversation)."""
     val_prompt = gleaning.get("validation_prompt", "")
     for _round in range(int(gleaning.get("num_rounds", 1))):
         judge = render_prompt(val_prompt, {**scope, "output": res})
+        if not _references_output(val_prompt):
+            judge += "\n\nOutput:\n" + json.dumps(res, default=str)
         verdict = backend.complete(
             judge, {"needs_improvement": "bool", "feedback": "str"}, {"row": context, "output": res}
         )
@@ -875,9 +887,7 @@ def semantic_reduce(
                 rendered = render_prompt(fold_prompt, {"inputs": batch, "output": acc, "reduce_key": rk})
                 acc = backend.complete(rendered, output_schema, batch)
             if trace is not None:
-                import json as _json
-
-                trace.append(_json.dumps(acc, sort_keys=True, default=str))
+                trace.append(json.dumps(acc, sort_keys=True, default=str))
         return acc or {}
 
     def agg(pdf: pd.DataFrame) -> pd.DataFrame:

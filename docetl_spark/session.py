@@ -11,6 +11,17 @@ with N the CPUs this process may run on (``os.sched_getaffinity``), and
 a driver heap of half of physical memory (``MemTotal`` in
 ``/proc/meminfo``). ``$SPARK_GRAFT_CPUS`` and ``$SPARK_GRAFT_DRIVER_MEM``
 (a JVM size such as ``4g``) override either.
+
+Python workers fork from the engine's daemon, ``docetl_spark.worker_daemon``
+(``spark.python.daemon.module``). Each Python task starts with
+``importlib.invalidate_caches()``, which on CPython 3.11 makes every zip
+importer of the worker parse its archive's central directory again
+(pyspark.zip, the py4j zip, the spark-core jar): about 0.3 s of every
+task on 4 cores, paid once per model op, ``run_groups`` stage and code
+op. The daemon's importers re-read an archive only when its size or
+mtime changed. Workers must therefore be able to import ``docetl_spark``,
+which the engine's UDFs already need. ``extra_conf`` can name another
+daemon module.
 """
 
 from __future__ import annotations
@@ -67,6 +78,7 @@ def get_spark(
         .config("spark.driver.memory", _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "docetl_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -542,3 +542,49 @@ def test_map_error_quarantine_catches_noninteger_output(spark):
     assert out[0]["n"] == 7 and out[0]["_err"] == ""
     for bad in (1, 2, 3, 4):
         assert out[bad]["n"] is None and "declared int" in out[bad]["_err"], out[bad]
+
+
+def _judge_recorder(path):
+    """A backend that appends every judge prompt to ``path`` (the calls
+    run in Spark's Python workers) and never asks for improvement."""
+
+    class JudgeRecorder(FakeBackend):
+        def complete(self, prompt, output_schema, context):
+            if "needs_improvement" in output_schema:
+                with open(str(path), "a") as f:
+                    f.write(prompt + "\0")
+                return {"needs_improvement": False, "feedback": ""}
+            return {k: "OUT-" + str(len(str(context))) for k in output_schema}
+
+    return JudgeRecorder()
+
+
+def _judge_prompts(path):
+    return [p for p in path.read_text().split("\0") if p]
+
+
+@pytest.mark.parametrize("op", ["map", "reduce"])
+def test_gleaning_judge_sees_an_untemplated_output(spark, tmp_path, op):
+    """A validation prompt that does not template ``output`` still shows
+    the judge the output: it is appended, JSON-encoded."""
+    import json
+
+    log = tmp_path / "judge.txt"
+    sf = SemanticFrame.from_df(spark.createDataFrame([{"k": "a", "text": "hello"}]),
+                               backend=_judge_recorder(log))
+    glean = {"validation_prompt": "Is this good?", "num_rounds": 1}
+    if op == "map":
+        out = sf.map("summarize {{ input.text }}", {"s": "str"}, gleaning=glean).collect()
+    else:
+        out = sf.reduce("k", "sum up {{ inputs }}", {"s": "str"}, gleaning=glean).collect()
+    (prompt,) = _judge_prompts(log)
+    assert prompt.startswith("Is this good?")
+    assert json.dumps({"s": out[0]["s"]}) in prompt
+
+
+def test_gleaning_judge_prompt_that_templates_output_is_unchanged(spark, tmp_path):
+    log = tmp_path / "judge.txt"
+    sf = SemanticFrame.from_df(spark.createDataFrame([{"text": "hello"}]), backend=_judge_recorder(log))
+    out = sf.map("summarize {{ input.text }}", {"s": "str"},
+                 gleaning={"validation_prompt": "Is {{ output.s }} good?", "num_rounds": 1}).collect()
+    assert _judge_prompts(log) == [f"Is {out[0]['s']} good?"]

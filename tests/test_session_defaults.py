@@ -59,3 +59,15 @@ def test_get_spark_defaults_fit_the_host(monkeypatch):
     assert int(builder.conf["spark.sql.shuffle.partitions"]) == cores
     heap = _jvm_bytes(builder.conf["spark.driver.memory"])
     assert 0 < heap <= _mem_total_bytes()
+
+
+def test_get_spark_starts_workers_from_the_engine_daemon(monkeypatch):
+    builder = _RecordingBuilder()
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=builder))
+    session.get_spark("daemon-probe")
+    assert builder.conf["spark.python.daemon.module"] == "docetl_spark.worker_daemon"
+
+    builder = _RecordingBuilder()
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=builder))
+    session.get_spark("daemon-probe", extra_conf={"spark.python.daemon.module": "pyspark.daemon"})
+    assert builder.conf["spark.python.daemon.module"] == "pyspark.daemon"
