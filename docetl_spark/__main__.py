@@ -41,6 +41,8 @@ def cmd_run(args) -> int:
 
     with open(args.pipeline) as f:
         config = yaml.safe_load(f)
+    if args.output:
+        config.setdefault("pipeline", {})["output"] = {"path": args.output}
     backend = None
     if args.fake_backend:
         backend = FakeBackend()
@@ -65,12 +67,10 @@ def cmd_run(args) -> int:
         from .progress import render_table
 
         print(render_table(tracker.snapshot()))
-    path = args.output or (config.get("pipeline", {}).get("output") or {}).get("path")
+    path = (config.get("pipeline", {}).get("output") or {}).get("path")
     if path:
-        from .sources.readers import write_output
-
-        write_output(out.df, path)  # dispatches on extension (.json/.csv/.parquet)
-        print(f"wrote {out.df.count()} rows to {path}")  # served from the result's cache
+        # run_pipeline wrote it; the count is the one its last op observed
+        print(f"wrote {out.count()} rows to {path}")
     else:
         for row in out.df.limit(args.limit).collect():
             print(json.dumps(row.asDict(recursive=True), default=str))

@@ -529,7 +529,7 @@ class Pipeline:
         """Execute on Spark; returns the final step's SemanticFrame
         (reference run() returns the runner's result — here the frame IS
         the result). The run is eager: every op's output is computed
-        here, and the result stays persisted until the frame's
+        here, and the result stays checkpointed until the frame's
         ``.collect()`` or ``.release_caches()``."""
         from .plans.compiler import run_pipeline
         from .session import get_spark

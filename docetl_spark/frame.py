@@ -53,6 +53,29 @@ def _fn_or_code(fn, entry: str):
     raise ValueError(f"code op source must define transform() (or {entry}())")
 
 
+def unpersist(df: DataFrame, *, checkpoint: bool = True) -> str | None:
+    """Free the blocks ``df`` holds: its cache, or (with ``checkpoint``)
+    the local checkpoint its plan reads, a ``LogicalRDD`` leaf over a
+    persisted RDD such as ``run_pipeline`` leaves after every op.
+    Returns "cache", "checkpoint", or None when it held nothing. A frame
+    over a released cache recomputes its lineage; one over a released
+    checkpoint can no longer be computed."""
+    level = df.storageLevel
+    if level.useMemory or level.useDisk:
+        df.unpersist()
+        return "cache"
+    if not checkpoint:
+        return None
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        rdd = plan.rdd()
+        level = rdd.getStorageLevel()
+        if level.useMemory() or level.useDisk():
+            rdd.unpersist(False)
+            return "checkpoint"
+    return None
+
+
 # Optional keys whose default values are omitted from exported configs so
 # a fluent-built frame and its YAML replay serialize identically.
 _EXPORT_DEFAULTS = {
@@ -93,9 +116,12 @@ class SemanticFrame:
     # cached relations for the whole session (Spark's CacheManager never
     # evicts without unpersist/clearCache). The frame now carries them
     # here and ``collect()`` releases them after its memoizing
-    # materialization (see collect's docstring for the recompute
-    # trade-off); ``release_caches()`` is the explicit path.
+    # materialization (see ``release_caches`` for what a derived frame
+    # does then); ``release_caches()`` is the explicit path.
     _caches: tuple = field(default_factory=tuple, compare=False, repr=False)
+    # run_pipeline's result: the temp view over its checkpoint, which
+    # release_caches re-points when it releases that checkpoint
+    _view: str | None = field(default=None, compare=False, repr=False)
 
     # ------------------------------------------------------------ factory
     @classmethod
@@ -2140,12 +2166,9 @@ class SemanticFrame:
         of nested lists/dicts — can't corrupt the memo.
 
         ``release_caches`` (default True, r12): after the memoizing
-        materialization, unpersist the intermediates this frame's ops
-        pinned (``_caches``) — in a long-lived session they otherwise
-        accumulate until clearCache. Trade-off: a frame DERIVED from
-        this one after the release recomputes that lineage uncached
-        (derive first, collect last — or pass ``release_caches=False``
-        and call :meth:`release_caches` yourself)."""
+        materialization, release what this frame's ops pinned
+        (``_caches``, see :meth:`release_caches`) — in a long-lived
+        session it otherwise accumulates."""
         if "rows" not in self._memo:
             self._memo["rows"] = [r.asDict(recursive=True) for r in self.df.collect()]
         if release_caches:
@@ -2155,19 +2178,47 @@ class SemanticFrame:
         return copy.deepcopy(self._memo["rows"])
 
     def release_caches(self) -> int:
-        """Unpersist every intermediate this frame's ops pinned; returns
-        the number released. Idempotent (a released handle is skipped on
-        the next call); safe at any time — caches are a performance
-        artifact, never a correctness one."""
+        """Release every intermediate this frame's ops pinned; returns
+        the number released. Idempotent: a released handle is skipped on
+        the next call. A cache is released by any frame that carries it,
+        so collecting a derived frame frees its source's caches too (the
+        source then recomputes).
+
+        ``run_pipeline``'s checkpoint of its result is released only by
+        the result itself. If ``collect()`` ran, ``df`` and the last
+        step's temp view then read the collected rows, so a frame derived
+        afterwards keeps computing, with no model call; without them the
+        view is dropped and ``df`` can no longer be computed. A frame
+        derived BEFORE the release keeps reading the released blocks and
+        its action fails (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``): derive
+        first and collect last, or pass ``collect(release_caches=False)``
+        and release yourself."""
         n = 0
         for c in self._caches:
             try:
-                if c.storageLevel.useMemory or c.storageLevel.useDisk:
-                    c.unpersist()
-                    n += 1
+                kind = unpersist(c, checkpoint=c is self.df)
+                if kind == "checkpoint":
+                    self._serve_memo(c)
             except Exception:  # pragma: no cover — a dead session etc.
-                pass
+                continue
+            n += kind is not None
         return n
+
+    def _serve_memo(self, released: DataFrame) -> None:
+        """After the result's checkpoint is released: read ``df`` (and
+        the step's view, unless it was replaced since) from the collected
+        rows; without them, drop the view."""
+        spark = released.sparkSession
+        view = self._view
+        ours = bool(view) and spark.catalog.tableExists(view) \
+            and spark.table(view).sameSemantics(released)
+        if "rows" in self._memo:
+            df = spark.createDataFrame(self._memo["rows"], released.schema)
+            object.__setattr__(self, "df", df)
+            if ours:
+                df.createOrReplaceTempView(view)
+        elif ours:
+            spark.catalog.dropTempView(view)
 
     def show(self, n: int = 5, truncate: bool = True):
         return self.df.show(n, truncate=truncate)
@@ -2175,6 +2226,8 @@ class SemanticFrame:
     def count(self) -> int:
         if "rows" in self._memo:
             return len(self._memo["rows"])
+        if "count" in self._memo:  # observed when run_pipeline materialized it
+            return self._memo["count"]
         return self.df.count()
 
     def to_pandas(self):

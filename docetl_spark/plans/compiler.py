@@ -3,9 +3,10 @@
 Reference lifecycle: /root/reference/docetl/runner.py:187-224 (config ->
 plan -> rewrite -> lower), containers.py:549-604 (physical DAG). Here
 the "physical DAG" is the DataFrame lineage itself: each step compiles
-scan -> ops, each op's output persisted and counted before the next op
-runs (and stored as a checkpoint when one is configured), and step
-outputs are registered as temp views for later steps (containers.py:514).
+scan -> ops, each op's output materialized as a local checkpoint before
+the next op runs (and stored as a Checkpointer checkpoint when one is
+configured), and step outputs are registered as temp views for later
+steps (containers.py:514).
 
 Each op runs as ``getattr(sf, verb)(**config)``: ``ir.OP_TYPES`` names
 the verb and lists what differs from "each key is the verb's parameter"
@@ -20,10 +21,12 @@ trusted-config execution model, same as the reference.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from dataclasses import replace
+
+from pyspark.sql import Observation, SparkSession, functions as F
 
 from ..backend import FakeBackend, ModelBackend
-from ..frame import SemanticFrame
+from ..frame import SemanticFrame, unpersist
 from ..progress import ProgressTracker, active_tracker, render_line
 from .ir import OP_TYPES, OpSpec, lift, lower
 from .rewrite import rewrite
@@ -32,8 +35,6 @@ from .rewrite import rewrite
 def _expr_aggs(aggs: dict) -> dict:
     """YAML aggregate encoding -> Column dict: values are SQL expression
     strings (``{"n": "count(1)", "cents": "sum(_cents)"}``)."""
-    from pyspark.sql import functions as F
-
     if not isinstance(aggs, dict) or not all(isinstance(v, str) for v in aggs.values()):
         raise ValueError(
             "YAML aggs must be a {name: 'sql expression'} mapping, got "
@@ -144,16 +145,24 @@ def run_pipeline(
 
     Returns the final step's SemanticFrame; writes output if configured.
 
-    Each op's output is persisted (evictable MEMORY_AND_DISK) and
-    counted once before the next op runs, like the reference, whose ops
-    each return a full list. The eager jobs inside resolve, equijoin and
-    blocking then read that output instead of recomputing the model
-    stages above it, so a model call happens once per row per op. An
-    op's output is released once its successor is counted; each step's
-    output stays pinned for later steps until the run ends. Only the
-    result stays pinned after that, until the returned frame's
-    ``collect()`` / ``release_caches()``. A checkpoint hit takes the
-    same per-op path as a miss.
+    Each op's output is materialized once before the next op runs, like
+    the reference, whose ops each hand the next a full list with no
+    lineage: one eager ``localCheckpoint`` (blocks kept MEMORY_AND_DISK
+    by the executors), with the row count observed on that same job.
+    The next op's plan starts at that checkpoint, a leaf, so plans do
+    not grow with the pipeline, and the eager jobs inside resolve,
+    equijoin and blocking never recompute the model stages above it: a
+    model call happens once per row per op. An op's output is released
+    once its successor is materialized. Each step's output is
+    registered as a temp view named after the step. When the run ends,
+    the output of a step that the next step continued (it has no
+    ``input``) is released and its view dropped, like an op's output
+    inside a step; the other step outputs stay readable through their
+    views while those exist. The result's checkpoint is released by the
+    returned frame's ``collect()`` / ``release_caches()``, after which
+    its ``df`` and view read the collected rows; its ``count()`` is the
+    observed count. A checkpoint hit takes the same per-op path as a
+    miss.
 
     ``progress`` and ``tracker`` only report. ``progress`` (False | True
     | callable) emits ``progress.render_line`` for each op as it
@@ -215,11 +224,15 @@ def run_pipeline(
 
     optimize_cfg = config.get("optimize")
     last: SemanticFrame | None = None
+    last_name: str | None = None
     rewrites_fired: list[str] = []
-    step_outputs = []  # persisted step outputs, kept until the last step is counted
+    step_outputs = {}  # step name -> its output's checkpoint
+    continued = set()  # steps whose output the next step continues (it has no `input`)
     dataset_configs = config.get("datasets", {})
     for step in config["pipeline"]["steps"]:
         sf = datasets[step["input"]] if "input" in step else last
+        if "input" not in step:
+            continued.add(last_name)
         if checkpointer is not None:
             # input token: the dataset's declared config (path/data) when
             # the step reads a named dataset, else the upstream step name
@@ -371,19 +384,24 @@ def run_pipeline(
                 sf = apply_op(sf, spec, datasets)
                 if checkpointer is not None:
                     sf = checkpointer.store(sf)
-            sf.df.persist()
-            tracker.op_done(name, out_count=sf.df.count())
+            # one job: the next op reads a LogicalRDD leaf, and the row
+            # count is observed on that same job
+            o = Observation()
+            df = sf.df.observe(o, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+            rows = o.get["rows"]
+            sf = replace(sf, df=df, _memo={"count": rows})
+            tracker.op_done(name, out_count=rows)
             if emit is not None:
                 emit(render_line(tracker.snapshot().get(name)))
             if prev is not None:
-                prev.unpersist()
+                unpersist(prev)
             prev = sf.df
         if prev is not None:
-            step_outputs.append(prev)
+            step_outputs[step["name"]] = prev
         # step boundary: register output as a named dataset (containers.py:514)
         datasets[step["name"]] = sf
         sf.df.createOrReplaceTempView(step["name"])
-        last = sf
+        last, last_name = sf, step["name"]
 
     out = config["pipeline"].get("output")
     # empty path = "return the frame, write nothing" (the typed API's
@@ -399,13 +417,19 @@ def run_pipeline(
     if last is None:
         raise ValueError("pipeline has no steps")
     tracker.pipeline_done()
-    # later steps are done with the earlier step outputs; only the
-    # result stays pinned, until last.collect() / release_caches()
-    for df in step_outputs:
-        if df is not last.df:
-            df.unpersist()
-    pinned = tuple(df for df in step_outputs if df is last.df)
-    object.__setattr__(last, "_caches", last._caches + pinned)
+    # a step output the next step continued is a link in one chain, like
+    # an op's output inside a step: released, its view dropped. The other
+    # step outputs stay readable through their views: the result until
+    # last.collect() / release_caches(), the rest as long as their view
+    # (Spark frees the blocks once a replaced view no longer references
+    # them)
+    for name, df in step_outputs.items():
+        if name in continued and df is not last.df:
+            unpersist(df)
+            spark.catalog.dropTempView(name)
+    if step_outputs.get(last_name) is last.df:
+        object.__setattr__(last, "_caches", last._caches + (last.df,))
+        object.__setattr__(last, "_view", last_name)
     object.__setattr__(last, "op_log", last.op_log + (("rewrites", {"fired": rewrites_fired}),))
     if validation_notes:
         object.__setattr__(last, "op_log", last.op_log + (("validation", tuple(validation_notes)),))

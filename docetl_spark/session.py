@@ -19,9 +19,11 @@ importer of the worker parse its archive's central directory again
 (pyspark.zip, the py4j zip, the spark-core jar): about 0.3 s of every
 task on 4 cores, paid once per model op, ``run_groups`` stage and code
 op. The daemon's importers re-read an archive only when its size or
-mtime changed. Workers must therefore be able to import ``docetl_spark``,
-which the engine's UDFs already need. ``extra_conf`` can name another
-daemon module.
+mtime changed. Workers import ``docetl_spark`` from the directory that
+holds it: ``get_spark`` appends that directory to
+``spark.executorEnv.PYTHONPATH``, after any value ``extra_conf`` gives,
+so a driver started outside the repo needs no ``PYTHONPATH``.
+``extra_conf`` can name another daemon module.
 """
 
 from __future__ import annotations
@@ -32,6 +34,10 @@ import re
 from pyspark.sql import SparkSession
 
 from .sources.readers import read_parquet
+
+
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_cores() -> int:
@@ -80,7 +86,14 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.daemon.module", "docetl_spark.worker_daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # workers import docetl_spark (the daemon, every engine UDF) from the
+    # directory that holds it, wherever the driver was started
+    paths = [p for p in conf.get(_WORKER_PATH, "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        paths.append(_PACKAGE_ROOT)
+    conf[_WORKER_PATH] = os.pathsep.join(paths)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -71,3 +71,14 @@ def test_get_spark_starts_workers_from_the_engine_daemon(monkeypatch):
     monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=builder))
     session.get_spark("daemon-probe", extra_conf={"spark.python.daemon.module": "pyspark.daemon"})
     assert builder.conf["spark.python.daemon.module"] == "pyspark.daemon"
+
+
+def test_get_spark_puts_the_package_on_the_workers_path(monkeypatch):
+    root = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
+    key, sep = "spark.executorEnv.PYTHONPATH", os.pathsep
+    for given, expected in [(None, root), (f"/srv/a{sep}/srv/b", f"/srv/a{sep}/srv/b{sep}{root}"),
+                            (f"{root}{sep}/srv/a", f"{root}{sep}/srv/a")]:
+        builder = _RecordingBuilder()
+        monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=builder))
+        session.get_spark("path-probe", extra_conf={key: given} if given else None)
+        assert builder.conf[key] == expected

@@ -114,3 +114,25 @@ def test_a_killed_worker_is_replaced_and_its_task_retried(tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert marker.exists(), "no worker died: the test did not exercise the retry"
     assert json.loads(proc.stdout.splitlines()[-1]) == [[x, 2 * x] for x in range(10)]
+
+
+_OUTSIDE_THE_REPO = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from docetl_spark import get_spark
+
+spark = get_spark("outside", master="local[2]")
+print(spark.sparkContext.parallelize([1, 2, 3], 2).map(lambda x: x * 10).collect())
+spark.stop()
+"""
+
+
+def test_workers_import_the_engine_from_a_driver_started_elsewhere(tmp_path):
+    # the driver finds the package through sys.path alone: no PYTHONPATH,
+    # and a working directory outside the repo
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run([sys.executable, "-c", _OUTSIDE_THE_REPO, str(REPO)],
+                          capture_output=True, text=True, cwd=str(tmp_path), env=env,
+                          timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.splitlines()[-1] == "[10, 20, 30]"
