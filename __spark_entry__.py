@@ -614,7 +614,7 @@ def resolve_limited_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     return candidate_pairs(
         docs, "doc_id", blocking_keys=["lang"], limit_comparisons=500,
-    )
+    ).select("id_a", "id_b")
 
 
 def equijoin_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:

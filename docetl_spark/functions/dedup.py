@@ -295,11 +295,15 @@ def connected_components(
     """Component id = min reachable vertex id. Returns (id_col, component).
 
     edges: (id_a, id_b); vertices: df with id_col, or ``None`` to label
-    only the edge endpoints (callers then coalesce component to the id
-    for isolated vertices). ``None`` matters when the edge lineage is
-    expensive (LSH + verify): the local path already holds every
-    endpoint in the collected sample, so enumerating them from the
-    DataFrame would re-run the whole candidate pipeline a second time.
+    only the edge endpoints. Callers that coalesce component to the id
+    for isolated vertices pass ``None`` (resolve, near-dup clustering):
+    the local path then returns the driver-side label table itself, a
+    LocalRelation that a join broadcasts without a Spark job, where
+    ``vertices`` costs a join over the vertex frame. ``None`` also
+    matters when the edge lineage is expensive (LSH + verify): the
+    local path already holds every endpoint in the collected sample, so
+    enumerating them from the DataFrame would re-run the whole
+    candidate pipeline a second time.
 
     Two physical strategies:
     - edge sets under ``local_edge_gate`` (the overwhelmingly common

@@ -10,8 +10,14 @@ Reference semantics: /root/reference/docetl/operations/equijoin.py:63-684
 
 Spark realization: blocking compiles to real joins — exact conditions
 become equi-join keys (hash/broadcast picked by Catalyst + AQE),
-similarity blocking becomes an LSH-bucket equi-join; adjudication is an
-Arrow-batched UDF over the pruned pair table; per-side limits are
+similarity blocking becomes an LSH-bucket equi-join. Each pair leaves
+its blocking join carrying both rows' payload (``_l_*`` / ``_r_*``
+next to the ``_lk_*`` / ``_rk_*`` keys), so each left x right row pair
+is compared once even under a repeated key; sources that produce keys
+only (LSH banding, the per-bucket ``limit_comparisons`` path) get the
+payload attached once, by key, and there ``left_keys`` / ``right_keys``
+must identify rows. Adjudication is an Arrow-batched UDF over the pair
+table as it is, emitting matched rows itself; per-side limits are
 row_number windows.
 """
 
@@ -80,7 +86,12 @@ def stratified_limit_pairs(
     Scale shape: one aggregation pass over the pair table for
     (count, avg lengths, distinct keys), then a single window shuffle
     partitioned by the stratum key. No driver-side pair materialization.
+
+    Every column of ``pairs`` but the lengths comes through, so a pair
+    keeps the payload it carries. Strata and counterpart order are by
+    key: ``left_keys`` / ``right_keys`` must identify rows.
     """
+    keep = [c for c in pairs.columns if c not in ("_l_len", "_r_len")]
     if "_l_len" in pairs.columns and "_r_len" in pairs.columns:
         # lengths already rode the blocking join (the caller projected
         # them into the pair shuffle) — no re-join against the sides
@@ -112,7 +123,7 @@ def stratified_limit_pairs(
     ).first()
     if stats["n"] is None or stats["n"] <= limit_comparisons:
         plen.unpersist()
-        return pairs.drop("_l_len", "_r_len")
+        return pairs.select(*keep)
     logging.getLogger(__name__).warning(
         "equijoin: %d blocked pairs exceed limit_comparisons=%d; "
         "dropping %d via stratified length sampling",
@@ -152,8 +163,8 @@ def stratified_limit_pairs(
             .withColumn("_quota", F.lit(base) + F.when(F.col("_gidx") <= extra, 1).otherwise(0))
             .filter(F.col("_rn") <= F.col("_quota"))
         )
-    out = out.select(*[f"_lk_{k}" for k in left_keys], *[f"_rk_{k}" for k in right_keys])
-    # materialize the surviving pair keys (<= limit_comparisons rows by
+    out = out.select(*keep)
+    # materialize the surviving pairs (<= limit_comparisons rows by
     # construction) so the big pair table's cache can be RELEASED now —
     # returning a lazy child of plen would pin its storage for the whole
     # session (the leak shows up as evicted neighbors in long sessions)
@@ -397,8 +408,11 @@ def equijoin(
     comparison_model: str | None = None,
     embedding_model: str | None = None,
 ) -> DataFrame:
-    """Fuzzy join. ``left_keys``/``right_keys`` identify rows for limit
-    windows and deterministic ordering. ``blocking_conditions`` are SQL
+    """Fuzzy join. ``left_keys``/``right_keys`` order and partition the
+    limit windows, and on the paths whose pairs come back by key
+    (embedding-threshold blocking, ``limit_comparisons``) they must
+    identify rows: there the payload is attached, and the budget
+    stratified, by key. ``blocking_conditions`` are SQL
     exprs over ``left.``/``right.``-prefixed columns (the reference's
     eval'd Python predicates, recast as Catalyst expressions so exact
     equalities become hash-join keys).
@@ -477,17 +491,27 @@ def equijoin(
     if carry_lens:
         lw = lw.withColumn("_l_len", _doc_len(lw, exclude={"_emb_l", "_emb_r"}))
         rw = rw.withColumn("_r_len", _doc_len(rw, exclude={"_emb_l", "_emb_r"}))
+    lcols = list(left.columns)
+    rcols = list(right.columns)
+    lk = [f"_lk_{k}" for k in left_keys]
+    rk = [f"_rk_{k}" for k in right_keys]
     a = lw.alias("left")
     b = rw.alias("right")
-    pair_parts: list[DataFrame] = []
-    lsel = [F.col(f"left.{k}").alias(f"_lk_{k}") for k in left_keys]
-    rsel = [F.col(f"right.{k}").alias(f"_rk_{k}") for k in right_keys]
+    # a pair out of a join of the rows carries both rows' payload from
+    # that join: adjudication reads the pair table as it is
+    row_pair = [
+        *[F.col(f"left.{k}").alias(f"_lk_{k}") for k in left_keys],
+        *[F.col(f"right.{k}").alias(f"_rk_{k}") for k in right_keys],
+        *[F.col(f"left.{c}").alias(f"_l_{c}") for c in lcols],
+        *[F.col(f"right.{c}").alias(f"_r_{c}") for c in rcols],
+    ]
     if carry_lens:
-        lsel = lsel + [F.col("left._l_len").alias("_l_len")]
-        rsel = rsel + [F.col("right._r_len").alias("_r_len")]
+        row_pair += [F.col("left._l_len").alias("_l_len"), F.col("right._r_len").alias("_r_len")]
+    rows: list[DataFrame] = []
+    keyed: list[DataFrame] = []  # (_lk_*, _rk_*) only
 
     if fast_equi is not None:
-        pair_parts.append(
+        keyed.append(
             bucketed_stratified_pairs(
                 lw, rw, left_keys, right_keys, fast_equi[0], fast_equi[1],
                 limit_comparisons, exclude_cols={"_emb_l", "_emb_r"},
@@ -498,13 +522,13 @@ def equijoin(
         for expr in blocking_conditions:
             c = F.expr(expr)
             ors = c if ors is None else (ors | c)
-        pair_parts.append(a.join(b, ors).select(*lsel, *rsel))
+        rows.append(a.join(b, ors).select(*row_pair))
 
     if blocking_threshold is not None:
         # banded sign-LSH OR-amplification: recall at the threshold meets
         # blocking_target_recall by construction (a single 8-plane bucket
         # equi-join misses near-threshold pairs that disagree on any bit)
-        pair_parts.append(
+        keyed.append(
             banded_candidate_pairs_two_sided(
                 lw, rw, left_keys, right_keys, l_emb, r_emb,
                 threshold=float(blocking_threshold),
@@ -516,7 +540,7 @@ def equijoin(
             )
         )
 
-    if not pair_parts:
+    if not rows and not keyed:
         # no blocking: all pairs. The reference allows this for tiny
         # inputs only (equijoin.py:318-330 warns past 100 rows); gate on
         # early-stopping counts so a missing blocking config fails fast
@@ -531,15 +555,27 @@ def equijoin(
                 "an unblocked equijoin is O(n*m) comparisons. Configure "
                 "blocking_conditions or blocking_threshold."
             )
-        pair_parts.append(a.join(b).select(*lsel, *rsel))  # tiny-input fallback
+        rows.append(a.join(b).select(*row_pair))  # tiny-input fallback
 
-    pairs = pair_parts[0]
-    for p in pair_parts[1:]:
+    n_sources = len(rows) + len(keyed)
+    if keyed:
+        # key-only sources get both rows' payload once, by key — the
+        # paths where left_keys / right_keys must identify rows
+        kp = keyed[0]
+        for p in keyed[1:]:
+            kp = kp.unionByName(p)
+        lfull = lw.select(*[F.col(k).alias(f"_lk_{k}") for k in left_keys],
+                          *[F.col(c).alias(f"_l_{c}") for c in lcols])
+        rfull = rw.select(*[F.col(k).alias(f"_rk_{k}") for k in right_keys],
+                          *[F.col(c).alias(f"_r_{c}") for c in rcols])
+        rows.append(kp.join(lfull, lk).join(rfull, rk))
+    pairs = rows[0]
+    for p in rows[1:]:
         pairs = pairs.unionByName(p)
-    if len(pair_parts) > 1:
+    if n_sources > 1:
         # dedup only when strategies were unioned — a single blocking
         # join cannot emit duplicate pairs, and this is a full shuffle
-        pairs = pairs.dropDuplicates()
+        pairs = pairs.dropDuplicates(lk + rk)
     if limit_comparisons is not None and fast_equi is None:
         # the cost-control knob (equijoin.py:397-421): every pair kept
         # here is an LLM call later, so cap BEFORE adjudication (the
@@ -557,8 +593,8 @@ def equijoin(
         # folding it into one pass avoids two extra full-table scans.
         stats = pairs.agg(
             F.count(F.lit(1)).alias("n_pairs"),
-            F.countDistinct(*[f"_lk_{k}" for k in left_keys]).alias("n_l"),
-            F.countDistinct(*[f"_rk_{k}" for k in right_keys]).alias("n_r"),
+            F.countDistinct(*lk).alias("n_l"),
+            F.countDistinct(*rk).alias("n_r"),
         ).first()
         total = (stats["n_l"] or 0) * (stats["n_r"] or 0)
         saved = 100.0 * (1 - stats["n_pairs"] / total) if total else 0.0
@@ -567,43 +603,24 @@ def equijoin(
             stats["n_pairs"], total, saved,
         )
 
-    # adjudicate: join compare columns in, call backend per pair. The
-    # full payload rides INTO the Python stage anyway (the prompt needs
-    # it), so matching rows emit it back out with collision suffixes —
-    # re-assembling via two more joins against the base tables costs two
-    # extra shuffle/broadcast joins for data Arrow already holds
-    # (r5 spot-tightening of equijoin_limited). Trade-off: Arrow-OUT
-    # bytes grow with match count x row width, vs the old keys-only
-    # output + 2 joins; matches are a blocking-bounded subset of pairs
-    # and the payload already paid the Arrow-IN cost, so emitting is
-    # cheaper than re-shuffling both base tables in every regime where
-    # the join sides aren't broadcast-small.
-    lcols = [c for c in left.columns]
-    rcols = [c for c in right.columns]
-    lfull = lw.select(*[F.col(k).alias(f"_lk_{k}") for k in left_keys],
-                      *[F.col(c).alias(f"_l_{c}") for c in lcols])
-    rfull = rw.select(*[F.col(k).alias(f"_rk_{k}") for k in right_keys],
-                      *[F.col(c).alias(f"_r_{c}") for c in rcols])
-    joined = pairs.join(lfull, [f"_lk_{k}" for k in left_keys]).join(
-        rfull, [f"_rk_{k}" for k in right_keys]
-    )
+    # adjudicate: the full payload rides INTO the Python stage anyway
+    # (the prompt needs it), so matching rows emit it back out with
+    # collision suffixes — no join above the adjudication
     # broadcast-join outputs inherit the scan's few partitions; spread the
     # Python adjudication across the full executor pool
     par = left.sparkSession.sparkContext.defaultParallelism or 8
-    joined = joined.repartition(par)
+    joined = pairs.repartition(par)
 
     collisions = set(lcols) & set(rcols)
     l_out = {c: (f"{c}_left" if c in collisions else c) for c in lcols}
     r_out = {c: (f"{c}_right" if c in collisions else c) for c in rcols}
-    key_fields = [joined.schema[f"_lk_{k}"] for k in left_keys] + [
-        joined.schema[f"_rk_{k}"] for k in right_keys
-    ]
+    key_fields = [joined.schema[c] for c in lk + rk]
     payload_fields = [
         T.StructField(l_out[c], left.schema[c].dataType, True) for c in lcols
     ] + [T.StructField(r_out[c], right.schema[c].dataType, True) for c in rcols]
     out_schema = T.StructType(list(key_fields) + payload_fields)
     names = out_schema.fieldNames()
-    key_names = [f"_lk_{k}" for k in left_keys] + [f"_rk_{k}" for k in right_keys]
+    key_names = lk + rk
 
     threshold = float(cascade.get("proxy_threshold", 1.0)) if cascade else None
 

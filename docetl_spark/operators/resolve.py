@@ -16,10 +16,15 @@ Spark realization (scale posture, SURVEY.md §7.4):
 - candidate generation is LSH-bucketed (random hyperplanes) by default —
   an equi-join on bucket id, never the reference's O(n^2) cosine matrix
   (resolve.py:500-518, deliberately not replicated);
-- pairwise adjudication is a pandas UDF over the (pruned) pair table;
+- every pair leaves its blocking source carrying both rows' compare
+  payload (``_a_*`` / ``_b_*``), so pairwise adjudication, one
+  ``mapInPandas`` stage, reads the pair table without a join back to
+  the input;
 - clustering = driver union-find over the collected match edges, or
   iterative min-label propagation past the edge gate (connected
-  components);
+  components); the label table covers matched ids only and is joined
+  straight onto the input (on the driver path a LocalRelation,
+  broadcast without a job), an unmatched row labelling itself;
 - canonicalization without ``resolution_prompt`` is a SQL majority vote,
   ``mode`` over a window on the cluster id; with it, one model call per
   cluster through ``semantic.run_groups`` (a task's clusters in flight
@@ -109,6 +114,7 @@ def candidate_pairs(
     df: DataFrame,
     id_col: str,
     *,
+    compare_cols: list[str] | None = None,
     blocking_keys: list[str] | None = None,
     blocking_threshold: float | None = None,
     blocking_conditions: list[str] | None = None,
@@ -131,8 +137,16 @@ def candidate_pairs(
     predicates (SQL exprs over ``a.``/``b.`` prefixed columns),
     (d) ``sorted_neighborhood={"key": <sql expr>, "window": N}`` —
     classic rank-window blocking (see sorted_neighborhood_pairs).
-    Returns (id_a, id_b), id_a < id_b. ``n_planes`` is the per-band
-    plane count (selectivity: each band has 2^n_planes buckets).
+    ``n_planes`` is the per-band plane count (selectivity: each band
+    has 2^n_planes buckets).
+
+    Returns (id_a, id_b, _a_<c>..., _b_<c>...), id_a < id_b: each pair
+    carries both rows' ``compare_cols`` (default: every column but
+    ``id_col``), the table ``adjudicate_pairs`` reads as it is. The
+    strategies that join rows (key equality, conditions, the unblocked
+    fallback) project the payload out of that join; the id-only ones
+    (LSH banding, sorted neighbourhood) get it attached once, by id,
+    after their union. ``id_col`` identifies rows.
 
     ``limit_comparisons`` caps the pair count (reference
     resolve.py:526-547: code-blocked pairs prioritized, the remainder
@@ -147,12 +161,23 @@ def candidate_pairs(
     quadratic pair table the global cut would then throw away — the
     100-TB guard, logged loudly when it fires.
     """
+    cols = [c for c in df.columns if c != id_col] if compare_cols is None else list(compare_cols)
+    payload = [f"_a_{c}" for c in cols] + [f"_b_{c}" for c in cols]
     a = df.alias("a")
     b = df.alias("b")
     lt = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    parts: list[DataFrame] = []
-    srcs: list[int] = []  # 0 = code-blocked (prioritized), 1 = embedding
+    row_pair = [
+        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"),
+        *[F.col(f"a.{c}").alias(f"_a_{c}") for c in cols],
+        *[F.col(f"b.{c}").alias(f"_b_{c}") for c in cols],
+    ]
+    rows: list[DataFrame] = []  # pairs out of a join of the rows: payload in hand
+    ids: list[DataFrame] = []  # (id_a, id_b) only
     log = logging.getLogger(__name__)
+
+    def add(to: list[DataFrame], part: DataFrame, src: int) -> None:
+        # src 0 = code-blocked (prioritized by the budget cut), 1 = embedding
+        to.append(part if limit_comparisons is None else part.withColumn("_src", F.lit(src)))
 
     if blocking_keys:
         if limit_comparisons is not None:
@@ -174,6 +199,7 @@ def candidate_pairs(
                     F.lower(F.col(k).cast("string")).alias(c)
                     for k, c in zip(blocking_keys, bcols)
                 ],
+                *cols,
             )
             over = (
                 base.groupBy(*bcols).count().agg(
@@ -196,12 +222,12 @@ def candidate_pairs(
                 [F.col("_cph").asc(), F.col(id_col).asc()], K,
                 salt_cols=[id_col],
             )
-            ca = capped.select(F.col(id_col).alias("id_a"), *bcols)
-            cb = capped.select(F.col(id_col).alias("id_b"), *bcols)
-            parts.append(
-                ca.join(cb, bcols).filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b")
-            )
+            ca = capped.select(F.col(id_col).alias("id_a"), *bcols,
+                               *[F.col(c).alias(f"_a_{c}") for c in cols])
+            cb = capped.select(F.col(id_col).alias("id_b"), *bcols,
+                               *[F.col(c).alias(f"_b_{c}") for c in cols])
+            add(rows, ca.join(cb, bcols).filter(F.col("id_a") < F.col("id_b"))
+                .select("id_a", "id_b", *payload), 0)
         else:
             # case-insensitive key equality, matching adjudicate_pairs'
             # auto_match_keys predicate and the reference (resolve.py:216-223)
@@ -210,26 +236,21 @@ def candidate_pairs(
                 cond = cond & (
                     F.lower(F.col(f"a.{k}").cast("string")) == F.lower(F.col(f"b.{k}").cast("string"))
                 )
-            parts.append(a.join(b, cond).select(
-                F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")))
-        srcs.append(0)
+            add(rows, a.join(b, cond).select(*row_pair), 0)
 
     if blocking_threshold is not None:
         emb = embedding_col
         if emb is None:
             raise ValueError("blocking_threshold requires an embedding column (embed_column first)")
-        parts.append(
-            banded_candidate_pairs(
-                df.select(id_col, emb), id_col, emb,
-                threshold=float(blocking_threshold),
-                rows_per_band=n_planes,
-                target_recall=target_recall,
-                bands=bands,
-                seed=lsh_seed,
-                dim=dim,
-            )
-        )
-        srcs.append(1)
+        add(ids, banded_candidate_pairs(
+            df.select(id_col, emb), id_col, emb,
+            threshold=float(blocking_threshold),
+            rows_per_band=n_planes,
+            target_recall=target_recall,
+            bands=bands,
+            seed=lsh_seed,
+            dim=dim,
+        ), 1)
 
     if blocking_conditions:
         cond = lt
@@ -237,15 +258,12 @@ def candidate_pairs(
         for expr in blocking_conditions:
             c = F.expr(expr)
             ors = c if ors is None else (ors | c)
-        parts.append(a.join(b, cond & ors).select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")))
-        srcs.append(0)
+        add(rows, a.join(b, cond & ors).select(*row_pair), 0)
 
     if sorted_neighborhood:
-        parts.append(sorted_neighborhood_pairs(df, id_col, **sorted_neighborhood))
-        srcs.append(0)
+        add(ids, sorted_neighborhood_pairs(df, id_col, **sorted_neighborhood), 0)
 
-    if not parts:
+    if not rows and not ids:
         # no blocking configured: all pairs. The reference allows this for
         # tiny inputs only (equijoin.py:318-330 warns past 100 rows); we
         # gate the cross join on a row count so a missing blocking config
@@ -258,31 +276,39 @@ def candidate_pairs(
                 "comparisons. Configure blocking_keys, blocking_threshold "
                 "(embedding similarity), or blocking_conditions."
             )
-        parts.append(a.join(b, lt).select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")))
-        srcs.append(0)
+        add(rows, a.join(b, lt).select(*row_pair), 0)
+
+    n_sources = len(rows) + len(ids)
+    if ids:
+        id_pairs = ids[0]
+        for p in ids[1:]:
+            id_pairs = id_pairs.unionByName(p)
+        side = df.select(F.col(id_col), *cols)
+        rows.append(
+            id_pairs
+            .join(side.select(F.col(id_col).alias("id_a"), *[F.col(c).alias(f"_a_{c}") for c in cols]), "id_a")
+            .join(side.select(F.col(id_col).alias("id_b"), *[F.col(c).alias(f"_b_{c}") for c in cols]), "id_b")
+        )
+    out = rows[0]
+    for p in rows[1:]:
+        out = out.unionByName(p)
 
     if limit_comparisons is None:
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        if len(parts) > 1:
+        if n_sources > 1:
             out = out.dropDuplicates(["id_a", "id_b"])
-        return out
+        return out.select("id_a", "id_b", *payload)
 
     # deterministic budget cut (reference resolve.py:526-547, made
     # replayable): dedup keeps the highest-priority source per pair,
     # then the global top-``limit`` by (source, md5, ids) — all code
     # pairs sort before any embedding pair, so "code pairs first, fill
     # the rest from embedding" falls out of one distributed rank
-    out = parts[0].withColumn("_src", F.lit(srcs[0]))
-    for p, sc in zip(parts[1:], srcs[1:]):
-        out = out.unionByName(p.withColumn("_src", F.lit(sc)))
-    if len(parts) > 1:
-        out = out.groupBy("id_a", "id_b").agg(F.min("_src").alias("_src"))
+    if n_sources > 1:
+        out = out.groupBy("id_a", "id_b").agg(
+            F.min("_src").alias("_src"), *[F.first(c).alias(c) for c in payload])
     n_pairs = out.count()
     if n_pairs <= limit_comparisons:
-        return out.select("id_a", "id_b")
+        return out.select("id_a", "id_b", *payload)
     log.warning(
         "resolve: %d blocked pairs exceed limit_comparisons=%d; keeping a "
         "deterministic md5-ordered sample (code-blocked pairs first)",
@@ -298,23 +324,23 @@ def candidate_pairs(
          F.col("id_a").asc(), F.col("id_b").asc()],
         "_grn",
     )
-    return ranked.filter(F.col("_grn") <= limit_comparisons).select("id_a", "id_b")
+    return ranked.filter(F.col("_grn") <= limit_comparisons).select("id_a", "id_b", *payload)
 
 
 def adjudicate_pairs(
     pairs: DataFrame,
-    df: DataFrame,
-    id_col: str,
     comparison_prompt: str,
     backend: ModelBackend,
     *,
-    compare_cols: list[str] | None = None,
     auto_match_keys: list[str] | None = None,
     cascade: dict | None = None,
 ) -> DataFrame:
     """LLM pairwise is_match over candidate pairs (resolve.py:194-242).
-    The backend sees ``{{ input1 }}`` / ``{{ input2 }}`` and a 2-tuple
-    context; FakeBackend's default bool rule is normalized equality.
+    ``pairs`` is ``candidate_pairs``' table, read as it is: the prompt
+    sees each row's ``_a_<c>`` / ``_b_<c>`` payload as ``{{ input1 }}``
+    / ``{{ input2 }}``, the backend a 2-tuple context; FakeBackend's
+    default bool rule is normalized equality. Returns the matching
+    (id_a, id_b).
 
     ``auto_match_keys``: pairs whose values for ALL these keys are
     case-insensitively equal are matched WITHOUT a backend call
@@ -326,14 +352,10 @@ def adjudicate_pairs(
     labels each pair first; only pairs whose proxy confidence falls below
     ``p`` escalate to the full completion (the reference runs the same
     proxy/oracle cascade on resolve comparisons, cascade_runner.py)."""
-    cols = compare_cols or [c for c in df.columns if c != id_col]
-    side = df.select(F.col(id_col), *cols)
-    a = side.select(F.col(id_col).alias("id_a"), *[F.col(c).alias(f"_a_{c}") for c in cols])
-    b = side.select(F.col(id_col).alias("id_b"), *[F.col(c).alias(f"_b_{c}") for c in cols])
-    joined = pairs.join(a, "id_a").join(b, "id_b")
-    # spread the pairwise UDF across the executor pool (broadcast joins
-    # keep the scan partitioning, which may be far narrower)
-    joined = joined.repartition(df.sparkSession.sparkContext.defaultParallelism or 8)
+    cols = [c[3:] for c in pairs.columns if c.startswith("_a_")]
+    # spread the pairwise UDF across the executor pool (the blocking
+    # join's output may sit in far fewer partitions)
+    joined = pairs.repartition(pairs.sparkSession.sparkContext.defaultParallelism or 8)
 
     auto = None
     if auto_match_keys:
@@ -444,6 +466,7 @@ def resolve(
     embeddings (resolve.py:430-431)."""
     cmp_backend = backend.with_options(model=comparison_model) if comparison_model else backend
     emb_backend = backend.with_options(embedding_model=embedding_model) if embedding_model else backend
+    cols = compare_cols or [c for c in df.columns if c != id_col]
     if blocking == "auto":
         # blocking-rule synthesis (reference join_optimizer.py:1253-1370):
         # label a sample with the real comparison model, keep the most
@@ -459,7 +482,7 @@ def resolve(
         synth = synthesize_blocking(
             df, cmp_backend,
             id_col=id_col, comparison_prompt=comparison_prompt,
-            compare_cols=compare_cols or [c for c in df.columns if c != id_col],
+            compare_cols=cols,
             embedding_keys=embedding_keys,
             target_recall=blocking_target_recall,
             embed_backend=emb_backend,
@@ -480,7 +503,7 @@ def resolve(
         blocking_threshold = auto_blocking_threshold(
             df, cmp_backend,
             id_col=id_col, comparison_prompt=comparison_prompt,
-            compare_cols=compare_cols or [c for c in df.columns if c != id_col],
+            compare_cols=cols,
             embedding_keys=embedding_keys,
             target_recall=blocking_target_recall,
             embed_backend=emb_backend,
@@ -519,6 +542,7 @@ def resolve(
     pairs = candidate_pairs(
         work,
         id_col,
+        compare_cols=cols,
         blocking_keys=None,  # covered by star edges above
         blocking_threshold=blocking_threshold,
         blocking_conditions=blocking_conditions,
@@ -549,9 +573,8 @@ def resolve(
     matches = None
     if pairs is not None:
         matches = adjudicate_pairs(
-            pairs, df, id_col, comparison_prompt, cmp_backend,
-            compare_cols=compare_cols, auto_match_keys=blocking_keys,
-            cascade=cascade,
+            pairs, comparison_prompt, cmp_backend,
+            auto_match_keys=blocking_keys, cascade=cascade,
         )
     if matches is None and blocking_keys:
         # star edges only: blocks are disjoint, so each component IS its
@@ -563,7 +586,10 @@ def resolve(
     else:
         if star_edges is not None:
             matches = star_edges if matches is None else matches.unionByName(star_edges)
-        comp = connected_components(matches, df.select(id_col), id_col)
+        # labels for the matched ids only (on the local path a driver-side
+        # LocalRelation, broadcast without a job); an id with no edge
+        # labels itself through the coalesce
+        comp = connected_components(matches, None, id_col)
         clustered = df.join(comp, id_col, "left").withColumn(
             "_cluster_id", F.coalesce(F.col("component"), F.col(id_col))
         ).drop("component")

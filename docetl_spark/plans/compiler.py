@@ -21,6 +21,8 @@ trusted-config execution model, same as the reference.
 
 from __future__ import annotations
 
+import logging
+import uuid
 from dataclasses import replace
 
 from pyspark.sql import Observation, SparkSession, functions as F
@@ -127,6 +129,23 @@ def _empirical_evaluator(sf, datasets, backend, stats, *, sample_rows: int = 20)
     return evaluate
 
 
+def _record_jobs(sc, tracker: ProgressTracker, op_tags: list[tuple[str, str]]) -> None:
+    """Set each op's ``jobs`` to the number of Spark jobs under its tag.
+    The status tracker learns of a job from the listener bus, so the bus
+    is drained first (it is normally empty; the wait polls every 10 ms
+    for at most 10 s, after which the counts may be short)."""
+    from py4j.protocol import Py4JJavaError
+
+    jsc = sc._jsc.sc()
+    try:
+        jsc.listenerBus().waitUntilEmpty()
+    except Py4JJavaError:
+        logging.getLogger(__name__).warning("listener bus busy: op job counts may be short")
+    status = jsc.statusTracker()
+    for name, tag in op_tags:
+        tracker.op_jobs(name, len(status.getJobIdsForTag(tag)))
+
+
 def run_pipeline(
     spark: SparkSession,
     config: dict,
@@ -172,6 +191,12 @@ def run_pipeline(
     op_start / op_done with out_count and wall, pipeline_done; UIs poll
     tracker.snapshot() (or .to_dict()). Without one,
     progress.active_tracker() is used, else a private tracker.
+
+    Each op's jobs carry a job tag of their own (``SparkContext.addJobTag``
+    on the driver thread that runs the op; threads the op starts itself
+    are not tagged). When the run ends, each op's ``jobs`` is the number
+    of jobs under its tag, read from Spark's status tracker once the
+    listener bus has drained.
     """
     backend = backend or FakeBackend()
     emit = (print if progress is True else progress) if progress else None
@@ -227,6 +252,9 @@ def run_pipeline(
     last_name: str | None = None
     rewrites_fired: list[str] = []
     step_outputs = {}  # step name -> its output's checkpoint
+    sc = spark.sparkContext
+    run_tag = f"docetl_spark-{uuid.uuid4().hex[:12]}"
+    op_tags: list[tuple[str, str]] = []  # (op name, its job tag)
     continued = set()  # steps whose output the next step continues (it has no `input`)
     dataset_configs = config.get("datasets", {})
     for step in config["pipeline"]["steps"]:
@@ -377,17 +405,23 @@ def run_pipeline(
             spec = OpSpec(spec["type"], {k: v for k, v in spec.items() if k != "type"})
             name = str(spec.config.get("name", ""))
             tracker.op_start(name, spec.type, step=step["name"])
-            cached = checkpointer.advance(spec, sf) if checkpointer is not None else None
-            if cached is not None:
-                sf = cached
-            else:
-                sf = apply_op(sf, spec, datasets)
-                if checkpointer is not None:
-                    sf = checkpointer.store(sf)
-            # one job: the next op reads a LogicalRDD leaf, and the row
-            # count is observed on that same job
-            o = Observation()
-            df = sf.df.observe(o, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+            tag = f"{run_tag}-{len(op_tags)}"
+            op_tags.append((name, tag))
+            sc.addJobTag(tag)
+            try:
+                cached = checkpointer.advance(spec, sf) if checkpointer is not None else None
+                if cached is not None:
+                    sf = cached
+                else:
+                    sf = apply_op(sf, spec, datasets)
+                    if checkpointer is not None:
+                        sf = checkpointer.store(sf)
+                # one job: the next op reads a LogicalRDD leaf, and the row
+                # count is observed on that same job
+                o = Observation()
+                df = sf.df.observe(o, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+            finally:
+                sc.removeJobTag(tag)
             rows = o.get["rows"]
             sf = replace(sf, df=df, _memo={"count": rows})
             tracker.op_done(name, out_count=rows)
@@ -416,6 +450,7 @@ def run_pipeline(
             last.write_parquet(path)
     if last is None:
         raise ValueError("pipeline has no steps")
+    _record_jobs(sc, tracker, op_tags)
     tracker.pipeline_done()
     # a step output the next step continued is a link in one chain, like
     # an op's output inside a step: released, its view dropped. The other

@@ -49,6 +49,7 @@ class OpState:
     completed: int = 0
     errors: int = 0
     out_count: int | None = None
+    jobs: int | None = None  # Spark jobs the op launched
 
     calls: int = 0
     prompt_tokens: int = 0
@@ -72,7 +73,7 @@ class OpState:
             "step": self.step, "name": self.name, "op_type": self.op_type,
             "model": self.model, "status": self.status, "total": self.total,
             "phase": self.phase, "completed": self.completed,
-            "errors": self.errors, "out_count": self.out_count,
+            "errors": self.errors, "out_count": self.out_count, "jobs": self.jobs,
             "calls": self.calls, "prompt_tokens": self.prompt_tokens,
             "completion_tokens": self.completion_tokens,
             "elapsed": round(self.elapsed, 3),
@@ -204,6 +205,13 @@ class ProgressTracker:
             if self._current is op:
                 self._current = None
 
+    def op_jobs(self, name: str, jobs: int) -> None:
+        """Record the number of Spark jobs op ``name`` launched."""
+        with self._lock:
+            op = self.state.get(name)
+            if op is not None:
+                op.jobs = jobs
+
     def pipeline_done(self) -> None:
         with self._lock:
             self.state.finished = True
@@ -244,13 +252,14 @@ def render_table(state: RunState) -> str:
             f"{'finished' if state.finished else 'running'}  "
             f"{state.elapsed:.2f}s")
     cols = f"{'step':<12} {'op':<24} {'type':<13} {'status':<7} " \
-           f"{'rows':>9} {'wall':>8} {'calls':>7} {'tokens':>9}"
+           f"{'rows':>9} {'wall':>8} {'jobs':>5} {'calls':>7} {'tokens':>9}"
     lines = [head, cols, "-" * len(cols)]
     for op in state.ops:
         rows = f"{op.out_count:,}" if op.out_count is not None else "-"
+        jobs = op.jobs if op.jobs is not None else "-"
         lines.append(
             f"{op.step:<12.12} {op.name:<24.24} {op.op_type:<13.13} "
-            f"{op.status:<7} {rows:>9} {op.elapsed:>7.2f}s "
+            f"{op.status:<7} {rows:>9} {op.elapsed:>7.2f}s {jobs:>5} "
             f"{op.calls:>7} {op.tokens:>9}"
         )
     return "\n".join(lines)

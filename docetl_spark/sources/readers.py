@@ -241,8 +241,17 @@ def read_dir(spark: SparkSession, path: str, *, glob: str | None = None) -> Data
 
 
 def from_list(spark: SparkSession, rows: list[dict], *, schema: dict | None = None) -> DataFrame:
+    """Rows as a DataFrame, typed by ``schema`` or inferred. A key that
+    is None in every row gives inference no type; it comes out as an
+    all-null string column, as Spark's JSON reader types such a field."""
     if schema:
         return spark.createDataFrame(rows, schema=schema_of(schema))
+    if rows and all(isinstance(r, dict) for r in rows):
+        typed = {k for r in rows for k, v in r.items() if v is not None}
+        untyped = {k for r in rows for k in r} - typed
+        if untyped:
+            probe = [{**rows[0], **dict.fromkeys(untyped, "")}, *rows[1:]]
+            return spark.createDataFrame(rows, schema=spark.createDataFrame(probe).schema)
     return spark.createDataFrame(rows)
 
 

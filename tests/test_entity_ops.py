@@ -328,7 +328,7 @@ def test_resolve_adjudication_cascade(spark):
     df = spark.createDataFrame(rows)
     pairs = resolve_op.candidate_pairs(df, "pid")  # all 6 pairs
     matched = resolve_op.adjudicate_pairs(
-        pairs, df, "pid", "same? {{ input1.name }} vs {{ input2.name }}",
+        pairs, "same? {{ input1.name }} vs {{ input2.name }}",
         CascadeBE(), cascade={"proxy_threshold": 0.9},
     ).collect()
     got = {(r["id_a"], r["id_b"]) for r in matched}

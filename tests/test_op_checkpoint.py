@@ -46,6 +46,7 @@ def test_one_job_per_op_without_an_exchange(spark):
     out, jobs = _jobs_of(spark, lambda: run_pipeline(spark, THREE_FILTERS, tracker=tracker))
     assert jobs == 3  # persist + count took three per op
     assert [o.out_count for o in tracker.snapshot().ops] == [19, 18, 17]
+    assert [o.jobs for o in tracker.snapshot().ops] == [1, 1, 1]
     # the result's count is the one observed on its op's job
     n, jobs = _jobs_of(spark, out.count)
     assert (n, jobs) == (17, 0)

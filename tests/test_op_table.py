@@ -8,6 +8,7 @@ import inspect
 import pytest
 
 from docetl_spark import FakeBackend, SemanticFrame, run_pipeline
+from docetl_spark.operators import equijoin as equijoin_op, resolve as resolve_op, semantic
 from docetl_spark.plans import OpSpec, PlanStats, optimize_ops, validate_config
 from docetl_spark.plans.compiler import apply_op
 from docetl_spark.plans.ir import OP_TYPES, lift
@@ -43,9 +44,21 @@ def _minimal_config(t: str) -> dict:
     return cfg
 
 
+# verbs that forward their **kw to an operator function: the forwarded
+# keys must be parameters of that function too
+_FORWARDS = {
+    "map": semantic.semantic_map,
+    "filter": semantic.semantic_filter,
+    "reduce": semantic.semantic_reduce,
+    "resolve": resolve_op.resolve,
+    "equijoin": equijoin_op.equijoin,
+}
+
+
 class _Recorder:
     """Stands in for a SemanticFrame: each verb call is bound against the
-    real verb's signature (so a key it does not take raises) and
+    real verb's signature (so a key it does not take raises), the keys a
+    verb forwards through ``**kw`` against its operator function's, and
     recorded."""
 
     def __init__(self):
@@ -53,9 +66,13 @@ class _Recorder:
 
     def __getattr__(self, verb):
         sig = inspect.signature(getattr(SemanticFrame, verb))
+        var_kw = [p.name for p in sig.parameters.values() if p.kind is p.VAR_KEYWORD]
 
         def call(*args, **kwargs):
-            sig.bind(self, *args, **kwargs)
+            bound = sig.bind(self, *args, **kwargs)
+            if verb in _FORWARDS:
+                forwarded = bound.arguments.get(var_kw[0], {}) if var_kw else {}
+                inspect.signature(_FORWARDS[verb]).bind_partial(**forwarded)
             self.calls.append(verb)
             return self
 
@@ -81,6 +98,16 @@ def test_every_validated_type_reaches_its_verb(spark, t):
     rec = _Recorder()
     apply_op(rec, OpSpec(t, {k: v for k, v in cfg.items() if k != "type"}), {"d": rec})
     assert rec.calls == [OP_TYPES[t].verb or t]
+
+
+@pytest.mark.parametrize("t", sorted(_FORWARDS))
+def test_the_recorder_rejects_a_key_only_the_verb_accepts(t):
+    """A key the verb's **kw takes but its operator function does not
+    fails the recorder, so it fails test_every_validated_type_reaches_its_verb."""
+    cfg = {**_minimal_config(t), "not_a_parameter": 1}
+    with pytest.raises(TypeError, match="not_a_parameter"):
+        apply_op(_Recorder(), OpSpec(t, {k: v for k, v in cfg.items() if k != "type"}),
+                 {"d": _Recorder()})
 
 
 def test_step_boundary_is_not_an_op_type():

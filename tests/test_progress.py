@@ -54,9 +54,13 @@ def test_render_table_and_line():
     t.pipeline_start([("s1", "extract", "map")])
     t.op_start("extract", "map")
     t.op_done("extract", out_count=1234)
+    t.op_jobs("extract", 7)
     t.pipeline_done()
     table = render_table(t.snapshot())
     assert "extract" in table and "1,234" in table and "done" in table
+    head, row = table.splitlines()[1], table.splitlines()[3]
+    assert head.split()[6] == "jobs" and row.split()[6] == "7"
+    assert t.snapshot().to_dict()["ops"][0]["jobs"] == 7
     line = render_line(t.snapshot().ops[0])
     assert "extract" in line and "1,234" in line
 

@@ -453,3 +453,28 @@ def test_smart_sample_stratifies_and_prefers_long(spark):
 
     # k >= n returns input unchanged
     assert smart_sample(df, 100).count() == 40
+
+
+def test_memory_dataset_with_an_all_null_column_runs(spark):
+    """A memory dataset whose column is None in every row gives schema
+    inference no type: the column comes out all-null (string, as Spark's
+    JSON reader types such a field) instead of aborting the run."""
+    from docetl_spark import FakeBackend, run_pipeline
+
+    cfg = {
+        "datasets": {"d": {"type": "memory", "data": [{"x": 1, "n": None}]}},
+        "operations": [{"name": "pos", "type": "code_filter", "predicate": "x > 0"}],
+        "pipeline": {"steps": [{"name": "s", "input": "d", "operations": ["pos"]}]},
+    }
+    out = run_pipeline(spark, cfg, backend=FakeBackend())
+    assert dict(out.df.dtypes) == {"x": "bigint", "n": "string"}
+    assert out.collect() == [{"x": 1, "n": None}]
+
+
+def test_from_list_keeps_a_declared_schema(spark):
+    from docetl_spark.types import schema_of
+
+    schema = {"x": "int", "n": "float"}
+    df = readers.from_list(spark, [{"x": 1, "n": None}], schema=schema)
+    assert df.schema == schema_of(schema)
+    assert [r.asDict() for r in df.collect()] == [{"x": 1, "n": None}]
