@@ -11,8 +11,9 @@ model call spent here prunes quadratically many calls later.
 
 Spark realization: the calibration sample is tiny by construction
 (``sample_size`` rows -> <= C(n,2) pairs), so sampling + labeling run
-driver-side on collected rows; only the resulting scalar threshold is
-shipped back into the distributed blocking join.
+driver-side on collected rows (``_labeled_pairs``, shared by the
+threshold calibration and the rule synthesis below); only the resulting
+scalar threshold is shipped back into the distributed blocking join.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from ..backend import ModelBackend
-from .semantic import render_prompt
+from .semantic import model_says, pair_question, run_concurrently
 
 
 def bucket_top_k(
@@ -71,6 +72,78 @@ def probe_embed_dim(backend: ModelBackend) -> int:
     return len(backend.embed(["dim probe"])[0])
 
 
+def _sample_rows(df: DataFrame, n: int, rng: np.random.RandomState) -> list[dict]:
+    """Up to ``n`` rows of ``df``, drawn by ``rng`` from its first
+    ``4n``. The limit() keeps the driver fetch at O(n) rows regardless
+    of table size (never a full-table collect — that is a driver OOM at
+    100 TB); limit-then-sample is deterministic given a stable scan
+    order, matching the seeded rng."""
+    rows = [r.asDict() for r in df.limit(n * 4).collect()]
+    if len(rows) > n:
+        rows = [rows[i] for i in rng.choice(len(rows), size=n, replace=False)]
+    return rows
+
+
+def _labeled_pairs(
+    backend: ModelBackend,
+    comparison_prompt: str,
+    names: tuple[str, str],
+    a_rows: list[dict],
+    a_keys: list[str],
+    b_rows: list[dict] | None = None,
+    b_keys: list[str] | None = None,
+    *,
+    compare_cols: list[str] | None = None,
+    embed_backend: ModelBackend | None = None,
+) -> tuple[list[tuple[dict, dict, bool]], list[float]]:
+    """The labeled calibration sample: each pair of sampled rows with
+    the comparison model's verdict, asked as ``semantic.judge`` asks it
+    (``pair_question`` over ``names``; ``compare_cols``, when given,
+    are what the prompt sees) and overlapped with ``run_concurrently``,
+    plus the pair's embedding cosine over ``a_keys`` / ``b_keys``
+    (``embed_backend``, default ``backend``). Pairs are ``i < j`` of
+    ``a_rows`` (self-join, one embed call) or, given ``b_rows``, the
+    cross product (two)."""
+    eb = embed_backend or backend
+
+    def vectors(rows, keys):
+        v = np.array(eb.embed([" ".join(str(r.get(k)) for k in keys) for r in rows]), dtype=np.float64)
+        norms = np.linalg.norm(v, axis=1)
+        norms[norms == 0] = 1.0
+        return v, norms
+
+    av, an = vectors(a_rows, a_keys)
+    if b_rows is None:
+        b_rows, (bv, bn) = a_rows, (av, an)
+        idx = [(i, j) for i in range(len(a_rows)) for j in range(i + 1, len(a_rows))]
+    else:
+        bv, bn = vectors(b_rows, b_keys)
+        idx = [(i, j) for i in range(len(a_rows)) for j in range(len(b_rows))]
+    sims = (av @ bv.T) / np.outer(an, bn)
+
+    def ask(ij):
+        a, b = a_rows[ij[0]], b_rows[ij[1]]
+        if compare_cols is not None:
+            a, b = ({c: r.get(c) for c in compare_cols} for r in (a, b))
+        return model_says(backend, {"is_match": "bool"},
+                          *pair_question(comparison_prompt, names, a, b))
+
+    verdicts = run_concurrently(backend, ask, idx)
+    pairs = [(a_rows[i], b_rows[j], m) for (i, j), m in zip(idx, verdicts)]
+    return pairs, [float(sims[i, j]) for i, j in idx]
+
+
+def _recall_threshold(pairs: list[tuple[dict, dict, bool]], sims: list[float],
+                      target_recall: float) -> float | None:
+    """Loosest cosine threshold keeping >= ``target_recall`` of the
+    labeled true matches above it — the (1 - recall) quantile of the
+    match-similarity distribution — or None without a true match."""
+    match_sims = [s for (_, _, m), s in zip(pairs, sims) if m]
+    if not match_sims:
+        return None
+    return float(np.quantile(np.array(match_sims), 1.0 - target_recall, method="lower"))
+
+
 def auto_blocking_threshold(
     df: DataFrame,
     backend: ModelBackend,
@@ -90,39 +163,13 @@ def auto_blocking_threshold(
     caller will block with — calibrating in one embedding space and
     applying in another voids the recall target."""
     keys = embedding_keys or compare_cols
-    # Bound the collect Spark-side: a limit() keeps the driver fetch at
-    # O(sample_size) rows regardless of table size (never a full-table
-    # collect — that is a driver OOM at 100 TB). limit-then-sample is
-    # deterministic given a stable scan order, matching the seeded rng.
-    projected = df.select(id_col, *set(compare_cols) | set(keys))
-    rows = [r.asDict() for r in projected.limit(sample_size * 4).collect()]
+    rows = _sample_rows(df.select(id_col, *set(compare_cols) | set(keys)), sample_size,
+                        np.random.RandomState(seed))
     if len(rows) < 2:
         return None
-    rng = np.random.RandomState(seed)
-    if len(rows) > sample_size:
-        idx = rng.choice(len(rows), size=sample_size, replace=False)
-        rows = [rows[i] for i in idx]
-
-    texts = [" ".join(str(r.get(k)) for k in keys) for r in rows]
-    vecs = np.array((embed_backend or backend).embed(texts), dtype=np.float64)
-    norms = np.linalg.norm(vecs, axis=1)
-    norms[norms == 0] = 1.0
-    sims = (vecs @ vecs.T) / np.outer(norms, norms)
-
-    match_sims: list[float] = []
-    for i in range(len(rows)):
-        for j in range(i + 1, len(rows)):
-            in1 = {c: rows[i].get(c) for c in compare_cols}
-            in2 = {c: rows[j].get(c) for c in compare_cols}
-            prompt = render_prompt(comparison_prompt, {"input1": in1, "input2": in2})
-            ans = backend.complete(prompt, {"is_match": "bool"}, (in1, in2))
-            if ans.get("is_match"):
-                match_sims.append(float(sims[i, j]))
-    if not match_sims:
-        return None
-    # loosest threshold keeping >= target_recall of true matches above it:
-    # the (1 - recall) quantile of the match-similarity distribution
-    return float(np.quantile(np.array(match_sims), 1.0 - target_recall, method="lower"))
+    pairs, sims = _labeled_pairs(backend, comparison_prompt, ("input1", "input2"), rows, keys,
+                                 compare_cols=compare_cols, embed_backend=embed_backend)
+    return _recall_threshold(pairs, sims, target_recall)
 
 
 def auto_blocking_threshold_pairs(
@@ -141,33 +188,14 @@ def auto_blocking_threshold_pairs(
     """Two-table variant for equijoin (equijoin.py:332-375): sample rows
     from each side, label the sampled cross product, pick the loosest
     threshold covering ``target_recall`` of true matches."""
-    l_rows = [r.asDict() for r in left.limit(sample_size * 4).collect()]
-    r_rows = [r.asDict() for r in right.limit(sample_size * 4).collect()]
+    rng = np.random.RandomState(seed)
+    l_rows = _sample_rows(left, sample_size, rng)
+    r_rows = _sample_rows(right, sample_size, rng)
     if not l_rows or not r_rows:
         return None
-    rng = np.random.RandomState(seed)
-    if len(l_rows) > sample_size:
-        l_rows = [l_rows[i] for i in rng.choice(len(l_rows), sample_size, replace=False)]
-    if len(r_rows) > sample_size:
-        r_rows = [r_rows[i] for i in rng.choice(len(r_rows), sample_size, replace=False)]
-
-    eb = embed_backend or backend
-    lv = np.array(eb.embed([" ".join(str(r.get(k)) for k in left_keys) for r in l_rows]))
-    rv = np.array(eb.embed([" ".join(str(r.get(k)) for k in right_keys) for r in r_rows]))
-    ln = np.linalg.norm(lv, axis=1); ln[ln == 0] = 1.0
-    rn = np.linalg.norm(rv, axis=1); rn[rn == 0] = 1.0
-    sims = (lv @ rv.T) / np.outer(ln, rn)
-
-    match_sims: list[float] = []
-    for i, lr in enumerate(l_rows):
-        for j, rr in enumerate(r_rows):
-            prompt = render_prompt(comparison_prompt, {"left": lr, "right": rr})
-            ans = backend.complete(prompt, {"is_match": "bool"}, (lr, rr))
-            if ans.get("is_match"):
-                match_sims.append(float(sims[i, j]))
-    if not match_sims:
-        return None
-    return float(np.quantile(np.array(match_sims), 1.0 - target_recall, method="lower"))
+    pairs, sims = _labeled_pairs(backend, comparison_prompt, ("left", "right"), l_rows, left_keys,
+                                 r_rows, right_keys, embed_backend=embed_backend)
+    return _recall_threshold(pairs, sims, target_recall)
 
 
 # ------------------------------------------------------------------ synthesis
@@ -324,8 +352,7 @@ def _synthesize_from_labeled(
 
     threshold = None
     if not chosen and sims is not None and n_matches:
-        match_sims = np.array([s for (l, r, m), s in zip(pairs, sims) if m])
-        threshold = float(np.quantile(match_sims, 1.0 - target_recall, method="lower"))
+        threshold = _recall_threshold(pairs, sims, target_recall)
         kept = sum(1 for s in sims if s >= threshold)
         notes.append(
             f"no rule met recall>={target_recall}; threshold fallback "
@@ -365,32 +392,12 @@ def synthesize_blocking(
     threshold when no rule qualifies. Bounded driver work by
     construction (limit-gated collect), like auto_blocking_threshold."""
     keys = embedding_keys or compare_cols
-    projected = df.select(id_col, *set(compare_cols) | set(keys))
-    rows = [r.asDict() for r in projected.limit(sample_size * 4).collect()]
-    rng = np.random.RandomState(seed)
-    if len(rows) > sample_size:
-        idx = rng.choice(len(rows), size=sample_size, replace=False)
-        rows = [rows[i] for i in idx]
+    rows = _sample_rows(df.select(id_col, *set(compare_cols) | set(keys)), sample_size,
+                        np.random.RandomState(seed))
     if len(rows) < 2:
         return BlockingSynthesis([], None, [], None, None, 0, 0, "sample too small")
-
-    texts = [" ".join(str(r.get(k)) for k in keys) for r in rows]
-    vecs = np.array((embed_backend or backend).embed(texts), dtype=np.float64)
-    norms = np.linalg.norm(vecs, axis=1)
-    norms[norms == 0] = 1.0
-    simmat = (vecs @ vecs.T) / np.outer(norms, norms)
-
-    pairs: list[tuple[dict, dict, bool]] = []
-    sims: list[float] = []
-    for i in range(len(rows)):
-        for j in range(i + 1, len(rows)):
-            in1 = {c: rows[i].get(c) for c in compare_cols}
-            in2 = {c: rows[j].get(c) for c in compare_cols}
-            prompt = render_prompt(comparison_prompt, {"input1": in1, "input2": in2})
-            ans = backend.complete(prompt, {"is_match": "bool"}, (in1, in2))
-            pairs.append((rows[i], rows[j], bool(ans.get("is_match"))))
-            sims.append(float(simmat[i, j]))
-
+    pairs, sims = _labeled_pairs(backend, comparison_prompt, ("input1", "input2"), rows, keys,
+                                 compare_cols=compare_cols, embed_backend=embed_backend)
     key_pairs = [(c, c) for c in compare_cols]
     return _synthesize_from_labeled(
         pairs, key_pairs, aliases=("a", "b"), target_recall=target_recall, sims=sims
@@ -413,31 +420,13 @@ def synthesize_blocking_pairs(
     """Two-table (equijoin) variant: label the sampled cross product,
     then synthesize ``left.x = right.y`` catalog rules over the key
     pairing (join_optimizer.py:1506-1675)."""
-    l_rows = [r.asDict() for r in left.limit(sample_size * 4).collect()]
-    r_rows = [r.asDict() for r in right.limit(sample_size * 4).collect()]
     rng = np.random.RandomState(seed)
-    if len(l_rows) > sample_size:
-        l_rows = [l_rows[i] for i in rng.choice(len(l_rows), sample_size, replace=False)]
-    if len(r_rows) > sample_size:
-        r_rows = [r_rows[i] for i in rng.choice(len(r_rows), sample_size, replace=False)]
+    l_rows = _sample_rows(left, sample_size, rng)
+    r_rows = _sample_rows(right, sample_size, rng)
     if not l_rows or not r_rows:
         return BlockingSynthesis([], None, [], None, None, 0, 0, "sample too small")
-
-    eb = embed_backend or backend
-    lv = np.array(eb.embed([" ".join(str(r.get(k)) for k in left_keys) for r in l_rows]))
-    rv = np.array(eb.embed([" ".join(str(r.get(k)) for k in right_keys) for r in r_rows]))
-    ln = np.linalg.norm(lv, axis=1); ln[ln == 0] = 1.0
-    rn = np.linalg.norm(rv, axis=1); rn[rn == 0] = 1.0
-    simmat = (lv @ rv.T) / np.outer(ln, rn)
-
-    pairs: list[tuple[dict, dict, bool]] = []
-    sims: list[float] = []
-    for i, lr in enumerate(l_rows):
-        for j, rr in enumerate(r_rows):
-            prompt = render_prompt(comparison_prompt, {"left": lr, "right": rr})
-            ans = backend.complete(prompt, {"is_match": "bool"}, (lr, rr))
-            pairs.append((lr, rr, bool(ans.get("is_match"))))
-            sims.append(float(simmat[i, j]))
+    pairs, sims = _labeled_pairs(backend, comparison_prompt, ("left", "right"), l_rows, left_keys,
+                                 r_rows, right_keys, embed_backend=embed_backend)
 
     key_pairs = list(zip(left_keys, right_keys))
     # same-named columns on both sides are candidate keys too

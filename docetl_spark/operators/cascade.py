@@ -31,8 +31,11 @@ the chosen threshold routes EVERYTHING to the oracle (recall -> -inf,
 precision/accuracy -> +inf), so the guarantee holds vacuously and only
 the cost saving is lost.
 
-Pure python/numpy — unit-testable without Spark or a model backend,
-mirroring the reference's "engine free of DocETL imports" design.
+The statistics are pure python — unit-testable without Spark or a
+model backend, mirroring the reference's "engine free of DocETL
+imports" design. ``cascade_router`` puts them to work: it is the one
+place an op's ``cascade`` block turns into a per-row routing decision,
+and the only caller of ``classify_logprob``.
 """
 
 from __future__ import annotations
@@ -41,7 +44,7 @@ import math
 from dataclasses import dataclass, field
 
 __all__ = ["CascadeSpec", "CalibrationResult", "hoeffding_lcb",
-           "calibrate_binary", "calibrate_accuracy", "calibrate"]
+           "calibrate_binary", "calibrate_accuracy", "calibrate", "cascade_router"]
 
 _GUARANTEES = ("accuracy", "precision", "recall")
 
@@ -193,3 +196,58 @@ def calibrate(
         correct = [pl == ol for pl, ol in zip(proxy_labels, oracle_labels)]
         return calibrate_accuracy(confs, correct, spec)
     return calibrate_binary(scores, oracle_labels, spec)
+
+
+def cascade_router(df, render, oracle, backend, cascade: dict | None, op: str):
+    """Routing for a yes/no model question under an op's ``cascade``
+    block: ``route(prompt, context)`` answers True / False from the
+    backend's cheap ``classify_logprob``, or None to leave the row to
+    ``oracle(prompt, context)``. Returns None without a cascade.
+
+    - ``{"proxy_threshold": p}`` (p = 1.0 in any other block without
+      ``guarantee``): a proxy label whose own probability clears ``p``
+      is the answer.
+    - ``{"guarantee": g, "target", "delta", "label_budget"}``: the
+      first ``label_budget`` rows of ``df``, put to the model through
+      ``render(row)``, get a proxy score and an oracle label each;
+      ``calibrate`` picks the threshold, and rows route per the
+      guarantee (module docstring). ``g`` defaults to
+      ``DEFAULT_GUARANTEE[op]``."""
+    if not cascade:
+        return None
+
+    def proxy(prompt, context) -> tuple[float, bool, float]:
+        """P(true), the proxy's label, and that label's own probability."""
+        label, prob = backend.classify_logprob(prompt, ["true", "false"], context)
+        return (prob if label == "true" else 1.0 - prob), label == "true", prob
+
+    if "guarantee" in cascade:
+        from .semantic import run_concurrently  # noqa: PLC0415 — keeps the statistics Spark-free
+
+        spec = CascadeSpec(
+            guarantee=cascade.get("guarantee") or DEFAULT_GUARANTEE[op],
+            target=float(cascade.get("target", 0.9)),
+            delta=float(cascade.get("delta", 0.05)),
+            label_budget=int(cascade.get("label_budget", 400)),
+        )
+        # bounded calibration set: limit() keeps the driver fetch at
+        # O(label_budget) rows no matter the table size
+        sample = [render(r.asDict()) for r in df.limit(spec.label_budget).collect()]
+        labeled = run_concurrently(backend, lambda item: (*proxy(*item)[:2], oracle(*item)), sample)
+        mode = spec.guarantee
+        t = calibrate([x[0] for x in labeled], [x[1] for x in labeled],
+                      [x[2] for x in labeled], spec).threshold
+    else:
+        mode, t = "fixed", float(cascade.get("proxy_threshold", 1.0))
+
+    def route(prompt, context):
+        p, is_true, prob = proxy(prompt, context)
+        if mode == "fixed":
+            return is_true if prob >= t else None
+        if mode == "recall":
+            return False if p < t else None  # proxy-rejected; bounded FN rate
+        if mode == "precision":
+            return True if p >= t else None  # proxy-accepted; bounded FP rate
+        return p >= 0.5 if max(p, 1.0 - p) >= t else None
+
+    return route

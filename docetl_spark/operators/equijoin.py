@@ -16,28 +16,23 @@ next to the ``_lk_*`` / ``_rk_*`` keys), so each left x right row pair
 is compared once even under a repeated key; sources that produce keys
 only (LSH banding, the per-bucket ``limit_comparisons`` path) get the
 payload attached once, by key, and there ``left_keys`` / ``right_keys``
-must identify rows. Adjudication is an Arrow-batched UDF over the pair
-table as it is, emitting matched rows itself; per-side limits are
-row_number windows.
+must identify rows. Adjudication is ``semantic.judge`` over the pair
+table as it is (the cascade of filter and resolve, precision by
+default), keeping the matching pairs; a SQL select names their
+payload, and per-side limits are row_number windows.
 """
 
 from __future__ import annotations
 
 import logging
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from ..backend import ModelBackend
 from ..functions.similarity import banded_candidate_pairs_two_sided
 from .blocking import probe_embed_dim
-from .resolve import embed_column
-from .semantic import render_prompt, run_concurrently
-
-# Unblocked equijoin degenerates to an O(n*m) cross join; refuse past this
-# many rows on either side (the reference warns at 100 — equijoin.py:318-330
-# — we allow a little headroom but still fail long before scheduling).
-_NO_BLOCKING_MAX_ROWS = 1000
+from .resolve import _NO_BLOCKING_MAX_ROWS, embed_column
+from .semantic import judge, pair_question
 
 
 def _doc_len(df: DataFrame, *, exclude: set[str] = frozenset()) -> F.Column:
@@ -419,7 +414,11 @@ def equijoin(
 
     ``comparison_model`` / ``embedding_model`` route adjudication and
     blocking-embedding calls to per-stage model overrides
-    (reference equijoin.py comparison_model/embedding_model configs)."""
+    (reference equijoin.py comparison_model/embedding_model configs).
+
+    ``cascade``: the proxy/oracle cascade of ``semantic.judge``, as on
+    filter and resolve: ``{"proxy_threshold": p}``, or a calibrated
+    ``guarantee`` (precision by default)."""
     emb_backend = backend.with_options(embedding_model=embedding_model) if embedding_model else backend
     if comparison_model:
         backend = backend.with_options(model=comparison_model)
@@ -603,54 +602,25 @@ def equijoin(
             stats["n_pairs"], total, saved,
         )
 
-    # adjudicate: the full payload rides INTO the Python stage anyway
-    # (the prompt needs it), so matching rows emit it back out with
-    # collision suffixes — no join above the adjudication
-    # broadcast-join outputs inherit the scan's few partitions; spread the
-    # Python adjudication across the full executor pool
+    # adjudicate: matching pairs come back as they went in, and one SQL
+    # select renames their payload with collision suffixes — no join
+    # above the adjudication. Broadcast-join outputs inherit the scan's
+    # few partitions; spread the judge across the full executor pool
     par = left.sparkSession.sparkContext.defaultParallelism or 8
-    joined = pairs.repartition(par)
 
+    def render(r):
+        return pair_question(comparison_prompt, ("left", "right"),
+                             {c: r[f"_l_{c}"] for c in lcols}, {c: r[f"_r_{c}"] for c in rcols})
+
+    judged = judge(pairs.repartition(par), render, {"is_match": "bool"}, backend,
+                   op="equijoin", cascade=cascade)
     collisions = set(lcols) & set(rcols)
-    l_out = {c: (f"{c}_left" if c in collisions else c) for c in lcols}
-    r_out = {c: (f"{c}_right" if c in collisions else c) for c in rcols}
-    key_fields = [joined.schema[c] for c in lk + rk]
-    payload_fields = [
-        T.StructField(l_out[c], left.schema[c].dataType, True) for c in lcols
-    ] + [T.StructField(r_out[c], right.schema[c].dataType, True) for c in rcols]
-    out_schema = T.StructType(list(key_fields) + payload_fields)
-    names = out_schema.fieldNames()
     key_names = lk + rk
-
-    threshold = float(cascade.get("proxy_threshold", 1.0)) if cascade else None
-
-    def run(batches):
-        for pdf in batches:
-            def one(r):
-                in_l = {c: r[f"_l_{c}"] for c in lcols}
-                in_r = {c: r[f"_r_{c}"] for c in rcols}
-                prompt = render_prompt(comparison_prompt, {"left": in_l, "right": in_r})
-                if threshold is not None:
-                    label, prob = backend.classify_logprob(prompt, ["true", "false"], (in_l, in_r))
-                    if prob >= threshold:
-                        is_match = label == "true"
-                    else:
-                        is_match = bool(backend.complete(
-                            prompt, {"is_match": "bool"}, (in_l, in_r)).get("is_match"))
-                else:
-                    is_match = bool(backend.complete(
-                        prompt, {"is_match": "bool"}, (in_l, in_r)).get("is_match"))
-                if not is_match:
-                    return None
-                row = {n: r[n] for n in key_names}
-                row.update({l_out[c]: in_l[c] for c in lcols})
-                row.update({r_out[c]: in_r[c] for c in rcols})
-                return row
-
-            res = [x for x in run_concurrently(backend, one, pdf.to_dict("records")) if x]
-            yield pd.DataFrame(res, columns=names)
-
-    matched = joined.mapInPandas(run, schema=out_schema)
+    matched = judged.select(
+        *key_names,
+        *[F.col(f"_l_{c}").alias(f"{c}_left" if c in collisions else c) for c in lcols],
+        *[F.col(f"_r_{c}").alias(f"{c}_right" if c in collisions else c) for c in rcols],
+    )
 
     # per-side limits (equijoin.py:296-300): keep at most k matches per row
     limits = limits or {}

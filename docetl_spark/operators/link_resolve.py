@@ -11,22 +11,22 @@ Reference semantics: /root/reference/docetl/operations/link_resolve.py:15-206
 
 Spark realization: the dangling-link set is tiny relative to the data
 (explode + left-anti join against the id dim); the candidate product is
-(dangling x ids) pruned by an LSH bucket equi-join, adjudication is an
-Arrow-batched UDF, and the rewrite is a broadcast map join applied with
+(dangling x ids) pruned by an LSH bucket equi-join, adjudication is
+``semantic.judge`` (up to ``max_concurrency`` calls in flight per task),
+and the rewrite is a broadcast map join applied with
 ``transform()`` over the original arrays — the big table is never
 shuffled.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..backend import ModelBackend
 from ..functions.similarity import banded_candidate_pairs_two_sided
-from ..session import widen_scan
+from .blocking import probe_embed_dim
 from .resolve import embed_column
-from .semantic import render_prompt
+from .semantic import judge, render_prompt
 
 
 def link_resolve(
@@ -57,7 +57,7 @@ def link_resolve(
         # threshold by band planning, not single-bucket luck)
         d_emb = embed_column(dangling, ["_link"], backend, out_col="_e")
         i_emb = embed_column(ids, ["_id"], backend, out_col="_e")
-        vec_dim = len(backend.embed(["probe"])[0])
+        vec_dim = probe_embed_dim(backend)
         cand = banded_candidate_pairs_two_sided(
             d_emb, i_emb, ["_link"], ["_id"], "_e", "_e",
             threshold=float(blocking_threshold),
@@ -68,28 +68,13 @@ def link_resolve(
     else:
         cand = dangling.crossJoin(ids)  # both sides are small dims
 
-    out_schema = T.StructType(
-        [
-            T.StructField("_link", T.StringType(), True),
-            T.StructField("_id", T.StringType(), True),
-            T.StructField("_is_same", T.BooleanType(), True),
-        ]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            res = []
-            for r in pdf.to_dict("records"):
-                ctx = {"link": r["_link"], "id": r["_id"]}
-                rendered = render_prompt(comparison_prompt, {"input": ctx})
-                ans = backend.complete(rendered, {"is_same": "bool"}, (r["_link"], r["_id"]))
-                res.append({**r, "_is_same": bool(ans.get("is_same"))})
-            yield pd.DataFrame(res, columns=["_link", "_id", "_is_same"])
+    def render(r):
+        ctx = {"link": r["_link"], "id": r["_id"]}
+        return render_prompt(comparison_prompt, {"input": ctx}), (r["_link"], r["_id"])
 
     # one deterministic replacement per dangling link: smallest matching id
     mapping = (
-        widen_scan(cand).mapInPandas(run, schema=out_schema)
-        .filter(F.col("_is_same"))
+        judge(cand, render, {"is_same": "bool"}, backend, op="link_resolve")
         .groupBy("_link")
         .agg(F.min("_id").alias("_canonical"))
     )

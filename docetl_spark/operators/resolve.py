@@ -41,13 +41,13 @@ from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 from ..backend import ModelBackend
 from ..functions.dedup import connected_components
 from ..functions.similarity import banded_candidate_pairs
-from ..operators.sample import cosine_sim
 from ..types import schema_of
-from .semantic import render_prompt, run_concurrently, run_groups
+from .semantic import judge, pair_question, render_prompt, run_groups
 
-# Unblocked resolve degenerates to an O(n^2) cross join; refuse past this
-# many input rows (reference equijoin.py:318-330 warns at 100 — we allow
-# a little headroom but still fail long before the plan is scheduled).
+# Unblocked resolve and equijoin degenerate to an O(n^2) / O(n*m) cross
+# join; both refuse past this many input rows on a side (reference
+# equijoin.py:318-330 warns at 100 — we allow a little headroom but
+# still fail long before the plan is scheduled).
 _NO_BLOCKING_MAX_ROWS = 1000
 
 
@@ -266,13 +266,13 @@ def candidate_pairs(
     if not rows and not ids:
         # no blocking configured: all pairs. The reference allows this for
         # tiny inputs only (equijoin.py:318-330 warns past 100 rows); we
-        # gate the cross join on a row count so a missing blocking config
-        # fails fast instead of silently scheduling O(n^2) comparisons.
-        n = df.count()
-        if n > _NO_BLOCKING_MAX_ROWS:
+        # gate the cross join on an early-stopping count so a missing
+        # blocking config fails fast instead of silently scheduling O(n^2)
+        # comparisons.
+        if df.limit(_NO_BLOCKING_MAX_ROWS + 1).count() > _NO_BLOCKING_MAX_ROWS:
             raise ValueError(
-                f"resolve: no blocking configured and input has {n} rows "
-                f"(> {_NO_BLOCKING_MAX_ROWS}); an unblocked resolve is O(n^2) "
+                f"resolve: no blocking configured and input has more than "
+                f"{_NO_BLOCKING_MAX_ROWS} rows; an unblocked resolve is O(n^2) "
                 "comparisons. Configure blocking_keys, blocking_threshold "
                 "(embedding similarity), or blocking_conditions."
             )
@@ -348,10 +348,10 @@ def adjudicate_pairs(
     never reach the Python UDF (at 1000 same-key rows that is the
     difference between 0 and 500k model calls).
 
-    ``cascade={"proxy_threshold": p}``: a cheap logprob classification
-    labels each pair first; only pairs whose proxy confidence falls below
-    ``p`` escalate to the full completion (the reference runs the same
-    proxy/oracle cascade on resolve comparisons, cascade_runner.py)."""
+    ``cascade``: the proxy/oracle cascade of ``semantic.judge``, as on
+    filter (``{"proxy_threshold": p}``, or a calibrated ``guarantee``,
+    precision by default); the reference runs the same cascade on
+    resolve comparisons (cascade_runner.py)."""
     cols = [c[3:] for c in pairs.columns if c.startswith("_a_")]
     # spread the pairwise UDF across the executor pool (the blocking
     # join's output may sit in far fewer partitions)
@@ -367,65 +367,12 @@ def adjudicate_pairs(
         auto = joined.filter(cond).select("id_a", "id_b")
         joined = joined.filter(~cond)
 
-    out_schema = T.StructType(
-        [joined.schema[c] for c in ("id_a", "id_b")] + [T.StructField("is_match", T.BooleanType(), True)]
-    )
+    def render(r):
+        return pair_question(comparison_prompt, ("input1", "input2"),
+                             {c: r[f"_a_{c}"] for c in cols}, {c: r[f"_b_{c}"] for c in cols})
 
-    threshold = None
-    calibrated = None  # (guarantee, threshold) from BARGAIN-style calibration
-    if cascade and "guarantee" in cascade:
-        from .cascade import DEFAULT_GUARANTEE, CascadeSpec, calibrate
-
-        spec = CascadeSpec(
-            guarantee=cascade.get("guarantee") or DEFAULT_GUARANTEE["resolve"],
-            target=float(cascade.get("target", 0.9)),
-            delta=float(cascade.get("delta", 0.05)),
-            label_budget=int(cascade.get("label_budget", 400)),
-        )
-        # bounded calibration: O(label_budget) pairs fetched to the driver
-        sample = [r.asDict() for r in joined.limit(spec.label_budget).collect()]
-        scores, p_labels, o_labels = [], [], []
-        for r in sample:
-            in1 = {c: r[f"_a_{c}"] for c in cols}
-            in2 = {c: r[f"_b_{c}"] for c in cols}
-            prompt = render_prompt(comparison_prompt, {"input1": in1, "input2": in2})
-            label, prob = backend.classify_logprob(prompt, ["true", "false"], (in1, in2))
-            scores.append(prob if label == "true" else 1.0 - prob)
-            p_labels.append(label == "true")
-            ans = backend.complete(prompt, {"is_match": "bool"}, (in1, in2))
-            o_labels.append(bool(ans.get("is_match")))
-        result = calibrate(scores, p_labels, o_labels, spec)
-        calibrated = (spec.guarantee, result.threshold)
-    elif cascade:
-        threshold = float(cascade.get("proxy_threshold", 1.0))
-
-    def run(batches):
-        for pdf in batches:
-            def one(r):
-                in1 = {c: r[f"_a_{c}"] for c in cols}
-                in2 = {c: r[f"_b_{c}"] for c in cols}
-                prompt = render_prompt(comparison_prompt, {"input1": in1, "input2": in2})
-                if calibrated is not None:
-                    mode, t = calibrated
-                    label, prob = backend.classify_logprob(prompt, ["true", "false"], (in1, in2))
-                    p_true = prob if label == "true" else 1.0 - prob
-                    if mode == "precision" and p_true >= t:
-                        return {"id_a": r["id_a"], "id_b": r["id_b"], "is_match": True}
-                    if mode == "recall" and p_true < t:
-                        return {"id_a": r["id_a"], "id_b": r["id_b"], "is_match": False}
-                    if mode == "accuracy" and max(p_true, 1.0 - p_true) >= t:
-                        return {"id_a": r["id_a"], "id_b": r["id_b"], "is_match": p_true >= 0.5}
-                elif threshold is not None:
-                    label, prob = backend.classify_logprob(prompt, ["true", "false"], (in1, in2))
-                    if prob >= threshold:
-                        return {"id_a": r["id_a"], "id_b": r["id_b"], "is_match": label == "true"}
-                ans = backend.complete(prompt, {"is_match": "bool"}, (in1, in2))
-                return {"id_a": r["id_a"], "id_b": r["id_b"], "is_match": bool(ans.get("is_match"))}
-
-            res = run_concurrently(backend, one, pdf.to_dict("records"))
-            yield pd.DataFrame(res, columns=["id_a", "id_b", "is_match"])
-
-    adjudicated = joined.mapInPandas(run, schema=out_schema).filter(F.col("is_match")).select("id_a", "id_b")
+    adjudicated = judge(joined, render, {"is_match": "bool"}, backend,
+                        op="resolve", cascade=cascade).select("id_a", "id_b")
     return adjudicated.unionByName(auto) if auto is not None else adjudicated
 
 

@@ -15,13 +15,15 @@ Reference semantics:
 
 Spark realization: Arrow-batched ``mapInPandas`` for the row ops, and
 ``run_groups`` (hash exchange on the key, sort, ``mapInPandas``) for
-reduce. The backend call sits inside the UDF, so per-executor
-batching/caching lives in the backend. Model latency overlaps across
-partitions and, up to ``backend.max_concurrency``, inside each task:
-``run_concurrently`` over a batch's rows, ``run_groups`` over a task's
-groups. Gleaning/validation retries and the fold / fold+merge reduce
-strategies (semantic_reduce below, reference reduce.py:519-752,
-987-1053) are backend loops layered on the same UDF shape.
+reduce; ``judge`` is the one yes/no stage, through which filter keeps
+rows and resolve, equijoin and link_resolve keep pairs. The backend
+call sits inside the UDF, so per-executor batching/caching lives in the
+backend. Model latency overlaps across partitions and, up to
+``backend.max_concurrency``, inside each task: ``run_concurrently`` over
+a batch's rows, ``run_groups`` over a task's groups.
+Gleaning/validation retries and the fold / fold+merge reduce strategies
+(semantic_reduce below, reference reduce.py:519-752, 987-1053) are
+backend loops layered on the same UDF shape.
 """
 
 from __future__ import annotations
@@ -37,6 +39,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from ..backend import ModelBackend
 from ..session import widen_scan
 from ..types import schema_of, validate_output_types
+from .cascade import cascade_router
 
 _ALL = "_all"
 _env = jinja2.Environment(undefined=jinja2.StrictUndefined)
@@ -130,6 +133,60 @@ def run_concurrently(backend: ModelBackend, fn, items: list) -> list:
 
     with ThreadPoolExecutor(max_workers=min(conc, len(items))) as ex:
         return list(ex.map(fn, items))
+
+
+def model_says(backend: ModelBackend, output_schema: dict, prompt: str, context,
+               agent=None) -> bool:
+    """The model's answer to a yes/no question: ``output_schema`` has
+    one boolean key, and ``agent`` runs a bounded tool loop in place of
+    one completion."""
+    (key,) = output_schema
+    if agent is not None:
+        from ..agents import run_agent  # noqa: PLC0415
+
+        return bool(run_agent(backend, agent, prompt, output_schema, context).get(key))
+    return bool(backend.complete(prompt, output_schema, context).get(key))
+
+
+def pair_question(template: str, names: tuple[str, str], a: dict, b: dict) -> tuple[str, tuple]:
+    """Prompt and backend context for a comparison of two rows: the
+    template sees them as ``names`` (``input1`` / ``input2`` for
+    resolve, ``left`` / ``right`` for equijoin), the backend as the
+    2-tuple ``(a, b)``."""
+    return render_prompt(template, {names[0]: a, names[1]: b}), (a, b)
+
+
+def judge(df: DataFrame, render, output_schema: dict, backend: ModelBackend, *,
+          op: str, cascade: dict | None = None, agent=None) -> DataFrame:
+    """Keep the rows of ``df`` the model answers true, unchanged: the
+    one yes/no stage behind filter (rows), resolve and equijoin (pairs)
+    and link_resolve (links). ``render(row)`` gives a row's prompt and
+    backend context; ``output_schema`` is the one boolean key asked.
+
+    One ``mapInPandas`` over ``df`` as the caller partitioned it (a
+    narrow scan widened by ``widen_scan``), overlapping up to
+    ``backend.max_concurrency`` rows of a batch (``run_concurrently``).
+    Under a ``cascade`` block the cheap proxy may answer first
+    (``cascade.cascade_router``; ``op`` names the default guarantee).
+    The router calibrates on ``df`` before the widening: a limit over
+    a scan reads its first rows, where one over the round-robin
+    repartition would shuffle the whole input first."""
+    def oracle(prompt, context):
+        return model_says(backend, output_schema, prompt, context, agent)
+
+    route = cascade_router(df, render, oracle, backend, cascade, op)
+
+    def ask(row):
+        prompt, context = render(row)
+        verdict = route(prompt, context) if route else None
+        return oracle(prompt, context) if verdict is None else verdict
+
+    def run(batches):
+        for pdf in batches:
+            keep = run_concurrently(backend, ask, pdf.to_dict("records"))
+            yield pdf[pd.Series(keep, index=pdf.index, dtype=bool)] if len(pdf) else pdf
+
+    return widen_scan(df).mapInPandas(run, schema=df.schema)
 
 
 def _group_key(v):
@@ -634,8 +691,9 @@ def semantic_filter(
     timeout: float | None = None,
     litellm_completion_kwargs: dict | None = None,
 ) -> DataFrame:
-    """LLM boolean predicate. Two cascade modes (filter.py:161-224 +
-    cascade_runner.py):
+    """LLM boolean predicate: the rows ``judge`` keeps. Two cascade
+    modes (filter.py:161-224 + cascade_runner.py), both through
+    ``cascade.cascade_router``:
 
     - ``cascade={"proxy_threshold": p}``: fixed threshold — rows whose
       proxy confidence clears ``p`` take the proxy label, the rest
@@ -656,66 +714,11 @@ def semantic_filter(
     keys = [k for k in output_schema]
     if len(keys) != 1 or str(output_schema[keys[0]]).lower() not in ("bool", "boolean"):
         raise ValueError("filter output schema must be exactly one boolean key (filter.py:53-71)")
-    decision_key = keys[0]
-    names = df.schema.fieldNames()
 
-    threshold = None
-    calibrated = None  # (guarantee, threshold)
-    if cascade and "guarantee" in cascade:
-        from .cascade import CascadeSpec, calibrate
+    def render(row):
+        return render_prompt(prompt, {"input": row}), row
 
-        spec = CascadeSpec(
-            guarantee=cascade["guarantee"],
-            target=float(cascade.get("target", 0.9)),
-            delta=float(cascade.get("delta", 0.05)),
-            label_budget=int(cascade.get("label_budget", 400)),
-        )
-        # bounded calibration set: limit() keeps the driver fetch at
-        # O(label_budget) rows no matter the table size
-        sample = [r.asDict() for r in df.limit(spec.label_budget).collect()]
-        scores, p_labels, o_labels = [], [], []
-        for row in sample:
-            rendered = render_prompt(prompt, {"input": row})
-            label, prob = backend.classify_logprob(rendered, ["true", "false"], row)
-            p_true = prob if label == "true" else 1.0 - prob
-            scores.append(p_true)
-            p_labels.append(label == "true")
-            o_labels.append(bool(backend.complete(rendered, output_schema, row).get(decision_key)))
-        result = calibrate(scores, p_labels, o_labels, spec)
-        calibrated = (spec.guarantee, result.threshold)
-    elif cascade:
-        threshold = float(cascade.get("proxy_threshold", 1.0))
-
-    def run(batches):
-        for pdf in batches:
-            def one(row):
-                rendered = render_prompt(prompt, {"input": row})
-                if calibrated is not None:
-                    mode, t = calibrated
-                    label, prob = backend.classify_logprob(rendered, ["true", "false"], row)
-                    p_true = prob if label == "true" else 1.0 - prob
-                    if mode == "recall" and p_true < t:
-                        return False  # proxy-rejected; bounded FN rate
-                    if mode == "precision" and p_true >= t:
-                        return True  # proxy-accepted; bounded FP rate
-                    if mode == "accuracy" and max(p_true, 1.0 - p_true) >= t:
-                        return p_true >= 0.5
-                elif threshold is not None:
-                    label, prob = backend.classify_logprob(rendered, ["true", "false"], row)
-                    if prob >= threshold:
-                        return label == "true"
-                if agent is not None:
-                    from ..agents import run_agent
-
-                    res = run_agent(backend, agent, rendered, output_schema, row)
-                else:
-                    res = backend.complete(rendered, output_schema, row)
-                return bool(res.get(decision_key))
-
-            keep = run_concurrently(backend, one, pdf.to_dict("records"))
-            yield pdf[pd.Series(keep, index=pdf.index)] if len(pdf) else pdf
-
-    out = widen_scan(df).mapInPandas(run, schema=df.schema).select(*names)
+    out = judge(df, render, output_schema, backend, op="filter", cascade=cascade, agent=agent)
     return out.limit(limit) if limit is not None else out
 
 

@@ -214,3 +214,45 @@ def test_synthesize_blocking_directive_applies():
     m = lift([{"type": "map", "name": "m", "prompt": "p",
                "output": {"schema": {"s": "str"}}}])
     assert not d.applies(m, 0, stats, None)
+
+
+@pytest.mark.parametrize("sampler", ["threshold", "threshold_pairs", "synthesis", "synthesis_pairs"])
+def test_blocking_samplers_label_with_calls_in_flight(spark, sampler):
+    """All four blocking samplers label their sample through one helper
+    that overlaps up to max_concurrency comparison calls (each used to
+    ask them one at a time), and they answer as with a serial backend."""
+    import threading
+    import time
+
+    from docetl_spark.operators import blocking
+
+    class Peak(FakeBackend):
+        def __init__(self, conc):
+            super().__init__(rules=_company_match_backend().rules)
+            self.max_concurrency, self.live, self.peak = conc, 0, 0
+            self.lock = threading.Lock()
+
+        def complete(self, prompt, output_schema, context):
+            with self.lock:
+                self.live += 1
+                self.peak = max(self.peak, self.live)
+            time.sleep(0.002)
+            with self.lock:
+                self.live -= 1
+            return super().complete(prompt, output_schema, context)
+
+    df = spark.createDataFrame(PEOPLE)
+    pair_cmp = "{{ left.name }} at {{ left.company }} vs {{ right.name }} at {{ right.company }}"
+    run = {
+        "threshold": lambda be: blocking.auto_blocking_threshold(
+            df, be, id_col="pid", comparison_prompt=CMP, compare_cols=["name", "company"]),
+        "threshold_pairs": lambda be: blocking.auto_blocking_threshold_pairs(
+            df, df, be, comparison_prompt=pair_cmp, left_keys=["company"], right_keys=["company"]),
+        "synthesis": lambda be: blocking.synthesize_blocking(
+            df, be, id_col="pid", comparison_prompt=CMP, compare_cols=["name", "company"]),
+        "synthesis_pairs": lambda be: blocking.synthesize_blocking_pairs(
+            df, df, be, comparison_prompt=pair_cmp, left_keys=["company"], right_keys=["company"]),
+    }[sampler]
+    serial, overlapped = Peak(1), Peak(4)
+    assert run(overlapped) == run(serial)
+    assert (serial.peak, overlapped.peak > 1) == (1, True)

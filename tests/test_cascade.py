@@ -129,3 +129,105 @@ def test_filter_calibrated_recall_end_to_end(spark):
     assert all(i in kept for i in range(60))          # gold keepme kept
     assert all(200 + i in kept for i in range(30))    # uncertain golds kept
     assert all(100 + i not in kept for i in range(60))  # junk dropped
+
+
+# ------------------------------------------------- one cascade, three ops
+def _cascade_backend(sc):
+    """Items k = 0..11, asked about as a filter row or as the left row
+    of a pair. Proxy: k 0-3 ("true", 0.95), k 4-7 ("false", 0.6),
+    k 8-11 ("false", 0.95). Oracle: true for k 0, 1, 2 and 4. Proxy and
+    oracle calls are counted in accumulators."""
+    from docetl_spark import FakeBackend
+
+    class Items(FakeBackend):
+        @staticmethod
+        def _k(context):
+            return int((context[0] if isinstance(context, tuple) else context)["k"])
+
+        def classify_logprob(self, prompt, labels, context):
+            self.proxy_calls.add(1)
+            k = self._k(context)
+            return ("true", 0.95) if k < 4 else ("false", 0.6) if k < 8 else ("false", 0.95)
+
+        def complete(self, prompt, output_schema, context):
+            self.oracle_calls.add(1)
+            return {next(iter(output_schema)): self._k(context) in (0, 1, 2, 4)}
+
+    be = Items()
+    be.proxy_calls, be.oracle_calls = sc.accumulator(0), sc.accumulator(0)
+    return be
+
+
+def _kept_by_filter(spark, be, cascade):
+    from docetl_spark.operators.semantic import semantic_filter
+
+    df = spark.createDataFrame([(k,) for k in range(12)], "k long")
+    out = semantic_filter(df, "keep? {{ input.k }}", {"keep": "bool"}, be, cascade=cascade)
+    return {r["k"] for r in out.collect()}
+
+
+def _kept_by_resolve(spark, be, cascade):
+    from docetl_spark.operators.resolve import adjudicate_pairs, candidate_pairs
+
+    df = spark.createDataFrame([(p, p // 2) for p in range(24)], "pid long, k long")
+    pairs = candidate_pairs(df, "pid", blocking_conditions=["a.k = b.k"])
+    out = adjudicate_pairs(pairs, "same? {{ input1.k }} {{ input2.k }}", be, cascade=cascade)
+    return {r["id_a"] // 2 for r in out.collect()}
+
+
+def _kept_by_equijoin(spark, be, cascade):
+    from docetl_spark.operators.equijoin import equijoin
+
+    side = spark.createDataFrame([(k,) for k in range(12)], "k long")
+    out = equijoin(side, side, be, comparison_prompt="match? {{ left.k }} {{ right.k }}",
+                   left_keys=["k"], right_keys=["k"],
+                   blocking_conditions=["left.k = right.k"], cascade=cascade)
+    return {r["k_left"] for r in out.collect()}
+
+
+@pytest.mark.parametrize("cascade,kept,oracle_calls,proxy_calls", [
+    # fixed: k 0-3 and 8-11 clear 0.9 and take the proxy label (k 3 a
+    # false positive); k 4-7 escalate
+    ({"proxy_threshold": 0.9}, {0, 1, 2, 3, 4}, 4, 12),
+    # calibration labels all 12 items (12 oracle + 12 proxy calls first).
+    # recall: t = 0.4, so k 8-11 (p_true 0.05) are proxy-rejected
+    ({"guarantee": "recall", "target": 0.5}, {0, 1, 2, 4}, 12 + 8, 12 + 12),
+    # precision: t = 0.95, so k 0-3 are proxy-accepted, k 4-11 escalate
+    ({"guarantee": "precision", "target": 0.25}, {0, 1, 2, 3, 4}, 12 + 8, 12 + 12),
+    # accuracy: t = 0.6, every item is confident enough for its proxy label
+    ({"guarantee": "accuracy", "target": 0.55}, {0, 1, 2, 3}, 12, 12 + 12),
+], ids=["proxy_threshold", "recall", "precision", "accuracy"])
+def test_one_cascade_routes_filter_resolve_and_equijoin_alike(
+        spark, cascade, kept, oracle_calls, proxy_calls):
+    """Filter rows, resolve pairs and equijoin pairs go through the same
+    router: the same items are proxy-served or escalated, and the same
+    items are kept, under the fixed threshold and each guarantee."""
+    if "guarantee" in cascade:
+        cascade = {**cascade, "delta": 0.5, "label_budget": 20}
+    for kept_by in (_kept_by_filter, _kept_by_resolve, _kept_by_equijoin):
+        be = _cascade_backend(spark.sparkContext)
+        assert kept_by(spark, be, cascade) == kept, kept_by.__name__
+        assert (be.oracle_calls.value, be.proxy_calls.value) == (oracle_calls, proxy_calls), kept_by.__name__
+
+
+def test_equijoin_calibrates_a_guarantee(spark):
+    """A proxy certain of every pair (logprob 0, probability 1.0) while
+    the oracle rejects them all: calibrating for precision finds no
+    threshold that holds, so every pair escalates and none matches. (A
+    guarantee used to become proxy_threshold 1.0, which let the proxy
+    accept every pair unchecked.)"""
+    from docetl_spark import FakeBackend
+    from docetl_spark.operators.equijoin import equijoin
+
+    class Overconfident(FakeBackend):
+        def classify_logprob(self, prompt, labels, context):
+            return "true", 1.0
+
+        def complete(self, prompt, output_schema, context):
+            return {"is_match": False}
+
+    side = spark.createDataFrame([(k,) for k in range(12)], "k long")
+    out = equijoin(side, side, Overconfident(), comparison_prompt="{{ left.k }} {{ right.k }}",
+                   left_keys=["k"], right_keys=["k"], blocking_conditions=["left.k = right.k"],
+                   cascade={"guarantee": "precision", "target": 0.9})
+    assert out.collect() == []

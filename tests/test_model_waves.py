@@ -313,3 +313,31 @@ def test_doc_chunking_topk_plan_keeps_the_documents_columns(spark):
     assert sorted((r["g"], r["text"]) for r in rows) == [
         ("a", "one two data three four five six"), ("b", "four five data")]
     assert all(r["s"] for r in rows)
+
+
+def test_link_resolve_comparisons_overlap(spark, tmp_path):
+    """link_resolve's comparisons go through the judge, so a batch's
+    calls overlap up to max_concurrency (they ran one after another)."""
+    from docetl_spark.operators.link_resolve import link_resolve
+
+    log = str(tmp_path / "in_flight")
+
+    class Peak(FakeBackend):
+        max_concurrency = 4
+
+        def complete(self, prompt, output_schema, context):
+            live = self.__dict__.setdefault("_live", [])
+            live.append(1)
+            with open(log, "a") as f:
+                f.write(f"{len(live)}\n")
+            time.sleep(0.05)
+            live.pop()
+            return super().complete(prompt, output_schema, context)
+
+    df = spark.createDataFrame(
+        [("apple", ["APPLE", "pear"]), ("banana", ["Banana!"]), ("cherry", ["kiwi"])],
+        "name string, links array<string>",
+    ).coalesce(1)
+    out = {r["name"]: r["links"] for r in link_resolve(df, Peak(), id_key="name", link_key="links").collect()}
+    assert out == {"apple": ["apple", "pear"], "banana": ["banana"], "cherry": ["kiwi"]}
+    assert max(int(n) for n in open(log).read().split()) > 1
